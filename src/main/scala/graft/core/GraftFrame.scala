@@ -17,8 +17,17 @@ final case class CategoryInfo(categories: Seq[String], ordered: Boolean)
   * metadata. All preprocessing operators are `GraftFrame => GraftFrame`, so
   * the whole chain stays one Catalyst plan (no materialization between
   * stages, unlike the reference's eager task boundaries — SURVEY.md §3).
+  *
+  * A stage that has profiled its frame attaches the [[Profile]] so later
+  * stages read their statistics from it instead of running a job.
   */
-final case class GraftFrame(df: DataFrame, cats: Map[String, CategoryInfo] = Map.empty) {
+final case class GraftFrame(
+    df: DataFrame,
+    cats: Map[String, CategoryInfo] = Map.empty,
+    attached: Option[Profile] = None) {
+
+  /** The attached profile, only while it describes exactly this `df`. */
+  def profile: Option[Profile] = attached.filter(_.df eq df)
 
   def mapDf(f: DataFrame => DataFrame): GraftFrame = copy(df = f(df))
 

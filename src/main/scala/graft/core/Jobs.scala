@@ -52,9 +52,9 @@ object Jobs {
     * action: AQE materializes every exchange as its own query-stage JOB,
     * which doubles per-action scheduling overhead on tiny stat plans that
     * have nothing to re-optimize — one exchange, a handful of rows out.
-    * Measured 0.25–0.3 s off the e2e pipeline's four stat jobs at sf0.1
-    * ([[graft.tools.AqeProbe]]); corpus-scale queries keep AQE, where it
-    * earns its stages.
+    * The traced benchmark run (`python3 perfbench/run.py --workload
+    * prep_pipeline --trace 1`) reports each call's jobs and self time;
+    * corpus-scale queries keep AQE, where it earns its stages.
     *
     * The plan is re-bound onto a dedicated child session (AQE off) via a
     * per-call global temp view — all public API, and the caller's session

@@ -18,8 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Where the reference materializes the full frame between every Prefect
   * task, every stage here is a lazy DataFrame transform: the whole
-  * preprocessing chain collapses into one Catalyst plan with a handful of
-  * aggregate jobs for data-dependent statistics (SURVEY.md §3).
+  * preprocessing chain collapses into one Catalyst plan. Its data-dependent
+  * statistics come from one profile job in `CleanData` (read again by
+  * `EncodeData` and `WrangleNa.fi`), plus one job each in
+  * `GelmanStandardize` and `RunModel` (SURVEY.md §3).
   */
 final case class PipelineConfig(
     url: String,

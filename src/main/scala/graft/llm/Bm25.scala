@@ -531,7 +531,10 @@ object Bm25 {
           .partitionBy("tb", "__term")).cast("double"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      postings.count() // materialize the pin; fires the stats observation
+      // materialize the pin; fires the stats observation. A batch with no
+      // postings (no rows, or only null texts) adds no generation: an
+      // empty batch's observation may carry no stats at all.
+      if (postings.count() == 0L) return
       val m = observedStats(obs)
       val statsRow = Seq((m("__n").asInstanceOf[Double], Option(m("__dlsum")).map(_.asInstanceOf[Double])))
         .toDF("__n", "__dlsum")

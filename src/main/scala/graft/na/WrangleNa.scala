@@ -21,8 +21,12 @@ import org.apache.spark.sql.types._
   *  - `gm` grand-model: `fii` plus feature × indicator interaction columns
   *    (tasks.py:423–441); see [[Interactions]].
   *
-  * Scale design: all fill statistics for every column come from ONE
-  * aggregate job (means + exact percentiles + null counts); modes come from
+  * Scale design: `fi` reads its fill statistics (null counts, means,
+  * exact medians, modes) from the [[graft.core.Profile]] that `CleanData`
+  * attaches and `EncodeData` carries over, so after those stages it runs
+  * no job at all. Whatever the profile lacks (no profile, a column with
+  * too many distinct values for exact counts, a derived column) comes from
+  * at most ONE aggregate job (means + exact percentiles + null counts) and
   * one melted groupBy job over only the mode-typed columns. The fill itself
   * is a pure projection (`coalesce`), so the imputation composes lazily with
   * the surrounding plan. Exact `percentile` is used here (oracle mode);
@@ -44,16 +48,22 @@ object WrangleNa {
   def cc(gf: GraftFrame, cols: Seq[String] = Nil): GraftFrame =
     gf.mapDf(df => if (cols.isEmpty) df.na.drop() else df.na.drop(cols))
 
-  /** Computed fill values for `fi`: one agg job + one melted mode job.
-    * `mode` flips the integer-median statistic between exact `percentile`
-    * (oracle runs) and `percentile_approx` (the 100 TB path,
-    * SURVEY.md §7.4.5).
+  /** Computed fill values for `fi`, read from the frame's attached
+    * [[graft.core.Profile]] where it has them (null counts; means as
+    * sum / count; exact medians and modes from exact value counts). Only
+    * what it lacks is aggregated: one agg job for null counts, means and
+    * medians, one melted job for modes. `mode` flips the integer-median
+    * statistic between exact `percentile` (oracle runs) and
+    * `percentile_approx` (the 100 TB path, SURVEY.md §7.4.5), which the
+    * profile never answers.
     */
   private def fillValues(
       gf: GraftFrame,
       mode: graft.core.ScaleMode): (Map[String, Any], Boolean) = {
     val df     = gf.df
     val fields = df.schema.fields.toIndexedSeq
+    val prof   = gf.profile
+    def known(c: String) = prof.flatMap(_.cols.get(c))
 
     val floatCols = fields.filter(f => isFloat(f.dataType) && !gf.cats.contains(f.name)).map(_.name)
     val intCols   = fields.filter(f => isIntegral(f.dataType) && !gf.cats.contains(f.name)).map(_.name)
@@ -61,33 +71,55 @@ object WrangleNa {
       .filter(f => f.dataType == BooleanType || gf.cats.contains(f.name))
       .map(_.name)
 
-    val statAggs: Seq[Column] =
-      fields.map(f => sum(Cols.q(f.name).isNull.cast(LongType)).as(s"nulls_${f.name}")) ++
-        floatCols.map(c => avg(Cols.q(c)).as(s"mean_$c")) ++
-        intCols.map(c => graft.core.Stats.percentile(Cols.q(c), 0.5, mode).as(s"med_$c"))
+    // what the profile answers: Some(None) is "known: no value" (all null)
+    val knownMeans: Map[String, Option[Any]] = floatCols.flatMap { c =>
+      known(c).collect {
+        case cp if cp.nonNull == 0 => c -> None
+        case cp if cp.sum.isDefined => c -> Some(cp.sum.get / cp.nonNull.toDouble)
+      }
+    }.toMap
+    val knownMedians: Map[String, Option[Any]] =
+      if (mode != graft.core.ScaleMode.Exact) Map.empty
+      else intCols.flatMap(c => prof.flatMap(_.exact(c)).map(m => c -> median(m))).toMap
 
-    val row      = graft.core.Jobs.collectFast(df.agg(statAggs.head, statAggs.tail: _*))(0)
-    val anyNulls = fields.exists(f => row.getAs[Long](s"nulls_${f.name}") > 0)
-    if (!anyNulls) return (Map.empty, false)
-
-    val means = floatCols.flatMap { c =>
-      Option(row.getAs[Any](s"mean_$c")).map(v => c -> v)
+    val lacking: Seq[(String, Column)] =
+      fields.filterNot(f => known(f.name).isDefined)
+        .map(f => s"nulls_${f.name}" -> sum(Cols.q(f.name).isNull.cast(LongType))) ++
+        floatCols.filterNot(knownMeans.contains).map(c => s"mean_$c" -> avg(Cols.q(c))) ++
+        intCols.filterNot(knownMedians.contains)
+          .map(c => s"med_$c" -> graft.core.Stats.percentile(Cols.q(c), 0.5, mode))
+    val row = Option.when(lacking.nonEmpty) {
+      val aggs = lacking.map { case (name, a) => a.as(name) }
+      graft.core.Jobs.collectFast(df.agg(aggs.head, aggs.tail: _*))(0)
     }
-    val medians = intCols.flatMap { c =>
-      Option(row.getAs[Any](s"med_$c")).map(v => c -> v)
-    }
+    def aggregated(name: String): Option[Any] = row.flatMap(r => Option(r.getAs[Any](name)))
 
-    // Deterministic mode per mode-typed column: melt to (col, value) then a
-    // single groupBy + per-column argmax with the count-desc, value-asc
-    // tie-break (SURVEY.md §2 A12). Only columns that actually have nulls
-    // need a mode — skipping the rest saves the melt job entirely when the
-    // categorical columns are fully observed.
-    val needMode = modeCols.filter(c => row.getAs[Long](s"nulls_$c") > 0)
-    val modes: Seq[(String, Any)] =
-      if (needMode.isEmpty) Nil
+    val nulls = fields.map { f =>
+      val c = f.name
+      c -> known(c).map(prof.get.rows - _.nonNull).getOrElse(aggregated(s"nulls_$c").fold(0L)(_.asInstanceOf[Long]))
+    }.toMap
+    if (!nulls.values.exists(_ > 0)) return (Map.empty, false)
+
+    val means   = floatCols.flatMap(c => knownMeans.getOrElse(c, aggregated(s"mean_$c")).map(c -> _))
+    val medians = intCols.flatMap(c => knownMedians.getOrElse(c, aggregated(s"med_$c")).map(c -> _))
+
+    // Deterministic mode per mode-typed column, count-desc then value-asc
+    // (SURVEY.md §2 A12). Only columns that actually have nulls need a
+    // mode. String and boolean columns with exact counts read them from
+    // the profile; the rest melt to (col, value) for one groupBy + per-
+    // column argmax — skipped entirely when no such column has nulls.
+    val needMode = modeCols.filter(c => nulls(c) > 0)
+    val fromProfile = needMode
+      .filter(c => df.schema(c).dataType == StringType || df.schema(c).dataType == BooleanType)
+      .flatMap(c => prof.flatMap(_.exact(c)).map(m => c -> m.map { case (v, n) => String.valueOf(v) -> n }))
+      .toMap
+    val profileModes = modes(df, fromProfile)
+    val melt = needMode.filterNot(fromProfile.contains)
+    val meltedModes: Seq[(String, Any)] =
+      if (melt.isEmpty) Nil
       else {
         val melted = df
-          .select(explode(array(needMode.map(c =>
+          .select(explode(array(melt.map(c =>
             struct(lit(c).as("c"), Cols.q(c).cast(StringType).as("v"))): _*)).as("kv"))
           .select(col("kv.c").as("c"), col("kv.v").as("v"))
           .where(col("v").isNotNull)
@@ -111,7 +143,51 @@ object WrangleNa {
           .map(r => r.getString(0) -> (r.getString(1): Any))
           .toIndexedSeq
       }
-    ((means ++ medians ++ modes).toMap, true)
+    ((means ++ medians ++ profileModes ++ meltedModes).toMap, true)
+  }
+
+  /** Spark's exact `percentile(c, 0.5)` over a value → count map: values
+    * in order, position (n − 1) · 0.5, linear interpolation between the
+    * values at the floor and ceiling ranks. None for an empty map.
+    */
+  private def median(counts: Map[Any, Long]): Option[Any] =
+    if (counts.isEmpty) None
+    else {
+      val sorted   = counts.toSeq.map { case (v, n) => (v.asInstanceOf[Number].longValue(), n) }.sortBy(_._1)
+      val position = (counts.values.sum - 1) * 0.5
+      val (lower, higher) = (math.floor(position).toLong, math.ceil(position).toLong)
+      val cumulative = sorted.scanLeft(0L)(_ + _._2).tail
+      def at(rank: Long): Double = sorted(cumulative.indexWhere(_ > rank))._1.toDouble
+      val (lo, hi) = (at(lower), at(higher))
+      Some(if (lower == higher || lo == hi) lo else (higher - position) * lo + (position - lower) * hi)
+    }
+
+  /** The mode of each column's stringified value counts, ties broken as
+    * the melted path's window orders them: count desc, then
+    * `try_cast(v AS DOUBLE)` asc with nulls last (Spark's double order),
+    * then `v` asc (Spark's binary string order). Values are parsed only
+    * for columns whose top count is tied, over a local relation (no job).
+    */
+  private def modes(df: DataFrame, counts: Map[String, Map[String, Long]]): Seq[(String, Any)] = {
+    val tied = counts.toSeq.collect { case (c, m) if m.nonEmpty =>
+      val top = m.values.max
+      c -> m.collect { case (v, n) if n == top => v }.toSeq
+    }
+    val values = tied.collect { case (_, vs) if vs.size > 1 => vs }.flatten.distinct
+    val parsed = values.zip(graft.core.Profile.evalLocal(df, StringType, values)(v => Seq(v.try_cast(DoubleType))))
+      .map { case (v, r) => v -> Option(r.get(0)).map(_.asInstanceOf[Double]) }.toMap
+    val order: Ordering[String] = (a, b) => {
+      val byNumber = (parsed.get(a).flatten, parsed.get(b).flatten) match {
+        case (Some(x), Some(y)) => org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(x, y)
+        case (Some(_), None)    => -1
+        case (None, Some(_))    => 1
+        case (None, None)       => 0
+      }
+      if (byNumber != 0) byNumber
+      else org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    }
+    tied.map { case (c, vs) => c -> (vs.min(order): Any) }
   }
 
   /** Fill-in imputation. Integer columns whose median is fractional are

@@ -141,24 +141,26 @@ class FunctionsSpec extends AnyFunSuite {
     assert(s.contains("9,-0.000000\n"), s)
   }
 
-  test("BoundedCollectSet: exact below cap, saturates at cap, skips nulls") {
-    import graft.functions.BoundedCollectSet
-    // exact distinct set below the cap — across many partitions so merge runs
+  test("BoundedCounts: exact counts below cap, saturates at cap, skips nulls") {
+    import graft.functions.BoundedCounts
+    // exact value → count map below the cap — across many partitions so merge runs
     val small = (1 to 1000).map(i => Some(s"v${i % 4}")).toDF("s").repartition(8)
-    val got = small.agg(BoundedCollectSet(col("s"), 10).as("set")).collect()(0)
-      .getSeq[String](0)
-    assert(got.sorted == Seq("v0", "v1", "v2", "v3"))
-    // saturation: 200 distinct values, cap 11 → result length exactly 11
+    val got = small.agg(BoundedCounts(col("s"), 10).as("m")).collect()(0)
+      .getMap[String, Long](0)
+    assert(got == Map("v0" -> 250L, "v1" -> 250L, "v2" -> 250L, "v3" -> 250L))
+    // saturation: 200 distinct values, cap 11 → result size exactly 11
     val big = (1 to 200).map(i => s"id_$i").toDF("s").repartition(8)
-    val sat = big.agg(BoundedCollectSet(col("s"), 11).as("set")).collect()(0)
-      .getSeq[String](0)
-    assert(sat.length == 11)
-    assert(sat.distinct.length == 11) // buffered values are real distinct values
-    // nulls are skipped like collect_set; numeric types round-trip
-    val nums = Seq(Some(1.5), None, Some(2.5), Some(1.5)).toDF("d").repartition(4)
-    val ns = nums.agg(BoundedCollectSet(col("d"), 5).as("set")).collect()(0)
-      .getSeq[Double](0)
-    assert(ns.sorted == Seq(1.5, 2.5))
+    val sat = big.agg(BoundedCounts(col("s"), 11).as("m")).collect()(0)
+      .getMap[String, Long](0)
+    assert(sat.size == 11)
+    assert(sat.keySet.subsetOf((1 to 200).map(i => s"id_$i").toSet)) // buffered keys are real values
+    // nulls are skipped; numeric keys round-trip; -0.0 counts as 0.0 and
+    // every NaN is one key, as in a groupBy
+    val nums = Seq(Some(1.5), None, Some(2.5), Some(1.5), Some(-0.0), Some(0.0), Some(Double.NaN),
+      Some(Double.NaN)).toDF("d").repartition(4)
+    val ns = nums.agg(BoundedCounts(col("d"), 10).as("m")).collect()(0)
+      .getMap[Double, Long](0).toSeq.map { case (k, n) => (k.toString, n) }.sorted
+    assert(ns == Seq("0.0" -> 2L, "1.5" -> 2L, "2.5" -> 1L, "NaN" -> 2L))
   }
 
   test("Stats mode switch dispatches exact vs approx") {

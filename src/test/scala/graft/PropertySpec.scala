@@ -1,9 +1,13 @@
 package graft
 
-import graft.core.{GraftFrame, Sanitize}
+import graft.clean.CleanData
+import graft.core.{CategoryInfo, Cols, GraftFrame, Sanitize}
+import graft.encode.EncodeData
 import graft.na.WrangleNa
 import graft.transform.GelmanStandardize
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
@@ -89,8 +93,8 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("BoundedCollectSet equals collect_set whenever the cap is not hit (random data)") {
-    import org.apache.spark.sql.functions.{col, collect_set}
+  test("BoundedCounts equals a groupBy count whenever the cap is not hit (random data)") {
+    import org.apache.spark.sql.functions.col
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 5) {
       val distinct = 1 + rnd.nextInt(40)
@@ -99,12 +103,10 @@ class PropertySpec extends AnyFunSuite {
         .map(_ => s"v${rnd.nextInt(distinct)}")
         .toDF("s")
         .repartition(1 + rnd.nextInt(8))
-      val r = df.agg(
-        graft.functions.BoundedCollectSet(col("s"), distinct + 1).as("bounded"),
-        collect_set(col("s")).as("exact")).collect()(0)
-      assert(
-        r.getSeq[String](0).sorted == r.getSeq[String](1).sorted,
-        s"trial $trial: bounded set diverged below the cap")
+      val bounded = df.agg(graft.functions.BoundedCounts(col("s"), distinct + 1)).collect()(0)
+        .getMap[String, Long](0).toMap
+      val exact = df.groupBy("s").count().as[(String, Long)].collect().toMap
+      assert(bounded == exact, s"trial $trial: bounded counts diverged below the cap")
     }
   }
 
@@ -144,6 +146,176 @@ class PropertySpec extends AnyFunSuite {
     val overCap = (1 to 100).map(i => s"v${i % 11}").toDF("s") // 11 distinct
     val gated   = graft.clean.CleanData.factorWrangler(GraftFrame(overCap), maxCategories = 10)
     assert(!gated.cats.contains("s"))
+  }
+
+  /** Random frames for the clean → encode → fi parity checks: every column
+    * draws from a pool of edge values (numeric strings that collapse when
+    * parsed, mixed-case booleans, ±0.0, NaN, ±Infinity, integral doubles
+    * above 2^53, an NA sentinel, all-null columns); `wide` adds two string
+    * columns above the default maxCategories.
+    */
+  private val framePools: Seq[(String, DataType, IndexedSeq[Any])] = Seq(
+    ("Num Str", StringType, IndexedSeq("1", "1.0", "01", "2", "-0", "0", " 3", "1e2", null)),
+    ("Flag", StringType, IndexedSeq("TRUE", "false", "True", "FALSE", null)),
+    ("Grade", StringType, IndexedSeq("a", "b", "c", "d", "NA", null)),
+    ("Mixed", StringType, IndexedSeq("10", "9", "x", "b", null)),
+    ("Real", DoubleType, IndexedSeq(0.0, -0.0, 1.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 2.5, -3.5, -999.0, null)),
+    ("Whole", DoubleType, IndexedSeq(1.0, 2.0, -3.0, 4.0, -0.0, -999.0, null)),
+    ("Big", DoubleType, IndexedSeq(9.007199254740994e15, 1.0, null)),
+    ("Dummy", DoubleType, IndexedSeq(0.0, 1.0, null)),
+    ("Count", LongType, IndexedSeq(1L, 2L, 3L, -5L, 7L, null)),
+    ("Empty S", StringType, IndexedSeq(null)),
+    ("Empty D", DoubleType, IndexedSeq(null)))
+
+  private def randomFrame(seed: Long, rows: Int, wide: Boolean): DataFrame = {
+    val rnd  = new scala.util.Random(seed)
+    val data = (0 until rows).map { i =>
+      val drawn = framePools.map { case (_, _, pool) => pool(rnd.nextInt(pool.size)) }
+      Row.fromSeq(if (wide) drawn ++ Seq(i.toString, s"t$i") else drawn)
+    }
+    val fields = framePools.map { case (n, dt, _) => StructField(n, dt) } ++
+      (if (wide) Seq(StructField("Id Str", StringType), StructField("Text", StringType)) else Nil)
+    spark.createDataFrame(java.util.Arrays.asList(data: _*), StructType(fields))
+  }
+
+  /** CleanData as it ran before the profile: one row-level aggregate per
+    * decision (parse counts, fractional flags, each column's distinct set).
+    */
+  private def cleanOracle(
+      df: DataFrame,
+      naValues: Seq[Any],
+      orderedCols: Seq[String],
+      categories: Map[String, Seq[String]]): GraftFrame = {
+    def typed(d: DataFrame, dt: DataType) = d.schema.fields.collect { case f if f.dataType == dt => f.name }.toSeq
+    val nulled = CleanData.replaceNa(df, naValues)
+    val strs   = typed(nulled, StringType)
+    val checks = nulled.agg(count(lit(1)), strs.flatMap(c => Seq(
+      count(Cols.q(c)),
+      count(Cols.q(c).try_cast(DoubleType)),
+      count(when(lower(Cols.q(c)).isin("true", "false"), lit(1))))): _*).head()
+    val parsed = nulled.select(nulled.columns.toSeq.map { c =>
+      val i = strs.indexOf(c)
+      val cnt = if (i < 0) 0L else checks.getLong(1 + 3 * i)
+      if (cnt > 0 && checks.getLong(2 + 3 * i) == cnt) Cols.q(c).cast(DoubleType).as(c)
+      else if (cnt > 0 && checks.getLong(3 + 3 * i) == cnt) Cols.q(c).cast(BooleanType).as(c)
+      else Cols.q(c)
+    }: _*)
+    val dbls = typed(parsed, DoubleType)
+    val fracs = parsed.agg(count(lit(1)), dbls.flatMap(c => Seq(
+      max(when(Cols.q(c) =!= floor(Cols.q(c)) || abs(Cols.q(c)) > lit(9.007199254740992e15), lit(1))
+        .otherwise(lit(0))),
+      count(Cols.q(c)))): _*).head()
+    val converted = parsed.select(parsed.columns.toSeq.map { c =>
+      val i = dbls.indexOf(c)
+      if (i >= 0 && fracs.getInt(1 + 2 * i) == 0 && fracs.getLong(2 + 2 * i) > 0) Cols.q(c).cast(LongType).as(c)
+      else Cols.q(c)
+    }: _*)
+    val staged  = Sanitize.columnWrangler(converted)
+    val numeric = staged.schema.fields.collect { case f if f.dataType.isInstanceOf[NumericType] => f.name }.toSeq
+    val strCols = typed(staged, StringType)
+    // distinct sets as a groupBy sees them (-0.0 is 0.0, NaN is one value),
+    // capped at maxCategories + 1 like the old bounded collect
+    val sets = (numeric ++ strCols.filterNot(categories.contains)).map { c =>
+      c -> staged.select(Cols.q(c)).where(Cols.q(c).isNotNull).distinct().limit(10001)
+        .collect().map(_.get(0)).toSeq
+    }.filter(_._2.size < 10001).toMap
+    val boolCols = numeric.filter { c =>
+      val vs = sets.getOrElse(c, Nil).map(_.asInstanceOf[Number].doubleValue()).filterNot(_.isNaN).sorted
+      vs.nonEmpty && vs.sum == 1.0
+    }.toSet
+    var out = staged.select(staged.columns.toSeq.map { c =>
+      if (boolCols(c)) Cols.q(c).cast(BooleanType).as(c) else Cols.q(c)
+    }: _*)
+    var cats = Map.empty[String, CategoryInfo]
+    strCols.foreach { c =>
+      categories.get(c) match {
+        case Some(cs) =>
+          cats += c -> CategoryInfo(cs, ordered = false)
+          out = out.withColumn(c, when(Cols.q(c).isin(cs: _*), Cols.q(c)).otherwise(lit(null).cast(StringType)))
+        case None if sets.contains(c) =>
+          cats += c -> CategoryInfo(sets(c).map(String.valueOf).sorted, ordered = false)
+        case None =>
+      }
+    }
+    orderedCols.foreach(c => cats.get(c).foreach(info => cats += c -> info.copy(ordered = true)))
+    GraftFrame(out, cats)
+  }
+
+  private def assertSameFrame(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema\n got: ${got.schema}\n want: ${want.schema}")
+    assert(got.count() == want.count(), s"$what: row count")
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$what: rows differ")
+  }
+
+  test("one-pass CleanData equals the row-level aggregates on random edge-value frames") {
+    val categories = Map("grade" -> Seq("b", "a", "z")) // "c", "d" fall outside the list
+    Seq((1L, 60, false), (2L, 150, false), (3L, 7, false), (4L, 10050, true)).foreach {
+      case (seed, rows, wide) =>
+        val df      = randomFrame(seed, rows, wide)
+        val ordered = if (seed % 2 == 0) Seq("Grade") else Nil
+        val got  = CleanData(df, naValues = Seq("NA", -999.0), orderedCols = ordered, categories = categories)
+        val want = cleanOracle(df, Seq("NA", -999.0), Sanitize.sanitizeColNames(ordered).getOrElse(Nil), categories)
+        assert(got.cats == want.cats, s"seed $seed: cats")
+        assertSameFrame(got.df, want.df, s"seed $seed")
+        if (wide) {
+          assert(got.df.schema("id_str").dataType == LongType, "the above-cap numeric strings parse")
+          assert(got.df.schema("text").dataType == StringType && !got.cats.contains("text"),
+            "the above-cap free text stays an untyped string")
+        }
+    }
+  }
+
+  test("the profile CleanData and EncodeData attach describes their output frame") {
+    Seq(1L -> randomFrame(1L, 60, wide = false), 2L -> randomFrame(2L, 150, wide = false),
+      4L -> randomFrame(4L, 10050, wide = true)).foreach { case (seed, df) =>
+      val cleaned = CleanData(df, naValues = Seq("NA", -999.0), orderedCols = if (seed == 2L) Seq("Grade") else Nil,
+        categories = if (seed == 1L) Map("grade" -> Seq("b", "a", "z")) else Map.empty)
+      Seq("cleaned" -> cleaned, "encoded" -> EncodeData(cleaned)).foreach { case (stage, gf) =>
+        val p = gf.profile.getOrElse(fail(s"seed $seed: $stage frame lost its profile"))
+        assert(p.rows == gf.df.count(), s"seed $seed $stage: rows")
+        p.cols.foreach { case (c, cp) =>
+          val what = s"seed $seed $stage column $c"
+          assert(cp.nonNull == gf.df.where(Cols.q(c).isNotNull).count(), s"$what: nonNull")
+          cp.sum.foreach { v =>
+            val want = gf.df.agg(sum(Cols.q(c))).head().getDouble(0)
+            assert(v.equals(want), s"$what: sum $v vs $want")
+          }
+          p.exact(c).foreach { m =>
+            val want = gf.df.where(Cols.q(c).isNotNull).groupBy(Cols.q(c)).count().collect()
+              .map(r => String.valueOf(r.get(0)) -> r.getLong(1)).toMap
+            assert(m.map { case (v, n) => String.valueOf(v) -> n } == want, s"$what: counts")
+          }
+        }
+      }
+    }
+  }
+
+  test("fi fed by the profile fills exactly like fi running its own aggregate") {
+    val ties = Seq(
+      Row(true, "10", -4L, -3L, 0.25),
+      Row(false, "9", 1L, -1L, null),
+      Row(null, "x", 2L, 6L, -1.5),
+      Row(true, "10", 7L, null, 2.0),
+      Row(false, "9", null, null, null),
+      Row(null, "x", null, null, -0.5),
+      Row(null, null, null, null, null))
+    val tieFrame = spark.createDataFrame(java.util.Arrays.asList(ties: _*), StructType(Seq(
+      StructField("flag", BooleanType), StructField("grade", StringType), StructField("even", LongType),
+      StructField("odd", LongType), StructField("real", DoubleType))))
+    val frames = Seq(1L -> randomFrame(1L, 60, wide = false), 2L -> randomFrame(2L, 150, wide = false),
+      5L -> randomFrame(5L, 10050, wide = true), 9L -> tieFrame)
+    frames.foreach { case (seed, df) =>
+      val cleaned = CleanData(df, naValues = Seq("NA", -999.0), orderedCols = if (seed == 2L) Seq("Grade") else Nil)
+      Seq("cleaned" -> cleaned, "encoded" -> EncodeData(cleaned)).foreach { case (stage, gf) =>
+        assert(gf.profile.isDefined, s"seed $seed: $stage frame carries its profile")
+        assertSameFrame(WrangleNa.fi(gf).df, WrangleNa.fi(gf.copy(attached = None)).df, s"seed $seed $stage fi")
+      }
+    }
+    // the tie frame's fills, as pandas mode().loc[0] and Spark's exact median give them
+    val filled = WrangleNa.fi(CleanData(tieFrame)).df.collect().last
+    assert(filled.getAs[Boolean]("flag") == false && filled.getAs[String]("grade") == "9")
+    assert(filled.getAs[Double]("even") == 1.5 && filled.getAs[Long]("odd") == -1L)
   }
 
   test("stratifiedTake draws exactly min(n, |stratum|) rows, deterministically") {

@@ -95,6 +95,41 @@ class ScalePostureSpec extends AnyFunSuite {
       s"factorWrangler ran ${jobs.length} jobs; the gate+distinct-set pass must be one")
   }
 
+  test("CleanData is ONE job, and clean → encode → fi still one, on the pipeline's lineitem columns") {
+    import graft.clean.CleanData
+    import graft.encode.EncodeData
+    import graft.na.WrangleNa
+    // the benchmark's prep_pipeline columns, with nulls in every regressor
+    // so fi needs a mean, a median and the dummies' modes; no string column
+    // has more than maxCategories values, so no fallback job is due
+    val li = Tables(spark, dir).lineitem
+    val df = li.select(
+      when(col("l_orderkey") % 17 === 0, lit(null)).otherwise(col("l_extendedprice")).as("l_extendedprice"),
+      when(col("l_orderkey") % 13 === 0, lit(null)).otherwise(col("l_quantity")).as("l_quantity"),
+      when(col("l_orderkey") % 11 === 0, lit(null)).otherwise(col("l_discount")).as("l_discount"),
+      when(col("l_orderkey") % 7 === 0, lit(null)).otherwise(col("l_tax")).as("l_tax"),
+      when(col("l_orderkey") % 5 === 0, lit(null)).otherwise(col("l_returnflag")).as("l_returnflag"),
+      col("l_linestatus"))
+    df.count() // warm the scan so the job groups see only the stages' jobs
+    def jobs(group: String)(f: => Unit): Int = {
+      // AQE splits one action into one job per query stage; disable it so
+      // job count == blocking-action count
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      spark.sparkContext.setJobGroup(group, "stage job count")
+      try f
+      finally {
+        spark.sparkContext.clearJobGroup()
+        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      }
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    }
+    val clean = jobs("clean-one-job")(CleanData(df))
+    assert(clean == 1, s"CleanData ran $clean jobs; its one profile must answer every decision")
+    val chain = jobs("clean-encode-fi")(WrangleNa.fi(EncodeData(CleanData(df))))
+    assert(chain == 1, s"clean → encode → fi ran $chain jobs; fi must read the profile, not aggregate")
+  }
+
   test("decontamination plans a broadcast semi-join for a small eval set, unhinted") {
     // Decontamination carries no broadcast() hint on purpose (a hint is
     // never demoted — an oversized eval set would OOM instead of falling

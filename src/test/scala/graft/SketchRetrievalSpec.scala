@@ -645,6 +645,30 @@ class SketchRetrievalSpec extends AnyFunSuite {
       "generation 1 must hold exactly the appended docs' postings")
   }
 
+  test("generational postings: an empty append adds nothing, a later append scores as if alone") {
+    import graft.llm.Bm25
+    val docsA   = corpus.toDF("doc_id", "text")
+    val docsB   = Seq((6L, "new york pizza beats the lazy dog pizza")).toDF("doc_id", "text")
+    val queries = Seq((1L, "new the"), (2L, "lazy dog")).toDF("q_id", "q_text")
+    def rows(dir: String) = Bm25.topKPerQueryIndexed(dir, queries, "q_id", "q_text", k = 5)
+      .select("q_id", "doc_id", "score", "rn")
+      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+    val alone = java.nio.file.Files.createTempDirectory("bm25_gen_alone").toString
+    Bm25.writePostingsGen(docsA, "doc_id", "text", alone, nBuckets = 8)
+    Bm25.appendToPostings(alone, docsB, "doc_id", "text", srcBatch = 2L)
+    val withEmpty = java.nio.file.Files.createTempDirectory("bm25_gen_empty").toString
+    Bm25.writePostingsGen(docsA, "doc_id", "text", withEmpty, nBuckets = 8)
+    // an empty batch as ingest sees one: a parquet read with no rows
+    val emptyBatch = java.nio.file.Files.createTempDirectory("bm25_empty_batch").toString + "/b"
+    docsB.limit(0).write.parquet(emptyBatch)
+    Bm25.appendToPostings(withEmpty, spark.read.parquet(emptyBatch), "doc_id", "text", srcBatch = 1L)
+    assert(spark.read.parquet(s"$withEmpty/stats").where(col("src_batch") === 1L).count() == 0,
+      "an empty batch must not write a generation")
+    Bm25.appendToPostings(withEmpty, docsB, "doc_id", "text", srcBatch = 2L)
+    assert(rows(withEmpty) == rows(alone),
+      "an empty append followed by a non-empty one must score like the non-empty append alone")
+  }
+
   test("generational postings df cap: read-time over summed partials, within-gen drop stays off disk") {
     import graft.llm.Bm25
     // planted vocabulary: "mega" df 4 WITHIN gen 0 (over cap 3 → postings
