@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Generations}
 import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -799,14 +799,9 @@ object AnnBuckets {
     // meta + stamp FIRST — see writeBuckets (ADVICE r15 #2); both
     // bootstrap writers share the fail-fast-on-every-mixed-state order
     val gid = writeMeta(spark, outDir, bits, dims, tables, seed, nProbes, epoch = 0L)
-    bucketedRows(emb, idCol, embCol, bits, dims, tables, seed)
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("tb"))
-      .write
-      .partitionBy("tb", "src_batch")
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite")
-      .parquet(s"$outDir/buckets")
+    Generations.write(
+      bucketedRows(emb, idCol, embCol, bits, dims, tables, seed).repartition(col("tb")),
+      s"$outDir/buckets", srcBatch, Seq("tb", Generations.Col), append = false)
     writeGeomMarker(s"$outDir/buckets", gid, spark,
       Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
   }
@@ -826,7 +821,7 @@ object AnnBuckets {
       embCol: String,
       srcBatch: Long): Unit = {
     val spark = emb.sparkSession
-    requireGenerationalBuckets(indexDir, spark)
+    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
     appendToBucketsLoaded(indexDir, readBucketsMeta(indexDir, spark), emb, idCol, embCol, srcBatch)
   }
 
@@ -856,29 +851,11 @@ object AnnBuckets {
           "generations, so appending under the stale sizing would corrupt it; reload via " +
           "AnnBuckets.readBucketsMeta and restart the ingest generation space")
     }
-    bucketedRows(emb, idCol, embCol, meta.nBits, meta.dims, meta.nTables, meta.seed)
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("tb"))
-      .write
-      .partitionBy("tb", "src_batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/buckets")
+    Generations.write(
+      bucketedRows(emb, idCol, embCol, meta.nBits, meta.dims, meta.nTables, meta.seed)
+        .repartition(col("tb")),
+      s"$indexDir/buckets", srcBatch, Seq("tb", Generations.Col), append = true)
   }
-
-  /** Fail fast (naming the rebuild path) when the buckets table lacks the
-    * `src_batch` generation level — extracted so the ingest loop pays it
-    * once, not per micro-batch.
-    */
-  def requireGenerationalBuckets(
-      indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    require(
-      spark.read.parquet(s"$indexDir/buckets").schema.fieldNames.contains("src_batch"),
-      s"LSH index at $indexDir uses the single-generation layout (no src_batch partition " +
-        "level); ingest and rebuild need the generational layout — rebuild it with " +
-        "writeBucketsGen (writeBuckets output stays valid for approxTopKIndexed serving, " +
-        "only ingest requires the generational layout)")
 
   /** The rebuild trigger as a predicate over the [[bucketOccupancy]]
     * report — the `IvfPq.retrainDue` shape for THIS family's drift mode:
@@ -956,7 +933,7 @@ object AnnBuckets {
           "rebuilt table is intact at the temp path — retry, or move it into place manually")
       writeMeta(spark, indexDir, m.nBits, m.dims, m.nTables, m.seed, m.nProbes, m.epoch)
     }
-    requireGenerationalBuckets(indexDir, spark)
+    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
     val stored = readBucketsMeta(indexDir, spark)
     // crash repair BEFORE anything reads with the stored sizing: a prior
     // rebuild that died between the buckets swap and the meta overwrite
@@ -999,14 +976,9 @@ object AnnBuckets {
     val tmp   = s"$indexDir/buckets.rebuild"
     // the rebuild write READS the live buckets (lazily, during this job)
     // and must not overwrite its own input — hence the sibling temp dir
-    bucketedRows(corpus, "vec_id", "emb", bits, old.dims, tables, old.seed)
-      .withColumn("src_batch", lit(0L))
-      .repartition(col("tb"))
-      .write
-      .partitionBy("tb", "src_batch")
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite")
-      .parquet(tmp)
+    Generations.write(
+      bucketedRows(corpus, "vec_id", "emb", bits, old.dims, tables, old.seed).repartition(col("tb")),
+      tmp, 0L, Seq("tb", Generations.Col), append = false)
     writeGeomMarker(tmp, gid, spark,
       Some(BucketsMeta(bits, old.dims, tables, old.seed, old.nProbes, epoch, Some(gid))))
     val fs = new org.apache.hadoop.fs.Path(indexDir)

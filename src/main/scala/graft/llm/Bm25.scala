@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Generations}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,13 +99,10 @@ object Bm25 {
     * shape [[topK]] deliberately avoids for a single fixed query becomes
     * the right one when the query SET is itself a table (retrieval
     * evaluation, query mining, batch search): per-term document postings
-    * (term, doc, tf, dl) feed the df side and the contribution join —
-    * with an opt-in `semiFilterTokens` hint that pre-filters the token
-    * stream to the query term set when the caller knows the query terms
-    * are a small fraction of the corpus vocabulary; a
+    * (term, doc, tf, dl) feed the df side and the contribution join (a
     * deployment that searches repeatedly uses
     * [[writePostings]]/[[topKPerQueryIndexed]], the build-once persisted
-    * form, instead — each
+    * form, instead) — each
     * query's DISTINCT terms join them on `term` (a query only ever meets
     * the docs containing its terms, never the corpus), and per-(query,
     * doc) scores rank inside a per-query window. Cost is
@@ -137,8 +134,7 @@ object Bm25 {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75,
-      maxTermDf: Option[Long] = None,
-      semiFilterTokens: Boolean = false): DataFrame = {
+      maxTermDf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tk = split(Cols.q(textCol), " ")
     val tokenRows = docs.select(
@@ -155,27 +151,7 @@ object Bm25 {
       // too, so a query id accidentally present twice cannot double its
       // scores (tiny frame — it broadcasts below either way)
       .distinct()
-    // `semiFilterTokens` is a CALLER HINT (r17, adjudicating the r16
-    // regression): when true, the token stream is broadcast-SEMI-filtered
-    // to the query batch's term set BEFORE the tf/df aggregations, so
-    // non-query tokens never ride either exchange — a large win exactly
-    // when the query-term set is small relative to the corpus vocabulary
-    // (selective batch retrieval over a Zipfian corpus). When the query
-    // terms cover most of the vocabulary the filter keeps ~everything and
-    // the two broadcast-probe passes over every token row are pure
-    // overhead — the r16 always-on form measured q141 0.62× / q142 0.59×
-    // in the driver's cold-JVM bench on this shared-~100-term-vocab
-    // fixture, so the default is OFF and the declared queries take the
-    // probe-free plan. The hint is caller-supplied (never a runtime
-    // count, which would cost a job to maybe save part of one); df
-    // semantics are identical either way — the semi-join keeps EVERY
-    // posting of a query term, so the per-term count equals the
-    // full-corpus df for every term that can reach the output.
-    val inTokens =
-      if (semiFilterTokens)
-        tokenRows.join(broadcast(qTerms.select("__term").distinct()), Seq("__term"), "left_semi")
-      else tokenRows
-    val postings = inTokens
+    val postings = tokenRows
       .groupBy("__term", "doc_id", "__dl")
       .agg(count(lit(1)).cast("double").as("__tf"))
     val df = postings.groupBy("__term").agg(count(lit(1)).cast("double").as("__df"))
@@ -457,8 +433,7 @@ object Bm25 {
       srcBatch: Long = 0L): Unit = {
     require(nBuckets >= 1 && nBuckets <= 4096,
       s"nBuckets=$nBuckets out of range — the partition-dir count bound")
-    writeGenTables(docs, idCol, textCol, outDir, nBuckets, maxTermDf, srcBatch,
-      overwriteMode = "static")
+    writeGenTables(docs, idCol, textCol, outDir, nBuckets, maxTermDf, srcBatch, append = false)
     writePostingsMeta(docs.sparkSession, outDir, nBuckets, maxTermDf)
   }
 
@@ -479,13 +454,12 @@ object Bm25 {
       textCol: String,
       srcBatch: Long): Unit = {
     val spark = docs.sparkSession
-    requireGenerationalPostings(postingsDir, spark)
+    Generations.require(spark, s"$postingsDir/postings", "Bm25.writePostingsGen")
     val (nBuckets, maxTermDf, termHash) = readPostingsMeta(postingsDir, spark)
     require(termHash == "u32md5",
       s"postings at $postingsDir were bucketed with $termHash, not the generational " +
         "layout's u32md5 — rebuild via writePostingsGen")
-    writeGenTables(docs, idCol, textCol, postingsDir, nBuckets, maxTermDf, srcBatch,
-      overwriteMode = "dynamic")
+    writeGenTables(docs, idCol, textCol, postingsDir, nBuckets, maxTermDf, srcBatch, append = true)
   }
 
   /** The shared generational write: one batch's postings, df partials,
@@ -499,7 +473,7 @@ object Bm25 {
       nBuckets: Int,
       maxTermDf: Option[Long],
       srcBatch: Long,
-      overwriteMode: String): Unit = {
+      append: Boolean): Unit = {
     // ONE corpus pass for ALL THREE generational tables (r16 collapsed
     // the repeated explodes onto one pinned frame; r17 tightens it
     // further): the batch's postings are computed once (tb-clustered,
@@ -545,49 +519,20 @@ object Bm25 {
         // the read-time filter over summed dfparts handles terms that
         // cross the cap only in aggregate
         () =>
-          maxTermDf.fold(postings)(cap => postings.where(col("__df") <= cap))
-            .drop("__df") // layout contract: per-generation df lives in dfparts
-            .withColumn("src_batch", lit(srcBatch))
-            .write
-            .partitionBy("tb", "src_batch")
-            .option("partitionOverwriteMode", overwriteMode)
-            .mode("overwrite")
-            .parquet(s"$outDir/postings"),
+          Generations.write(
+            maxTermDf.fold(postings)(cap => postings.where(col("__df") <= cap))
+              .drop("__df"), // layout contract: per-generation df lives in dfparts
+            s"$outDir/postings", srcBatch, Seq("tb", Generations.Col), append),
         // dfparts keep ALL terms (pre-cap) so reads see true global df
         () =>
-          postings
-            .select(col("tb"), col("__term"), col("__df"))
-            .distinct()
-            .withColumn("src_batch", lit(srcBatch))
-            .write
-            .partitionBy("tb", "src_batch")
-            .option("partitionOverwriteMode", overwriteMode)
-            .mode("overwrite")
-            .parquet(s"$outDir/dfparts"),
+          Generations.write(
+            postings.select(col("tb"), col("__term"), col("__df")).distinct(),
+            s"$outDir/dfparts", srcBatch, Seq("tb", Generations.Col), append),
         () =>
-          statsRow
-            .withColumn("src_batch", lit(srcBatch))
-            .coalesce(1)
-            .write
-            .partitionBy("src_batch")
-            .option("partitionOverwriteMode", overwriteMode)
-            .mode("overwrite")
-            .parquet(s"$outDir/stats"))
+          Generations.write(statsRow.coalesce(1), s"$outDir/stats", srcBatch,
+            Seq(Generations.Col), append))
     } finally postings.unpersist(false)
   }
-
-  /** Fail fast (naming the rebuild path) when the postings table lacks
-    * the `src_batch` generation level — the family guard pattern.
-    */
-  def requireGenerationalPostings(
-      postingsDir: String,
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    require(
-      spark.read.parquet(s"$postingsDir/postings").schema.fieldNames.contains("src_batch"),
-      s"postings at $postingsDir use the build-once layout (no src_batch partition level, " +
-        "df denormalized at build); ingest needs the generational layout — rebuild via " +
-        "writePostingsGen (writePostings output stays valid for topKPerQueryIndexed serving, " +
-        "only ingest requires the generational layout)")
 
   /** [[topKPerQuery]] against a persisted postings index (either
     * layout): the query batch's DISTINCT terms map to their hash
@@ -630,7 +575,7 @@ object Bm25 {
     val postings = spark.read
       .parquet(s"$postingsDir/postings")
       .where(col("tb").isin(probedTbs: _*))
-    val generational = postings.schema.fieldNames.contains("src_batch")
+    val generational = postings.schema.fieldNames.contains(Generations.Col)
     val (lists, stats) =
       if (!generational) (postings, spark.read.parquet(s"$postingsDir/stats"))
       else {

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Generations}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -186,24 +186,15 @@ object Dedup {
       outDir: String,
       nSigs: Int = DefaultNearDupSigs,
       family: SigHash = XxHash64): Unit =
-    signatureProjection(docs, idCol, textCol, nSigs, family)
-      .drop("__id")
-      .distinct()
-      // bootstrap provenance: the streaming ingest loop appends survivor
-      // signatures tagged with their batch id and dedups batch N against
-      // `src_batch < N` only, which makes a REPLAYED batch see exactly
-      // the pre-append index (its own survivors excluded) instead of
-      // dropping them as self-duplicates. Batch consumers ignore the
-      // column ([[incrementalNearDupNew]] selects digest + sigs).
-      // src_batch is a PARTITION column: each ingest batch owns the
-      // `src_batch=<id>` directory, so a replayed batch's append is a
-      // dynamic-partition overwrite (idempotent) instead of a monotonic
-      // duplicate-append, and the `src_batch < N` read prunes partitions.
-      .withColumn("src_batch", lit(-1L))
-      .write
-      .partitionBy("src_batch")
-      .mode("overwrite")
-      .parquet(outDir)
+    // bootstrap generation -1: the streaming ingest loop appends survivor
+    // signatures as generation <batch id> and dedups batch N against
+    // `src_batch < N` only, which makes a REPLAYED batch see exactly
+    // the pre-append index (its own survivors excluded) instead of
+    // dropping them as self-duplicates. Batch consumers ignore the
+    // column ([[incrementalNearDupNew]] selects digest + sigs).
+    Generations.write(
+      signatureProjection(docs, idCol, textCol, nSigs, family).drop("__id").distinct(),
+      outDir, -1L, Seq(Generations.Col), append = false)
 
   /** Incremental NEAR-dup dedup of a new batch against a persisted
     * signature index — the fuzzy counterpart of [[incrementalNew]], which
@@ -399,6 +390,11 @@ object Dedup {
       .withColumn("band_bucket", bandBucketCol(col("band_idx"), col("band_val"), nBuckets))
   }
 
+  /** Banded-index partition order: the generation OUTERMOST, so the
+    * streaming loop's `src_batch < N` read prunes at the top level.
+    */
+  private val BandedPartitions = Seq(Generations.Col, "band_idx", "band_bucket")
+
   private[graft] final case class BandedMeta(bands: Int, rowsPerBand: Int, nBuckets: Int)
 
   private[graft] def readBandedMeta(
@@ -441,22 +437,19 @@ object Dedup {
     require(bands >= 1 && rowsPerBand >= 1 && nBuckets >= 1, "bands/rowsPerBand/nBuckets >= 1")
     val n    = bands * rowsPerBand
     val sigs = signatureProjection(docs, idCol, textCol, n, family).drop("__id").distinct()
-    toBandRows(sigs, bands, rowsPerBand, nBuckets)
-      .withColumn("src_batch", lit(-1L))
-      // cluster on the partition columns before the partitioned write so
-      // each (band_idx, band_bucket) directory is written by ONE task as
-      // ONE file. At bench scale AQE already coalesces the upstream
-      // shuffle to a task or two, so this changes nothing measurable —
-      // but on a real corpus the shuffle stays wide and an unclustered
-      // partitioned write sprays tasks × bands × nBuckets files per
-      // generation (32 tasks × 128 dirs = 4096 files per sf10 batch);
-      // across thousands of ingest batches that is the small-files
-      // explosion the coarse bucket count exists to avoid
-      .repartition(col("band_idx"), col("band_bucket"))
-      .write
-      .partitionBy("src_batch", "band_idx", "band_bucket")
-      .mode("overwrite")
-      .parquet(s"$outDir/bands")
+    Generations.write(
+      toBandRows(sigs, bands, rowsPerBand, nBuckets)
+        // cluster on the partition columns before the partitioned write so
+        // each (band_idx, band_bucket) directory is written by ONE task as
+        // ONE file. At bench scale AQE already coalesces the upstream
+        // shuffle to a task or two, so this changes nothing measurable —
+        // but on a real corpus the shuffle stays wide and an unclustered
+        // partitioned write sprays tasks × bands × nBuckets files per
+        // generation (32 tasks × 128 dirs = 4096 files per sf10 batch);
+        // across thousands of ingest batches that is the small-files
+        // explosion the coarse bucket count exists to avoid
+        .repartition(col("band_idx"), col("band_bucket")),
+      s"$outDir/bands", -1L, BandedPartitions, append = false)
     Seq((bands, rowsPerBand, nBuckets))
       .toDF("bands", "rows_per_band", "n_buckets")
       .coalesce(1)
@@ -482,15 +475,11 @@ object Dedup {
     val n      = meta.bands * meta.rowsPerBand
     val family = indexFamily(spark.read.parquet(s"$indexDir/bands"))
     val sigs   = signatureProjection(survivors, idCol, textCol, n, family).drop("__id").distinct()
-    toBandRows(sigs, meta.bands, meta.rowsPerBand, meta.nBuckets)
-      .withColumn("src_batch", lit(batchId))
-      // one task → one file per written directory (see writeBandedNearDupIndex)
-      .repartition(col("band_idx"), col("band_bucket"))
-      .write
-      .partitionBy("src_batch", "band_idx", "band_bucket")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/bands")
+    Generations.write(
+      toBandRows(sigs, meta.bands, meta.rowsPerBand, meta.nBuckets)
+        // one task → one file per written directory (see writeBandedNearDupIndex)
+        .repartition(col("band_idx"), col("band_bucket")),
+      s"$indexDir/bands", batchId, BandedPartitions, append = true)
   }
 
   /** Within-batch exact election over anti-joined signature rows — the
@@ -590,7 +579,7 @@ object Dedup {
           }
           .reduce(_ || _)
         val hist = beforeBatch
-          .map(bid => idxAll.where(col("src_batch") < bid))
+          .map(bid => idxAll.where(col(Generations.Col) < bid))
           .getOrElse(idxAll)
         val idxBands = cut(hist.where(prune)).select(
           col("band_idx") +: col("band_val") +:
@@ -626,20 +615,16 @@ object Dedup {
       indexDir: String,
       meta: BandedMeta,
       batchId: Long): Unit =
-    toBandRows(
-      sigs
-        .join(survivors.select(Cols.q(idCol).as("__id")), Seq("__id"), "left_semi")
-        .drop("__id")
-        .distinct(),
-      meta.bands, meta.rowsPerBand, meta.nBuckets)
-      .withColumn("src_batch", lit(batchId))
-      // one task → one file per written directory (see writeBandedNearDupIndex)
-      .repartition(col("band_idx"), col("band_bucket"))
-      .write
-      .partitionBy("src_batch", "band_idx", "band_bucket")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/bands")
+    Generations.write(
+      toBandRows(
+        sigs
+          .join(survivors.select(Cols.q(idCol).as("__id")), Seq("__id"), "left_semi")
+          .drop("__id")
+          .distinct(),
+        meta.bands, meta.rowsPerBand, meta.nBuckets)
+        // one task → one file per written directory (see writeBandedNearDupIndex)
+        .repartition(col("band_idx"), col("band_bucket")),
+      s"$indexDir/bands", batchId, BandedPartitions, append = true)
 
   /** One full banded ingest-and-append step — dedup `newDocs` against the
     * index generations `< batchId` (exactly [[incrementalNearDupNewBanded]]

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Generations}
 import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -380,16 +380,10 @@ object IvfIndex {
       embCol: String,
       outDir: String,
       srcBatch: Long = 0L): Unit = {
-    val spark = emb.sparkSession
-    assignedRows(emb, idCol, embCol, centroids)
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("cell"))
-      .write
-      .partitionBy("cell", "src_batch")
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite")
-      .parquet(s"$outDir/cells")
-    writeCentroidSidecar(spark, centroids, outDir)
+    Generations.write(
+      assignedRows(emb, idCol, embCol, centroids).repartition(col("cell")),
+      s"$outDir/cells", srcBatch, Seq("cell", Generations.Col), append = false)
+    writeCentroidSidecar(emb.sparkSession, centroids, outDir)
   }
 
   /** Incremental plain-IVF ingest: assign a NEW batch under the index's
@@ -408,29 +402,11 @@ object IvfIndex {
       embCol: String,
       srcBatch: Long): Unit = {
     val spark = emb.sparkSession
-    requireGenerationalCells(indexDir, spark)
-    assignedRows(emb, idCol, embCol, readCentroids(indexDir, spark))
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("cell"))
-      .write
-      .partitionBy("cell", "src_batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/cells")
+    Generations.require(spark, s"$indexDir/cells", "IvfIndex.writeIndexGen")
+    Generations.write(
+      assignedRows(emb, idCol, embCol, readCentroids(indexDir, spark)).repartition(col("cell")),
+      s"$indexDir/cells", srcBatch, Seq("cell", Generations.Col), append = true)
   }
-
-  /** Fail fast (naming the rebuild path) when the cells table lacks the
-    * `src_batch` generation level — the family-wide guard pattern.
-    */
-  def requireGenerationalCells(
-      indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    require(
-      spark.read.parquet(s"$indexDir/cells").schema.fieldNames.contains("src_batch"),
-      s"IVF index at $indexDir uses the single-generation layout (no src_batch partition " +
-        "level); appendToIndex needs the generational layout — rebuild it with " +
-        "IvfIndex.writeIndexGen (writeIndex output stays valid for approxTopKIndexed " +
-        "serving, only ingest requires the generational layout)")
 
   /** Occupancy report for a persisted IVF index — the sizing monitor
     * (the [[AnnBuckets.bucketOccupancy]] analog): `autoCells` was √n of

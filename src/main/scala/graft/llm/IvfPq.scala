@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.Cols
+import graft.core.{Cols, Generations}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -351,17 +351,12 @@ object IvfPq {
     // stamp FIRST: from this point a racing load pairs its old-quantizer
     // hash against the new stamp and fails fast (see writeGeomStamp)
     writeGeomStamp(spark, idx, outDir)
-    encoded
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("cell"))
-      .write.partitionBy("cell", "src_batch")
-      // STATIC overwrite regardless of session conf: a bootstrap (and the
-      // documented retrain-and-rebuild remedy) must replace the WHOLE
-      // cells table — under an inherited dynamic mode, stale generations
-      // encoded in the old geometry would silently survive into the new
-      // index and serve wrong distances
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite").parquet(s"$outDir/cells")
+    // a bootstrap write (static overwrite regardless of session conf): the
+    // documented retrain-and-rebuild remedy must replace the WHOLE cells
+    // table, or generations encoded in the old geometry would survive
+    // into the new index and serve wrong distances
+    Generations.write(encoded.repartition(col("cell")), s"$outDir/cells", srcBatch,
+      Seq("cell", Generations.Col), append = false)
     writeQuantizerSidecars(spark, idx, outDir)
   }
 
@@ -387,7 +382,7 @@ object IvfPq {
       idCol: String,
       vecCol: String,
       srcBatch: Long): Unit = {
-    requireGenerationalLayout(indexDir, emb.sparkSession)
+    Generations.require(emb.sparkSession, s"$indexDir/cells", "IvfPq.writeIndexGen")
     appendToIndexLoaded(indexDir, loadIndex(indexDir, emb.sparkSession).index, emb, idCol, vecCol,
       srcBatch)
   }
@@ -431,15 +426,8 @@ object IvfPq {
           s"stamp $cur != loaded ${geomId(index)}) — appending cross-geometry codes would " +
           "corrupt the index; reload via IvfPq.loadIndex and re-encode the batch")
     }
-    encoded
-      .withColumn("src_batch", lit(srcBatch))
-      .repartition(col("cell"))
-      .write
-      .partitionBy("cell", "src_batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/cells")
-    ()
+    Generations.write(encoded.repartition(col("cell")), s"$indexDir/cells", srcBatch,
+      Seq("cell", Generations.Col), append = true)
   }
 
   /** Durable per-generation drift history (`<indexDir>/drift/
@@ -457,14 +445,8 @@ object IvfPq {
       n: Long,
       meanErr: Double): Unit = {
     import spark.implicits._
-    Seq((srcBatch, n, meanErr))
-      .toDF("src_batch", "n", "mean_err")
-      .coalesce(1)
-      .write
-      .partitionBy("src_batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$indexDir/drift")
+    Generations.write(Seq((n, meanErr)).toDF("n", "mean_err").coalesce(1), s"$indexDir/drift",
+      srcBatch, Seq(Generations.Col), append = true)
   }
 
   /** The persisted drift report (src_batch, n, mean_err), or None when no
@@ -564,20 +546,6 @@ object IvfPq {
     val idx       = IvfPqIndex(centroids, cb)
     writeIndexGen(idx, encodeForIndex(corpus, idCol, vecCol, idx), indexDir, srcBatch = 0L)
     idx
-  }
-
-  /** Fail fast (naming the rebuild path) when the cells table lacks the
-    * `src_batch` generation level — the banded-index guard pattern.
-    */
-  def requireGenerationalLayout(
-      indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val schema = spark.read.parquet(s"$indexDir/cells").schema
-    require(
-      schema.fieldNames.contains("src_batch"),
-      s"IVFADC index at $indexDir uses the single-generation layout (no src_batch partition " +
-        "level); appendToIndex needs the generational layout — rebuild it with writeIndexGen " +
-        "(writeIndex output stays valid for loadIndex/topK serving, only ingest requires v2)")
   }
 
   /** Query a [[writeIndex]] index: sidecars rebuild the in-memory

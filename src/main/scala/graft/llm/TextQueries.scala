@@ -2219,8 +2219,8 @@ object TextQueries {
 
   /** The BANDED persisted near-dup index under the cross-engine hash
     * gate ([[Dedup.writeBandedNearDupIndex]] →
-    * [[Dedup.incrementalNearDupNewBanded]] →
-    * [[Dedup.appendBandedNearDupIndex]] → a second ingest): q125 declares
+    * [[Dedup.ingestAppendBanded]] (batch-0 ingest and survivor append) →
+    * [[Dedup.incrementalNearDupNewBanded]] (batch-1 ingest)): q125 declares
     * the flat layout; this runs the production BANDED pipeline end to end
     * on the Spark side — bootstrap write (md5 family, pinned bands=4 /
     * rowsPerBand=4 / nBuckets=8), batch-0 ingest through the

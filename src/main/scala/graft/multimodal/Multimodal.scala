@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.core.Generations
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -261,17 +262,12 @@ object Multimodal {
       srcBatch: Long = 0L): Unit = {
     val spark = media.sparkSession
     import spark.implicits._
-    decodeFeatures(media, dims)
-      .withColumn("src_batch", lit(srcBatch))
-      .write
-      // NO repartition-by-partition-key here, deliberately (the r14 rule
-      // targets writers whose key has MANY values): src_batch is a single
-      // constant per write, so every task already lands in the one
-      // directory — clustering would only serialize the decode stage
-      .partitionBy("src_batch")
-      .option("partitionOverwriteMode", "static")
-      .mode("overwrite")
-      .parquet(s"$outDir/features")
+    // NO repartition-by-partition-key here, deliberately (the r14 rule
+    // targets writers whose key has MANY values): src_batch is a single
+    // constant per write, so every task already lands in the one
+    // directory — clustering would only serialize the decode stage
+    Generations.write(decodeFeatures(media, dims), s"$outDir/features", srcBatch,
+      Seq(Generations.Col), append = false)
     Seq(Tuple1(dims)).toDF("dims")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
   }
@@ -295,13 +291,8 @@ object Multimodal {
       media: DataFrame,
       dims: Int,
       srcBatch: Long): Unit =
-    decodeFeatures(media, dims)
-      .withColumn("src_batch", lit(srcBatch))
-      .write
-      .partitionBy("src_batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(s"$featuresDir/features")
+    Generations.write(decodeFeatures(media, dims), s"$featuresDir/features", srcBatch,
+      Seq(Generations.Col), append = true)
 
   /** The persisted feature vectors across all generations — the
     * decode-free input every indexed media consumer reads.
@@ -430,7 +421,7 @@ object Multimodal {
       media: DataFrame,
       srcBatch: Long): Unit = {
     val spark = media.sparkSession
-    graft.llm.AnnBuckets.requireGenerationalBuckets(indexDir, spark)
+    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
     ingestMediaLoaded(
       featuresDir, indexDir,
       graft.llm.AnnBuckets.readBucketsMeta(indexDir, spark),
@@ -465,7 +456,7 @@ object Multimodal {
     writeFeaturesBatch(featuresDir, media, featureDims, srcBatch)
     val justWritten = spark.read
       .parquet(s"$featuresDir/features")
-      .where(col("src_batch") === srcBatch)
+      .where(col(Generations.Col) === srcBatch)
       .select("media_id", "features")
     graft.llm.AnnBuckets
       .appendToBucketsLoaded(indexDir, indexMeta, justWritten, "media_id", "features", srcBatch)

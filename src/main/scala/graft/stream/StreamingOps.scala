@@ -1,5 +1,6 @@
 package graft.stream
 
+import graft.core.Generations
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -326,73 +327,65 @@ object StreamingOps {
     val banded = graft.llm.Dedup.isBandedIndex(docs.sparkSession, indexDir)
     if (!banded)
       graft.llm.Dedup.requirePartitionedIndexLayout(docs.sparkSession, indexDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        val nSigs = bands * rowsPerBand
-        if (banded)
-          // ONE materialized signature projection per batch, shared by the
-          // ingest joins AND the index append, with both pins RELEASED at
-          // the end of the step (r17 — the previous shape local-checkpointed
-          // the signatures inside the ingest call, where the loop could
-          // never free them: one batch-sized pin accumulated per
-          // micro-batch until RDD GC, the r12 lesson this file already
-          // records at the monitored-loop comment below). The survivor-docs
-          // write runs inside `use`, BEFORE the append — on a crash between
-          // the two writes the replayed batch sees the pre-append index via
-          // the beforeBatch guard and reproduces the same survivors.
-          graft.llm.Dedup.ingestAppendBanded(
-            batch.toDF(), idCol, textCol, indexDir, batchId = id, simTau = simTau) { survivors =>
-            batch.toDF()
-              .join(survivors.select(idCol), Seq(idCol), "left_semi")
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-          }
-        else {
-          val index  = spark.read.parquet(indexDir)
-          // the batch's signatures, computed ONCE in the index's hash
-          // family (schema-detected, so a loop over an md5-bootstrapped
-          // index stays md5 end to end) and pinned with a loop-managed
-          // persist: the ingest joins, the survivor-docs write, and the
-          // index append all read this one materialization, and the pin is
-          // released per batch (same r17 lifetime fix as the banded arm)
-          val family = graft.llm.Dedup.indexFamily(index)
-          val sigs = graft.llm.Dedup
-            .signatureProjection(batch.toDF(), idCol, textCol, nSigs, family)
+    // no collision guard: a fresh checkpoint replays on purpose (the
+    // `src_batch < id` read reproduces each batch's survivors)
+    Generations.ingestLoop(docs, checkpoint, baseGen = 0L, guarded = Nil) { (batch, id) =>
+      val spark = batch.sparkSession
+      val nSigs = bands * rowsPerBand
+      if (banded)
+        // ONE materialized signature projection per batch, shared by the
+        // ingest joins AND the index append, with both pins RELEASED at
+        // the end of the step (r17 — the previous shape local-checkpointed
+        // the signatures inside the ingest call, where the loop could
+        // never free them: one batch-sized pin accumulated per
+        // micro-batch until RDD GC, the r12 lesson this file already
+        // records at the monitored-loop comment below). The survivor-docs
+        // write runs inside `use`, BEFORE the append — on a crash between
+        // the two writes the replayed batch sees the pre-append index via
+        // the beforeBatch guard and reproduces the same survivors.
+        graft.llm.Dedup.ingestAppendBanded(
+          batch, idCol, textCol, indexDir, batchId = id, simTau = simTau) { survivors =>
+          batch
+            .join(survivors.select(idCol), Seq(idCol), "left_semi")
+            .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+        }
+      else {
+        val index  = spark.read.parquet(indexDir)
+        // the batch's signatures, computed ONCE in the index's hash
+        // family (schema-detected, so a loop over an md5-bootstrapped
+        // index stays md5 end to end) and pinned with a loop-managed
+        // persist: the ingest joins, the survivor-docs write, and the
+        // index append all read this one materialization, and the pin is
+        // released per batch (same r17 lifetime fix as the banded arm)
+        val family = graft.llm.Dedup.indexFamily(index)
+        val sigs = graft.llm.Dedup
+          .signatureProjection(batch, idCol, textCol, nSigs, family)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val survivors = graft.llm.Dedup
+            .incrementalNearDupNewSigs(
+              sigs, idCol, index.where(col(Generations.Col) < id), bands, rowsPerBand, simTau)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
-            val survivors = graft.llm.Dedup
-              .incrementalNearDupNewSigs(
-                sigs, idCol, index.where(col("src_batch") < id), bands, rowsPerBand, simTau)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              batch.toDF()
-                .join(survivors.select(idCol), Seq(idCol), "left_semi")
-                .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-              // dynamic-partition overwrite of THIS batch's src_batch
-              // partition(s): a crash-replayed batch rewrites the same
-              // directories instead of re-appending duplicate signature
-              // rows, so the index stays O(distinct survivors) across any
-              // number of replays. Survivor signatures come from the pinned
-              // projection (semi-join on the elected ids), not a re-run
-              // over the survivor docs.
+            batch
+              .join(survivors.select(idCol), Seq(idCol), "left_semi")
+              .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
+            // generation `id` append: a crash-replayed batch rewrites
+            // the same directories instead of re-appending duplicate
+            // signature rows, so the index stays O(distinct survivors)
+            // across any number of replays. Survivor signatures come
+            // from the pinned projection (semi-join on the elected ids),
+            // not a re-run over the survivor docs.
+            Generations.write(
               sigs
                 .join(survivors.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
                 .drop("__id")
-                .distinct()
-                .withColumn("src_batch", lit(id))
-                .write
-                .partitionBy("src_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(indexDir)
-            } finally survivors.unpersist(false)
-          } finally sigs.unpersist(false)
-        }
-        ()
+                .distinct(),
+              indexDir, id, Seq(Generations.Col), append = true)
+          } finally survivors.unpersist(false)
+        } finally sigs.unpersist(false)
       }
-      .start()
+    }
   }
 
   /** ONLINE IVFADC encoding: assign each streamed embedding its coarse
@@ -450,29 +443,9 @@ object StreamingOps {
     * generation. Starting a NEW checkpoint against an index with prior
     * stream generations requires bumping `baseGen` past them — a
     * collision would silently overwrite an old generation, so the loop
-    * fails fast if `baseGen` does not clear the existing max.
+    * fails fast if `baseGen` does not clear the existing max
+    * ([[graft.core.Generations.ingestLoop]]).
     */
-  /** Highest `src_batch` generation already in a generational index, or
-    * −1 when the cells table is EMPTY — the aggregate is null over zero
-    * rows (a bootstrap from an empty frame, or an all-empty-batch
-    * history), and "no generations yet" must pass the fresh-checkpoint
-    * collision guard for any baseGen rather than NPE (ADVICE r13).
-    */
-  private[graft] def existingMaxGen(
-      indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Long =
-    existingMaxGenAt(s"$indexDir/cells", spark)
-
-  private[graft] def existingMaxGenAt(
-      tableDir: String,
-      spark: org.apache.spark.sql.SparkSession): Long = {
-    val row = spark.read
-      .parquet(tableDir)
-      .agg(max(col("src_batch").cast("long")))
-      .collect()(0)
-    if (row.isNullAt(0)) -1L else row.getLong(0)
-  }
-
   def ivfPqIngestStream(
       embeddings: DataFrame,
       indexDir: String,
@@ -481,39 +454,12 @@ object StreamingOps {
       vecCol: String = "embedding",
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = embeddings.sparkSession
-    graft.llm.IvfPq.requireGenerationalLayout(indexDir, spark)
-    // fresh = no committed batch ids yet: Structured Streaming writes
-    // `offsets/` on the first micro-batch, so its absence (not the
-    // directory's — callers routinely pre-create the checkpoint dir)
-    // is what marks a restarting-from-zero id space. Resolved through
-    // the path's own Hadoop FileSystem, as Structured Streaming itself
-    // does — a java.io.File check would classify every hdfs://s3a://
-    // checkpoint as fresh and permanently reject legitimate restarts
-    val offsetsPath = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    val fs = offsetsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val freshCheckpoint = !fs.exists(offsetsPath)
-    if (freshCheckpoint) {
-      // only a FRESH checkpoint needs the collision guard: an existing
-      // checkpoint's replayed ids are SUPPOSED to land on generations
-      // they already wrote
-      val maxGen = existingMaxGen(indexDir, spark)
-      require(
-        baseGen > maxGen,
-        s"baseGen=$baseGen collides with existing generations (max src_batch=$maxGen) at " +
-          s"$indexDir: a new checkpoint's batch ids restart at 0, so baseGen must clear every " +
-          "generation already in the index or replays would overwrite history")
-    }
+    val cells = s"$indexDir/cells"
+    Generations.require(spark, cells, "IvfPq.writeIndexGen")
     val frozen = graft.llm.IvfPq.loadIndex(indexDir, spark).index
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.llm.IvfPq
-          .appendToIndexLoaded(indexDir, frozen, batch.toDF(), idCol, vecCol,
-            srcBatch = baseGen + id)
-        ()
-      }
-      .start()
+    Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(cells)) { (batch, srcBatch) =>
+      graft.llm.IvfPq.appendToIndexLoaded(indexDir, frozen, batch, idCol, vecCol, srcBatch)
+    }
   }
 
   /** [[ivfPqIngestStream]] with the RETRAIN LOOP IN THE LOOP (r15 —
@@ -579,73 +525,57 @@ object StreamingOps {
       seed: Int = 42): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.IvfPq
     val spark = embeddings.sparkSession
-    IvfPq.requireGenerationalLayout(indexDir, spark)
-    val offsetsPath = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    val fs = offsetsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(offsetsPath)) {
-      val maxGen = existingMaxGen(indexDir, spark)
-      require(
-        baseGen > maxGen,
-        s"baseGen=$baseGen collides with existing generations (max src_batch=$maxGen) at " +
-          s"$indexDir: a new checkpoint's batch ids restart at 0, so baseGen must clear every " +
-          "generation already in the index or replays would overwrite history")
-    }
+    val cells = s"$indexDir/cells"
+    Generations.require(spark, cells, "IvfPq.writeIndexGen")
     // the quantizer handle is a VAR: the rebuild replaces it mid-loop
     var frozen = IvfPq.loadIndex(indexDir, spark).index
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val srcBatch = baseGen + id
-        val b        = batch.toDF()
-        val enc      = IvfPq.encodeForIndexWithError(b, idCol, vecCol, frozen)
-        val stats    = enc.agg(count(lit(1)), avg(col("err"))).collect()(0)
-        val n        = stats.getLong(0)
-        IvfPq.appendEncodedLoaded(indexDir, frozen, enc.drop("err"), srcBatch)
-        if (n > 0) {
-          IvfPq.recordDrift(indexDir, spark, srcBatch, n, stats.getDouble(1))
-          val due = IvfPq.driftHistory(indexDir, spark).exists(IvfPq.retrainDue(_, tau))
-          if (due) {
-            // rebuild over history WITHOUT the triggering batch, then
-            // re-append the batch under the NEW geometry as its own
-            // generation — keeps the batch↔generation mapping stable for
-            // crash replay (see the crash-semantics note above).
-            //
-            // `corpus()` is semi-joined against the ids ALREADY IN THE
-            // INDEX (ADVICE r15 #1): a corpus() that reads the stream
-            // SOURCE — exactly what a files-on-a-directory deployment
-            // passes — includes rows from micro-batches still PENDING
-            // under Trigger.AvailableNow; baking those into collapsed
-            // gen 0 would duplicate them when their own batch later
-            // appends. The id snapshot is eagerly materialized
-            // (localCheckpoint) because the rebuild OVERWRITES the cells
-            // table it would otherwise lazily read mid-write; rebuilds
-            // are the rare path, and the blocks are dropped right after.
-            val ingestedIds = spark.read
-              .parquet(s"$indexDir/cells")
-              .select(col("vec_id").as(idCol))
-              .distinct()
-              .localCheckpoint(true)
-            try {
-              val ingested = corpus().join(ingestedIds, Seq(idCol), "left_semi")
-              frozen = IvfPq.retrainAndRebuild(
-                indexDir, ingested.join(b, Seq(idCol), "left_anti"), idCol, vecCol, dims,
-                nCells, m, k, pqIters, seed, trainOn = ingested)
-            } finally {
-              ingestedIds.unpersist()
-              ()
-            }
-            IvfPq.clearDrift(indexDir, spark)
-            val encNew   = IvfPq.encodeForIndexWithError(b, idCol, vecCol, frozen)
-            val newStats = encNew.agg(count(lit(1)), avg(col("err"))).collect()(0)
-            IvfPq.appendEncodedLoaded(indexDir, frozen, encNew.drop("err"), srcBatch)
-            IvfPq.recordDrift(indexDir, spark, srcBatch, newStats.getLong(0),
-              newStats.getDouble(1))
+    Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(cells)) { (b, srcBatch) =>
+      val enc   = IvfPq.encodeForIndexWithError(b, idCol, vecCol, frozen)
+      val stats = enc.agg(count(lit(1)), avg(col("err"))).collect()(0)
+      val n     = stats.getLong(0)
+      IvfPq.appendEncodedLoaded(indexDir, frozen, enc.drop("err"), srcBatch)
+      if (n > 0) {
+        IvfPq.recordDrift(indexDir, spark, srcBatch, n, stats.getDouble(1))
+        val due = IvfPq.driftHistory(indexDir, spark).exists(IvfPq.retrainDue(_, tau))
+        if (due) {
+          // rebuild over history WITHOUT the triggering batch, then
+          // re-append the batch under the NEW geometry as its own
+          // generation — keeps the batch↔generation mapping stable for
+          // crash replay (see the crash-semantics note above).
+          //
+          // `corpus()` is semi-joined against the ids ALREADY IN THE
+          // INDEX (ADVICE r15 #1): a corpus() that reads the stream
+          // SOURCE — exactly what a files-on-a-directory deployment
+          // passes — includes rows from micro-batches still PENDING
+          // under the AvailableNow trigger; baking those into collapsed
+          // gen 0 would duplicate them when their own batch later
+          // appends. The id snapshot is eagerly materialized
+          // (localCheckpoint) because the rebuild OVERWRITES the cells
+          // table it would otherwise lazily read mid-write; rebuilds
+          // are the rare path, and the blocks are dropped right after.
+          val ingestedIds = spark.read
+            .parquet(s"$indexDir/cells")
+            .select(col("vec_id").as(idCol))
+            .distinct()
+            .localCheckpoint(true)
+          try {
+            val ingested = corpus().join(ingestedIds, Seq(idCol), "left_semi")
+            frozen = IvfPq.retrainAndRebuild(
+              indexDir, ingested.join(b, Seq(idCol), "left_anti"), idCol, vecCol, dims,
+              nCells, m, k, pqIters, seed, trainOn = ingested)
+          } finally {
+            ingestedIds.unpersist()
+            ()
           }
+          IvfPq.clearDrift(indexDir, spark)
+          val encNew   = IvfPq.encodeForIndexWithError(b, idCol, vecCol, frozen)
+          val newStats = encNew.agg(count(lit(1)), avg(col("err"))).collect()(0)
+          IvfPq.appendEncodedLoaded(indexDir, frozen, encNew.drop("err"), srcBatch)
+          IvfPq.recordDrift(indexDir, spark, srcBatch, newStats.getLong(0),
+            newStats.getDouble(1))
         }
-        ()
       }
-      .start()
+    }
   }
 
   /** STREAMING LSH-index maintenance — [[ivfPqIngestStream]]'s loop shape
@@ -671,34 +601,18 @@ object StreamingOps {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = embeddings.sparkSession
-    graft.llm.AnnBuckets.requireGenerationalBuckets(indexDir, spark)
-    val offsetsPath = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    val fs = offsetsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(offsetsPath)) {
-      val maxGen = existingMaxGenAt(s"$indexDir/buckets", spark)
-      require(
-        baseGen > maxGen,
-        s"baseGen=$baseGen collides with existing generations (max src_batch=$maxGen) at " +
-          s"$indexDir: a new checkpoint's batch ids restart at 0, so baseGen must clear every " +
-          "generation already in the index or replays would overwrite history")
-    }
+    val spark   = embeddings.sparkSession
+    val buckets = s"$indexDir/buckets"
+    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
     // meta read + layout guard hoisted to per-loop costs (the
     // appendToIndexLoaded economics — ADVICE r14); what stays per batch
     // is ONE tiny geometry-stamp read, which fails the loop fast if
     // rebuildBucketsGen replaces the index mid-stream (the sizing — and
     // the generation space — changed underneath the cached meta)
     val meta = graft.llm.AnnBuckets.readBucketsMeta(indexDir, spark)
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.llm.AnnBuckets
-          .appendToBucketsLoaded(indexDir, meta, batch.toDF(), idCol, vecCol,
-            srcBatch = baseGen + id)
-        ()
-      }
-      .start()
+    Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(buckets)) { (batch, srcBatch) =>
+      graft.llm.AnnBuckets.appendToBucketsLoaded(indexDir, meta, batch, idCol, vecCol, srcBatch)
+    }
   }
 
   /** [[lshIngestStream]] with the REBUILD LOOP IN THE LOOP — the
@@ -741,41 +655,25 @@ object StreamingOps {
       targetBucketRows: Int = 128,
       slack: Double = 2.0): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.llm.AnnBuckets
-    val spark = embeddings.sparkSession
-    AnnBuckets.requireGenerationalBuckets(indexDir, spark)
-    val offsetsPath = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    val fs = offsetsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(offsetsPath)) {
-      val maxGen = existingMaxGenAt(s"$indexDir/buckets", spark)
-      require(
-        baseGen > maxGen,
-        s"baseGen=$baseGen collides with existing generations (max src_batch=$maxGen) at " +
-          s"$indexDir: a new checkpoint's batch ids restart at 0, so baseGen must clear every " +
-          "generation already in the index or replays would overwrite history")
-    }
+    val spark   = embeddings.sparkSession
+    val buckets = s"$indexDir/buckets"
+    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
     // meta and the row counter are VARS: the rebuild replaces both
     var meta = AnnBuckets.readBucketsMeta(indexDir, spark)
     var rowsPerTable = AnnBuckets.bucketOccupancy(indexDir, spark)
       .collect()(0).getAs[Long]("rows") / math.max(1, meta.nTables)
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = batch.toDF()
-        val batchRows = b.count()
-        val estMean =
-          (rowsPerTable + batchRows).toDouble / (1L << meta.nBits)
-        if (estMean > slack * targetBucketRows &&
-          AnnBuckets.rebuildDue(
-            AnnBuckets.bucketOccupancy(indexDir, spark), targetBucketRows, slack)) {
-          meta = AnnBuckets.rebuildBucketsGen(indexDir, spark, targetBucketRows)
-        }
-        AnnBuckets.appendToBucketsLoaded(indexDir, meta, b, idCol, vecCol,
-          srcBatch = baseGen + id)
-        rowsPerTable += batchRows
-        ()
+    Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(buckets)) { (b, srcBatch) =>
+      val batchRows = b.count()
+      val estMean =
+        (rowsPerTable + batchRows).toDouble / (1L << meta.nBits)
+      if (estMean > slack * targetBucketRows &&
+        AnnBuckets.rebuildDue(
+          AnnBuckets.bucketOccupancy(indexDir, spark), targetBucketRows, slack)) {
+        meta = AnnBuckets.rebuildBucketsGen(indexDir, spark, targetBucketRows)
       }
-      .start()
+      AnnBuckets.appendToBucketsLoaded(indexDir, meta, b, idCol, vecCol, srcBatch)
+      rowsPerTable += batchRows
+    }
   }
 
   /** STREAMING MEDIA ingest — the decode-once contract under the
@@ -799,32 +697,16 @@ object StreamingOps {
       indexDir: String,
       checkpoint: String,
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = media.sparkSession
-    graft.llm.AnnBuckets.requireGenerationalBuckets(indexDir, spark)
-    val offsetsPath = new org.apache.hadoop.fs.Path(checkpoint, "offsets")
-    val fs = offsetsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(offsetsPath)) {
-      val maxGen = math.max(
-        existingMaxGenAt(s"$indexDir/buckets", spark),
-        existingMaxGenAt(s"$featuresDir/features", spark))
-      require(
-        baseGen > maxGen,
-        s"baseGen=$baseGen collides with existing generations (max src_batch=$maxGen) across " +
-          s"$featuresDir/$indexDir: a new checkpoint's batch ids restart at 0, so baseGen must " +
-          "clear every generation already present or replays would overwrite history")
-    }
+    val spark   = media.sparkSession
+    val buckets = s"$indexDir/buckets"
+    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
     val indexMeta   = graft.llm.AnnBuckets.readBucketsMeta(indexDir, spark)
     val featureDims = spark.read.parquet(s"$featuresDir/meta").head().getInt(0)
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+    Generations.ingestLoop(media, checkpoint, baseGen, Seq(buckets, s"$featuresDir/features")) {
+      (batch, srcBatch) =>
         graft.multimodal.Multimodal
-          .ingestMediaLoaded(featuresDir, indexDir, indexMeta, featureDims, batch.toDF(),
-            srcBatch = baseGen + id)
-        ()
-      }
-      .start()
+          .ingestMediaLoaded(featuresDir, indexDir, indexMeta, featureDims, batch, srcBatch)
+    }
   }
 
   /** ONLINE IVFADC scoring — the serve half of the residual-PQ story
@@ -988,19 +870,17 @@ object StreamingOps {
       batchId: Long): Unit =
     batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
 
-  /** AvailableNow foreachBatch stream into [[writeBatchIdempotent]]; with a
-    * checkpoint, restarts neither reprocess nor duplicate completed batches.
+  /** [[graft.core.Generations.ingestLoop]] stream into
+    * [[writeBatchIdempotent]]; with a checkpoint, restarts neither
+    * reprocess nor duplicate completed batches.
     */
   def exactlyOnceParquetSink(
       events: DataFrame,
       outDir: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        writeBatchIdempotent(batch, outDir, id))
-      .start()
+    Generations.ingestLoop(events, checkpoint, baseGen = 0L, guarded = Nil) { (batch, id) =>
+      writeBatchIdempotent(batch, outDir, id)
+    }
 
   /** Custom state: running per-user event count via mapGroupsWithState —
     * the `KeyValueGroupedDataset` escape hatch for state machines the

@@ -467,4 +467,35 @@ class DedupSpec extends AnyFunSuite {
     assert(r1.map(_._1).contains(11L) && !r1.map(_._1).contains(10L),
       "sanity: the novel doc survives, the dup of an appended survivor is dropped")
   }
+
+  test("re-bootstrap replaces every generation even under a dynamic session overwrite mode") {
+    // a bootstrap that inherited the session's dynamic mode replaced only
+    // generation -1 and kept the old corpus's appended survivors, whose
+    // signatures kept dropping new documents
+    val conf  = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.getOption(conf)
+    spark.conf.set(conf, "dynamic")
+    try {
+      val old   = corpus.where(col("doc_id") <= 2)
+      val fresh = Seq((7L, "fresh tokens never indexed before today ok")).toDF("doc_id", "text")
+      def gens(table: String) = spark.read.parquet(table)
+        .select(col(graft.core.Generations.Col).cast("long")).distinct().as[Long].collect().toSet
+      val banded = java.nio.file.Files.createTempDirectory("banded_reboot").toString
+      def bootBanded() = Dedup.writeBandedNearDupIndex(old, "doc_id", "text", banded,
+        bands = 4, rowsPerBand = 2, nBuckets = 4)
+      bootBanded()
+      Dedup.ingestAppendBanded(fresh, "doc_id", "text", banded, batchId = 0L, simTau = 0.5)()
+      assert(gens(s"$banded/bands") == Set(-1L, 0L), "sanity: the append added generation 0")
+      bootBanded()
+      assert(gens(s"$banded/bands") == Set(-1L), "banded re-bootstrap must drop generation 0")
+      val flat = java.nio.file.Files.createTempDirectory("flat_reboot").toString
+      Dedup.writeNearDupIndex(old, "doc_id", "text", flat)
+      graft.core.Generations.write(
+        Dedup.signatureProjection(fresh, "doc_id", "text", Dedup.DefaultNearDupSigs).drop("__id"),
+        flat, 0L, Seq(graft.core.Generations.Col), append = true)
+      assert(gens(flat) == Set(-1L, 0L), "sanity: the append added generation 0")
+      Dedup.writeNearDupIndex(old, "doc_id", "text", flat)
+      assert(gens(flat) == Set(-1L), "flat re-bootstrap must drop generation 0")
+    } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
 }

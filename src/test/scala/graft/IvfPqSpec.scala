@@ -361,7 +361,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(fresh.cells.count() == corpus.count())
     assert(IvfPq.scoreCandidatesServe(base.limit(2), fresh, nProbe = 2).count() > 0)
     // ingest resumes against a fresh generation space
-    assert(graft.stream.StreamingOps.existingMaxGen(dir, spark) == 0L)
+    assert(graft.core.Generations.maxGen(spark, s"$dir/cells") == 0L)
   }
 
   test("scoreCandidatesServe fails fast past the probe-row bound, naming the distributed path") {
@@ -378,7 +378,7 @@ class IvfPqSpec extends AnyFunSuite {
     assert(ok.count() > 0)
   }
 
-  test("existingMaxGen is -1 over an empty generational cells table (no NPE)") {
+  test("Generations.maxGen is -1 over an empty generational cells table (no NPE)") {
     // an index whose cells relation carries the src_batch column but zero
     // rows: the max aggregate is null, which the fresh-checkpoint guard
     // must read as "no generations yet" rather than NPE (ADVICE r13)
@@ -389,7 +389,7 @@ class IvfPqSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("src_batch", org.apache.spark.sql.types.LongType)))
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .write.parquet(s"$dir/cells")
-    assert(graft.stream.StreamingOps.existingMaxGen(dir, spark) == -1L)
+    assert(graft.core.Generations.maxGen(spark, s"$dir/cells") == -1L)
   }
 
   test("Scratch registers ONE shutdown hook; repeated tempDir calls only queue paths") {

@@ -799,20 +799,6 @@ class SketchRetrievalSpec extends AnyFunSuite {
     }
   }
 
-  test("semiFilterTokens hint never changes multi-query results (r17 gate)") {
-    val docs    = corpus.toDF("doc_id", "text")
-    val queries = Seq((1L, "new the"), (2L, "spark window"), (3L, "lazy dog")).toDF("q_id", "q_text")
-    def rows(semi: Boolean, cap: Option[Long]) = Bm25
-      .topKPerQuery(docs, "doc_id", "text", queries, "q_id", "q_text", k = 5,
-        maxTermDf = cap, semiFilterTokens = semi)
-      .select("q_id", "doc_id", "score", "rn")
-      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
-    assert(rows(semi = true, None) == rows(semi = false, None),
-      "the token semi-filter is a physical hint — identical output required")
-    assert(rows(semi = true, Some(2L)) == rows(semi = false, Some(2L)),
-      "identical under the df cap too (df computed before the cap on both shapes)")
-  }
-
   test("observed stats sidecar counts null/empty texts exactly like the standalone aggregate (r17)") {
     // null text: counts toward N, contributes NO dl (the pre-explode
     // observation must see the row, the explode must drop it);

@@ -703,6 +703,43 @@ class StreamingSpec extends AnyFunSuite {
     assert(err.getMessage.contains("baseGen"), s"wrong error: ${err.getMessage}")
   }
 
+  test("monitored IVFADC and LSH ingest: a fresh checkpoint with a colliding baseGen fails " +
+    "fast and leaves the index untouched") {
+    import spark.implicits._
+    import graft.llm.{AnnBuckets, IvfPq}
+    val emb  = graft.core.Tables(spark, dir).embeddings
+    val boot = emb.where(col("vec_id") % 3 === 0)
+    val b1   = emb.where(col("vec_id") % 3 === 1)
+    val streamDir = java.nio.file.Files.createTempDirectory("mon_guard_in").toString
+    b1.coalesce(1).write.mode("append").parquet(streamDir)
+    def stream() = StreamingOps.readEmbeddingStream(spark, streamDir)
+    def gens(table: String) = spark.read.parquet(table)
+      .select(col("src_batch").cast("long")).distinct().as[Long].collect().toSet
+    // each index holds generations {0, 1}: a new checkpoint at the
+    // default baseGen = 1 would overwrite generation 1
+    val (idx, encBoot) =
+      IvfPq.build(boot, "vec_id", "embedding", dims = 64, nCells = 16, m = 4, k = 16)
+    val pqDir = java.nio.file.Files.createTempDirectory("mon_guard_pq").toString
+    IvfPq.writeIndexGen(idx, encBoot, pqDir, srcBatch = 0L)
+    IvfPq.appendToIndex(pqDir, b1, "vec_id", "embedding", srcBatch = 1L)
+    val lshDir = java.nio.file.Files.createTempDirectory("mon_guard_lsh").toString
+    AnnBuckets.writeBucketsGen(boot, "vec_id", "embedding", lshDir, nBits = 4, nTables = 2,
+      nProbes = 0, srcBatch = 0L)
+    AnnBuckets.appendToBuckets(lshDir, b1, "vec_id", "embedding", srcBatch = 1L)
+    val pqErr = intercept[IllegalArgumentException] {
+      StreamingOps.ivfPqIngestStreamMonitored(stream(), pqDir,
+        java.nio.file.Files.createTempDirectory("mon_guard_pq_cp").toString, () => boot)
+    }
+    assert(pqErr.getMessage.contains("baseGen"), s"wrong error: ${pqErr.getMessage}")
+    assert(gens(s"$pqDir/cells") == Set(0L, 1L))
+    val lshErr = intercept[IllegalArgumentException] {
+      StreamingOps.lshIngestStreamMonitored(stream(), lshDir,
+        java.nio.file.Files.createTempDirectory("mon_guard_lsh_cp").toString)
+    }
+    assert(lshErr.getMessage.contains("baseGen"), s"wrong error: ${lshErr.getMessage}")
+    assert(gens(s"$lshDir/buckets") == Set(0L, 1L))
+  }
+
   test("streaming IVFADC encode matches the batch encoder and the build pipeline") {
     import graft.llm.IvfPq
     val emb = graft.core.Tables(spark, dir).embeddings
