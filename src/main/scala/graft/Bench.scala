@@ -33,7 +33,9 @@ object Bench {
   // evaluates exactly what the noop write evaluates — same executed plan,
   // same codegen, no column pruning of the final projection — minus the
   // V2 write-path commit machinery: an empty one-row action costs 34 ms
-  // drained vs 65 ms noop-written (tools/FloorProbe2), and on the 19-case
+  // drained vs 65 ms noop-written (measured on 32 cores; the traced
+  // benchmark run, `python3 perfbench/run.py --trace 1`, reports each
+  // op's jobs and `spark.no_task_s` per-action floor), and on the 19-case
   // q0*/q4* A/B the drain cut a further 1.1 s off the case-major subset
   // total (7.68 → 6.61 s, ~56 ms/case, no per-case min worse). With ~100
   // of the 140 cases under a second, that fixed overhead was ~1/10 of

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** The generational-table lifecycle every persisted index family shares
   * (LSH buckets, IVF cells, IVFADC cells and drift rows, banded and flat
@@ -26,8 +27,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * What stays with each family: its partition columns under or around
   * `src_batch`, its pre-write clustering (`repartition`/`coalesce`, which
-  * fixes the files per directory), its meta sidecars and their commit
-  * order relative to the table write.
+  * fixes the files per directory), its meta sidecar's fields and their
+  * commit order relative to the table write ([[IndexMeta]] writes and
+  * reads the sidecar).
   */
 object Generations {
 
@@ -55,17 +57,23 @@ object Generations {
       .mode("overwrite")
       .parquet(table)
 
-  /** Fail fast when `table` lacks the [[Col]] partition level (a
-    * single-generation or build-once layout, which stays valid for
-    * serving but cannot take appends), naming the family's generational
-    * writer `rebuildWith`.
+  /** Fail fast when `table`, of `schema`, lacks the [[Col]] partition
+    * level (a single-generation or build-once layout, which stays valid
+    * for serving but cannot take appends), naming the family's
+    * generational writer `rebuildWith`.
     */
-  def require(spark: SparkSession, table: String, rebuildWith: String): Unit =
+  def require(schema: StructType, table: String, rebuildWith: String): Unit =
     Predef.require(
-      spark.read.parquet(table).schema.fieldNames.contains(Col),
+      schema.fieldNames.contains(Col),
       s"$table uses a single-generation layout (no $Col partition level); ingest needs the " +
         s"generational layout — rebuild it with $rebuildWith (the single-generation output " +
         "stays valid for serving, only ingest requires the generational layout)")
+
+  /** [[require]] over `table`'s schema as read now — for the families
+    * without a meta sidecar ([[IndexMeta]] holds the others' schemas).
+    */
+  def require(spark: SparkSession, table: String, rebuildWith: String): Unit =
+    require(spark.read.parquet(table).schema, table, rebuildWith)
 
   /** Highest generation across `tables`, or −1 when they hold no rows —
     * the max aggregate is null over zero rows (a bootstrap from an empty

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.{Cols, Generations}
+import graft.core.{Cols, Generations, IndexMeta}
 import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -510,25 +510,27 @@ object AnnBuckets {
       epoch: Long,
       geomId: Option[Long])
 
-  /** Read an index's parameter sidecar once — the handle an ingest loop
-    * caches so per-batch costs are one tiny stamp read, not a sidecar
-    * collect + layout scan (the `IvfPq.appendToIndexLoaded` economics,
-    * ADVICE r14 applied to this family).
+  /** An index's parameter sidecar, decoded. The sidecar row itself is
+    * read once per (re)bootstrap by [[graft.core.IndexMeta]], so a call
+    * costs one driver-side listing of `<indexDir>/meta`, no Spark job.
+    * An ingest loop still holds the decoded value across batches: its
+    * per-batch geometry-stamp check ([[appendToBucketsLoaded]]) is what
+    * fails the loop fast when [[rebuildBucketsGen]] resizes the index
+    * underneath it.
     */
   def readBucketsMeta(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): BucketsMeta = {
-    val df  = spark.read.parquet(s"$indexDir/meta")
-    val row = df.head()
-    val f   = df.schema.fieldNames.toSet
+    val ix  = IndexMeta(spark, indexDir)
+    val row = ix.row
     BucketsMeta(
       row.getAs[Int]("nBits"),
       row.getAs[Int]("dims"),
       row.getAs[Int]("nTables"),
       row.getAs[Long]("seed"),
-      if (f("nProbes")) row.getAs[Int]("nProbes") else 0,
-      if (f("epoch")) row.getAs[Long]("epoch") else 0L,
-      if (f("geom_id")) Some(row.getAs[Long]("geom_id")) else None)
+      if (ix.has("nProbes")) row.getAs[Int]("nProbes") else 0,
+      if (ix.has("epoch")) row.getAs[Long]("epoch") else 0L,
+      if (ix.has("geom_id")) Some(row.getAs[Long]("geom_id")) else None)
   }
 
   /** Deterministic stamp of an LSH index GEOMETRY + rebuild epoch
@@ -699,12 +701,10 @@ object AnnBuckets {
       epoch: Long): Long = {
     import spark.implicits._
     val gid = lshGeomId(bits, dims, tables, seed, nProbes, epoch)
-    Seq((bits, dims, tables, seed, nProbes, epoch, gid))
-      .toDF("nBits", "dims", "nTables", "seed", "nProbes", "epoch", "geom_id")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$outDir/meta")
+    IndexMeta.write(
+      Seq((bits, dims, tables, seed, nProbes, epoch, gid))
+        .toDF("nBits", "dims", "nTables", "seed", "nProbes", "epoch", "geom_id"),
+      outDir)
     gid
   }
 
@@ -762,6 +762,8 @@ object AnnBuckets {
       .parquet(s"$outDir/buckets")
     writeGeomMarker(s"$outDir/buckets", gid, spark,
       Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
+    // the sidecar went first: drop a schema a reader took before the table
+    IndexMeta.invalidate(spark, outDir)
   }
 
   /** [[writeBuckets]] in the GENERATIONAL layout
@@ -804,6 +806,7 @@ object AnnBuckets {
       s"$outDir/buckets", srcBatch, Seq("tb", Generations.Col), append = false)
     writeGeomMarker(s"$outDir/buckets", gid, spark,
       Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
+    IndexMeta.invalidate(spark, outDir) // as in writeBuckets
   }
 
   /** Incremental LSH-index ingest: bucket a NEW batch under the index's
@@ -821,9 +824,16 @@ object AnnBuckets {
       embCol: String,
       srcBatch: Long): Unit = {
     val spark = emb.sparkSession
-    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
+    requireGenerational(indexDir, spark)
     appendToBucketsLoaded(indexDir, readBucketsMeta(indexDir, spark), emb, idCol, embCol, srcBatch)
   }
+
+  /** The generational-layout guard over the buckets schema the reader holds. */
+  private[graft] def requireGenerational(
+      indexDir: String,
+      spark: org.apache.spark.sql.SparkSession): Unit =
+    Generations.require(IndexMeta(spark, indexDir).schema("buckets"), s"$indexDir/buckets",
+      "AnnBuckets.writeBucketsGen")
 
   /** The [[appendToBuckets]] write against ALREADY-LOADED meta — the
     * ingest-loop shape (the `IvfPq.appendToIndexLoaded` economics,
@@ -933,7 +943,7 @@ object AnnBuckets {
           "rebuilt table is intact at the temp path — retry, or move it into place manually")
       writeMeta(spark, indexDir, m.nBits, m.dims, m.nTables, m.seed, m.nProbes, m.epoch)
     }
-    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
+    requireGenerational(indexDir, spark)
     val stored = readBucketsMeta(indexDir, spark)
     // crash repair BEFORE anything reads with the stored sizing: a prior
     // rebuild that died between the buckets swap and the meta overwrite
@@ -959,8 +969,8 @@ object AnnBuckets {
         m
       case _ => stored
     }
-    val corpus = spark.read
-      .parquet(s"$indexDir/buckets")
+    val corpus = IndexMeta(spark, indexDir)
+      .read("buckets")
       .where(col("tb") < lit(1 << old.nBits)) // table 0: every vector, once
       .select(col("vec_id"), col("emb"))
     val n      = corpus.count()
@@ -1005,8 +1015,8 @@ object AnnBuckets {
   def bucketOccupancy(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.read
-      .parquet(s"$indexDir/buckets")
+    IndexMeta(spark, indexDir)
+      .read("buckets")
       .groupBy("tb")
       .agg(count(lit(1)).as("occ"))
       .agg(
@@ -1105,8 +1115,8 @@ object AnnBuckets {
         "is for BOUNDED query batches; for a full-corpus self-join use AnnBuckets.approxTopK " +
         "(single-run bucketing, no probe-set collect), or raise maxProbedBuckets explicitly")
     val probedTbs: Seq[Int] = probedKeys.map(_.getInt(0)).toSeq
-    val lists = spark.read
-      .parquet(s"$indexDir/buckets")
+    val lists = IndexMeta(spark, indexDir)
+      .read("buckets")
       .where(col("tb").isin(probedTbs: _*))
       .select(
         col("tb"),

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.{Cols, Generations}
+import graft.core.{Cols, Generations, IndexMeta, Jobs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -269,19 +269,39 @@ object Bm25 {
             "the observed scan (plan regression); stats sidecar cannot be derived")
     }
 
-  /** Run independent write jobs concurrently from a small thread pool
+  /** Run independent sink writes concurrently from a small thread pool
     * (guide §2.6): Spark's scheduler runs several jobs at once inside one
     * application — actions are only sequential because driver code calls
     * them sequentially — so independent sink writes overlap instead of
-    * paying the per-job floor back to back. Rethrows the first failure.
+    * paying the per-job floor back to back.
+    *
+    * Every sink SETTLES before this returns or throws: a fail-fast join
+    * would hand control back (and let the caller release the pin the
+    * writes read, or replay the batch) while sibling writes still run
+    * into the same generation's directories. One failure names every
+    * failed sink and carries the first failure as its cause, the others
+    * suppressed. No timeout: a wall-clock bound on a write of unknown
+    * size would be a guess.
     */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+  private def inParallel(sinks: (String, () => Unit)*): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(sinks.size)
     try {
-      val _ = Await.result(Future.sequence(tasks.map(t => Future(t())).toSeq), Duration.Inf)
+      val running = sinks.map { case (name, write) =>
+        val task: Runnable = () => write()
+        name -> pool.submit(task)
+      }
+      val failed = running.flatMap { case (name, f) =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException => Some(name -> e.getCause) }
+      }
+      if (failed.nonEmpty) {
+        val err = new IllegalStateException(
+          s"postings write failed in ${failed.size} of ${sinks.size} sinks: " +
+            failed.map { case (n, e) => s"$n (${e.getMessage})" }.mkString("; "),
+          failed.head._2)
+        failed.tail.foreach(f => err.addSuppressed(f._2))
+        throw err
+      }
     } finally pool.shutdown()
   }
 
@@ -291,16 +311,12 @@ object Bm25 {
     * `termHash` column and were bucketed with Spark's Murmur3 — readers
     * must bucket query terms the same way their index was written.
     */
-  private[graft] def readPostingsMeta(
-      postingsDir: String,
-      spark: org.apache.spark.sql.SparkSession): (Int, Option[Long], String) = {
-    val m   = spark.read.parquet(s"$postingsDir/meta")
-    val row = m.head()
-    val cap = row.getAs[Long]("maxTermDf")
+  private def postingsMeta(ix: IndexMeta): (Int, Option[Long], String) = {
+    val cap = ix.row.getAs[Long]("maxTermDf")
     (
-      row.getAs[Int]("nBuckets"),
+      ix.row.getAs[Int]("nBuckets"),
       if (cap < 0) None else Some(cap),
-      if (m.schema.fieldNames.contains("termHash")) row.getAs[String]("termHash") else "murmur3")
+      if (ix.has("termHash")) ix.row.getAs[String]("termHash") else "murmur3")
   }
 
   private def writePostingsMeta(
@@ -309,10 +325,9 @@ object Bm25 {
       nBuckets: Int,
       maxTermDf: Option[Long]): Unit = {
     import spark.implicits._
-    Seq((nBuckets, maxTermDf.getOrElse(-1L), "u32md5"))
-      .toDF("nBuckets", "maxTermDf", "termHash")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/meta")
+    IndexMeta.write(
+      Seq((nBuckets, maxTermDf.getOrElse(-1L), "u32md5")).toDF("nBuckets", "maxTermDf", "termHash"),
+      outDir)
   }
 
   /** Persist the inverted postings — the build-once half the repeated-
@@ -453,9 +468,9 @@ object Bm25 {
       idCol: String,
       textCol: String,
       srcBatch: Long): Unit = {
-    val spark = docs.sparkSession
-    Generations.require(spark, s"$postingsDir/postings", "Bm25.writePostingsGen")
-    val (nBuckets, maxTermDf, termHash) = readPostingsMeta(postingsDir, spark)
+    val ix = IndexMeta(docs.sparkSession, postingsDir)
+    Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
+    val (nBuckets, maxTermDf, termHash) = postingsMeta(ix)
     require(termHash == "u32md5",
       s"postings at $postingsDir were bucketed with $termHash, not the generational " +
         "layout's u32md5 — rebuild via writePostingsGen")
@@ -518,19 +533,19 @@ object Bm25 {
         // can be dropped here without ever truncating a kept term's list;
         // the read-time filter over summed dfparts handles terms that
         // cross the cap only in aggregate
-        () =>
+        "postings" -> (() =>
           Generations.write(
             maxTermDf.fold(postings)(cap => postings.where(col("__df") <= cap))
               .drop("__df"), // layout contract: per-generation df lives in dfparts
-            s"$outDir/postings", srcBatch, Seq("tb", Generations.Col), append),
+            s"$outDir/postings", srcBatch, Seq("tb", Generations.Col), append)),
         // dfparts keep ALL terms (pre-cap) so reads see true global df
-        () =>
+        "dfparts" -> (() =>
           Generations.write(
             postings.select(col("tb"), col("__term"), col("__df")).distinct(),
-            s"$outDir/dfparts", srcBatch, Seq("tb", Generations.Col), append),
-        () =>
+            s"$outDir/dfparts", srcBatch, Seq("tb", Generations.Col), append)),
+        "stats" -> (() =>
           Generations.write(statsRow.coalesce(1), s"$outDir/stats", srcBatch,
-            Seq(Generations.Col), append))
+            Seq(Generations.Col), append)))
     } finally postings.unpersist(false)
   }
 
@@ -561,8 +576,8 @@ object Bm25 {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val spark = queries.sparkSession
-    val (nBuckets, maxTermDf, termHash) = readPostingsMeta(postingsDir, spark)
+    val ix = IndexMeta(queries.sparkSession, postingsDir)
+    val (nBuckets, maxTermDf, termHash) = postingsMeta(ix)
     val bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       if (termHash == "u32md5") termBucket(_, nBuckets)
       else c => pmod(hash(c), lit(nBuckets)) // pre-r16 index: bucket as it was written
@@ -571,22 +586,19 @@ object Bm25 {
       explode(array_distinct(split(Cols.q(qTextCol), " "))).as("__term"))
       .distinct()
       .withColumn("tb", bucketOf(col("__term")))
-    val probedTbs = qTerms.select("tb").distinct().collect().map(_.getInt(0)).toSeq
-    val postings = spark.read
-      .parquet(s"$postingsDir/postings")
-      .where(col("tb").isin(probedTbs: _*))
-    val generational = postings.schema.fieldNames.contains(Generations.Col)
+    // the bounded probe set (one row per bucket) — one AQE-off job
+    val probedTbs = Jobs.collectFast(qTerms.select("tb").distinct()).map(_.getInt(0)).toSeq
+    val postings = ix.read("postings").where(col("tb").isin(probedTbs: _*))
+    val generational = ix.schema("postings").fieldNames.contains(Generations.Col)
     val (lists, stats) =
-      if (!generational) (postings, spark.read.parquet(s"$postingsDir/stats"))
+      if (!generational) (postings, ix.read("stats"))
       else {
-        val dfRes = spark.read
-          .parquet(s"$postingsDir/dfparts")
+        val dfRes = ix.read("dfparts")
           .where(col("tb").isin(probedTbs: _*))
           .groupBy("__term")
           .agg(sum(col("__df")).as("__df"))
         val dfKept = maxTermDf.fold(dfRes)(cap => dfRes.where(col("__df") <= cap))
-        val st = spark.read
-          .parquet(s"$postingsDir/stats")
+        val st = ix.read("stats")
           .agg(
             sum(col("__n")).as("__n"),
             (sum(col("__dlsum")) / sum(col("__n"))).as("__avgdl"))

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.{Cols, Generations}
+import graft.core.{Cols, Generations, IndexMeta, Jobs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -144,8 +144,10 @@ object Dedup {
   }
 
   /** Detect a signature index's hash family from its schema. */
-  private[graft] def indexFamily(index: DataFrame): SigHash =
-    index.schema.find(_.name == "sig0").map(_.dataType) match {
+  private[graft] def indexFamily(index: DataFrame): SigHash = indexFamily(index.schema)
+
+  private def indexFamily(schema: org.apache.spark.sql.types.StructType): SigHash =
+    schema.find(_.name == "sig0").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.StringType) => Md5
       case Some(org.apache.spark.sql.types.LongType)   => XxHash64
       case other =>
@@ -395,16 +397,26 @@ object Dedup {
     */
   private val BandedPartitions = Seq(Generations.Col, "band_idx", "band_bucket")
 
-  private[graft] final case class BandedMeta(bands: Int, rowsPerBand: Int, nBuckets: Int)
+  /** The banded layout contract: the sidecar's sizing plus the hash
+    * family its `bands` table's signature columns self-describe.
+    */
+  private[graft] final case class BandedMeta(
+      bands: Int,
+      rowsPerBand: Int,
+      nBuckets: Int,
+      family: SigHash) {
+    def nSigs: Int = bands * rowsPerBand
+  }
 
   private[graft] def readBandedMeta(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): BandedMeta = {
-    val r = spark.read
-      .parquet(s"$indexDir/meta")
-      .select("bands", "rows_per_band", "n_buckets")
-      .head()
-    BandedMeta(r.getInt(0), r.getInt(1), r.getInt(2))
+    val ix = IndexMeta(spark, indexDir)
+    BandedMeta(
+      ix.row.getAs[Int]("bands"),
+      ix.row.getAs[Int]("rows_per_band"),
+      ix.row.getAs[Int]("n_buckets"),
+      indexFamily(ix.schema("bands")))
   }
 
   /** A banded index directory is self-describing: the `meta` sidecar is
@@ -450,12 +462,8 @@ object Dedup {
         // explosion the coarse bucket count exists to avoid
         .repartition(col("band_idx"), col("band_bucket")),
       s"$outDir/bands", -1L, BandedPartitions, append = false)
-    Seq((bands, rowsPerBand, nBuckets))
-      .toDF("bands", "rows_per_band", "n_buckets")
-      .coalesce(1)
-      .write
-      .mode("overwrite")
-      .parquet(s"$outDir/meta")
+    IndexMeta.write(
+      Seq((bands, rowsPerBand, nBuckets)).toDF("bands", "rows_per_band", "n_buckets"), outDir)
   }
 
   /** Append an ingest batch's survivors to a banded index — a
@@ -470,11 +478,9 @@ object Dedup {
       textCol: String,
       indexDir: String,
       batchId: Long): Unit = {
-    val spark  = survivors.sparkSession
-    val meta   = readBandedMeta(spark, indexDir)
-    val n      = meta.bands * meta.rowsPerBand
-    val family = indexFamily(spark.read.parquet(s"$indexDir/bands"))
-    val sigs   = signatureProjection(survivors, idCol, textCol, n, family).drop("__id").distinct()
+    val meta = readBandedMeta(survivors.sparkSession, indexDir)
+    val sigs = signatureProjection(survivors, idCol, textCol, meta.nSigs, meta.family)
+      .drop("__id").distinct()
     Generations.write(
       toBandRows(sigs, meta.bands, meta.rowsPerBand, meta.nBuckets)
         // one task → one file per written directory (see writeBandedNearDupIndex)
@@ -514,10 +520,7 @@ object Dedup {
       simTau: Double = 0.75,
       maxBandDf: Option[Long] = Some(DefaultMaxShingleDf),
       beforeBatch: Option[Long] = None): DataFrame = {
-    val spark  = newDocs.sparkSession
-    val meta   = readBandedMeta(spark, indexDir)
-    val n      = meta.bands * meta.rowsPerBand
-    val family = indexFamily(spark.read.parquet(s"$indexDir/bands"))
+    val meta = readBandedMeta(newDocs.sparkSession, indexDir)
     // the batch's signature projection (digest + n salted minhash mins —
     // the dominant per-row work) is pinned ONCE: lazily it re-ran up to
     // 4× per ingest — under the probe collect, the band-candidate join,
@@ -528,7 +531,8 @@ object Dedup {
     // callers that must release the pin per batch ([[ingestAppendBanded]],
     // the streaming ingest) pass a caller-managed persist through
     // [[incrementalNearDupNewBandedSigs]] instead.
-    val newSigs = signatureProjection(newDocs, idCol, textCol, n, family).localCheckpoint(true)
+    val newSigs = signatureProjection(newDocs, idCol, textCol, meta.nSigs, meta.family)
+      .localCheckpoint(true)
     incrementalNearDupNewBandedSigs(newSigs, idCol, indexDir, meta, simTau, maxBandDf, beforeBatch)
   }
 
@@ -551,8 +555,8 @@ object Dedup {
       beforeBatch: Option[Long]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark    = newSigs.sparkSession
-    val n        = meta.bands * meta.rowsPerBand
-    val idxAll   = spark.read.parquet(s"$indexDir/bands")
+    val n        = meta.nSigs
+    val idxAll   = IndexMeta(spark, indexDir).read("bands")
     val matchMin = math.ceil(simTau * n - 1e-9).toInt
     val wBand = Window.partitionBy("band_idx", "band_val")
     def cut(df: DataFrame): DataFrame = maxBandDf match {
@@ -563,11 +567,9 @@ object Dedup {
     val newBands = cut(toBandRows(newSigs, meta.bands, meta.rowsPerBand, meta.nBuckets))
 
     // the probe set is bounded by bands × nBuckets rows — one tiny
-    // collect that turns the index read into STATIC partition pruning
-    val probe = newBands
-      .select("band_idx", "band_bucket")
-      .distinct()
-      .collect()
+    // AQE-off collect that turns the index read into STATIC partition
+    // pruning
+    val probe = Jobs.collectFast(newBands.select("band_idx", "band_bucket").distinct())
       .map(r => (r.getInt(0), r.getInt(1)))
     val dropped =
       if (probe.isEmpty) newSigs.limit(0).select(col("__id"))
@@ -647,11 +649,8 @@ object Dedup {
       simTau: Double = 0.75,
       maxBandDf: Option[Long] = Some(DefaultMaxShingleDf))(
       use: DataFrame => Unit = _ => ()): Unit = {
-    val spark  = newDocs.sparkSession
-    val meta   = readBandedMeta(spark, indexDir)
-    val n      = meta.bands * meta.rowsPerBand
-    val family = indexFamily(spark.read.parquet(s"$indexDir/bands"))
-    val sigs = signatureProjection(newDocs, idCol, textCol, n, family)
+    val meta = readBandedMeta(newDocs.sparkSession, indexDir)
+    val sigs = signatureProjection(newDocs, idCol, textCol, meta.nSigs, meta.family)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val survivors =

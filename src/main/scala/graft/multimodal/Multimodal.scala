@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.core.Generations
+import graft.core.{Generations, IndexMeta}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -268,8 +268,7 @@ object Multimodal {
     // directory — clustering would only serialize the decode stage
     Generations.write(decodeFeatures(media, dims), s"$outDir/features", srcBatch,
       Seq(Generations.Col), append = false)
-    Seq(Tuple1(dims)).toDF("dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$outDir/meta")
+    IndexMeta.write(Seq(Tuple1(dims)).toDF("dims"), outDir)
   }
 
   /** Incremental decode: ONLY the new batch's payloads are decoded (under
@@ -281,10 +280,13 @@ object Multimodal {
       featuresDir: String,
       media: DataFrame,
       srcBatch: Long): Unit =
-    writeFeaturesBatch(
-      featuresDir, media,
-      media.sparkSession.read.parquet(s"$featuresDir/meta").head().getInt(0),
-      srcBatch)
+    writeFeaturesBatch(featuresDir, media, featureDims(featuresDir, media.sparkSession), srcBatch)
+
+  /** The features table's recorded vector width. */
+  private[graft] def featureDims(
+      featuresDir: String,
+      spark: org.apache.spark.sql.SparkSession): Int =
+    IndexMeta(spark, featuresDir).row.getAs[Int]("dims")
 
   private def writeFeaturesBatch(
       featuresDir: String,
@@ -300,7 +302,7 @@ object Multimodal {
   def readFeatures(
       featuresDir: String,
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.read.parquet(s"$featuresDir/features").select("media_id", "features")
+    IndexMeta(spark, featuresDir).read("features").select("media_id", "features")
 
   /** Media near-dup through the ANN family (the r14 multimodal→search
     * bridge): decode → fixed-width feature histogram ([[decodeFeatures]])
@@ -381,7 +383,7 @@ object Multimodal {
       nTables: Int = graft.llm.AnnBuckets.Auto,
       nProbes: Int = 2,
       seed: Long = 42L): DataFrame = {
-    val dims  = spark.read.parquet(s"$featuresDir/meta").head().getInt(0)
+    val dims  = featureDims(featuresDir, spark)
     val feats = readFeatures(featuresDir, spark)
     // the Auto count runs over the parquet features table — metadata-cheap
     nearDupFromFeatures(feats, feats.count(), tau, dims, nBits, nTables, nProbes, seed)
@@ -402,7 +404,7 @@ object Multimodal {
       nTables: Int = graft.llm.AnnBuckets.Auto,
       nProbes: Int = 2,
       seed: Long = 42L): Unit = {
-    val dims = spark.read.parquet(s"$featuresDir/meta").head().getInt(0)
+    val dims = featureDims(featuresDir, spark)
     graft.llm.AnnBuckets.writeBucketsGen(
       readFeatures(featuresDir, spark), "media_id", "features", indexDir,
       nBits = nBits, dims = dims, nTables = nTables, seed = seed, nProbes = nProbes)
@@ -421,11 +423,11 @@ object Multimodal {
       media: DataFrame,
       srcBatch: Long): Unit = {
     val spark = media.sparkSession
-    Generations.require(spark, s"$indexDir/buckets", "AnnBuckets.writeBucketsGen")
+    graft.llm.AnnBuckets.requireGenerational(indexDir, spark)
     ingestMediaLoaded(
       featuresDir, indexDir,
       graft.llm.AnnBuckets.readBucketsMeta(indexDir, spark),
-      spark.read.parquet(s"$featuresDir/meta").head().getInt(0),
+      featureDims(featuresDir, spark),
       media, srcBatch)
   }
 
@@ -454,8 +456,8 @@ object Multimodal {
         "(writeMediaIndex derives its width from the features table, so indexes built " +
         "through it cannot drift)")
     writeFeaturesBatch(featuresDir, media, featureDims, srcBatch)
-    val justWritten = spark.read
-      .parquet(s"$featuresDir/features")
+    val justWritten = IndexMeta(spark, featuresDir)
+      .read("features")
       .where(col(Generations.Col) === srcBatch)
       .select("media_id", "features")
     graft.llm.AnnBuckets

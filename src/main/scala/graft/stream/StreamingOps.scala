@@ -603,7 +603,7 @@ object StreamingOps {
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark   = embeddings.sparkSession
     val buckets = s"$indexDir/buckets"
-    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
+    graft.llm.AnnBuckets.requireGenerational(indexDir, spark)
     // meta read + layout guard hoisted to per-loop costs (the
     // appendToIndexLoaded economics — ADVICE r14); what stays per batch
     // is ONE tiny geometry-stamp read, which fails the loop fast if
@@ -657,7 +657,7 @@ object StreamingOps {
     import graft.llm.AnnBuckets
     val spark   = embeddings.sparkSession
     val buckets = s"$indexDir/buckets"
-    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
+    AnnBuckets.requireGenerational(indexDir, spark)
     // meta and the row counter are VARS: the rebuild replaces both
     var meta = AnnBuckets.readBucketsMeta(indexDir, spark)
     var rowsPerTable = AnnBuckets.bucketOccupancy(indexDir, spark)
@@ -699,9 +699,9 @@ object StreamingOps {
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark   = media.sparkSession
     val buckets = s"$indexDir/buckets"
-    Generations.require(spark, buckets, "AnnBuckets.writeBucketsGen")
+    graft.llm.AnnBuckets.requireGenerational(indexDir, spark)
     val indexMeta   = graft.llm.AnnBuckets.readBucketsMeta(indexDir, spark)
-    val featureDims = spark.read.parquet(s"$featuresDir/meta").head().getInt(0)
+    val featureDims = graft.multimodal.Multimodal.featureDims(featuresDir, spark)
     Generations.ingestLoop(media, checkpoint, baseGen, Seq(buckets, s"$featuresDir/features")) {
       (batch, srcBatch) =>
         graft.multimodal.Multimodal

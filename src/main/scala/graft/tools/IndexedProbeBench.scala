@@ -73,7 +73,7 @@ object IndexedProbeBench {
       AnnBuckets.writeBuckets(emb, "vec_id", "embedding", idxDir,
         nTables = AnnBuckets.Auto, nProbes = nProbes)
       val tBuild = (System.nanoTime() - t0) / 1e9
-      val tables = spark.read.parquet(s"$idxDir/meta").head().getAs[Int]("nTables")
+      val tables = AnnBuckets.readBucketsMeta(idxDir, spark).nTables
       val bytes  = du(s"$idxDir/buckets")
       def queryOnce(): Set[(Long, Long)] = AnnBuckets
         .approxTopKIndexed(idxDir, queries, "vec_id", "embedding", k = 5)

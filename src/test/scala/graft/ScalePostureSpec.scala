@@ -368,4 +368,80 @@ class ScalePostureSpec extends AnyFunSuite {
       builds.exists(_.contains("TakeOrdered")),
       s"no join builds from the top-m candidate TakeOrdered subtree")
   }
+
+  /** Stage names ("<action> at <File>.scala:<line>") of every job `f`
+    * runs, in job order, under a job group of its own.
+    */
+  private def jobStages(group: String, aqe: Boolean = true)(f: => Unit): Seq[Seq[String]] = {
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+    spark.sparkContext.setJobGroup(group, "index job count")
+    try f
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+    val st = spark.sparkContext.statusTracker
+    st.getJobIdsForGroup(group).toSeq.sorted.map { j =>
+      st.getJobInfo(j).toSeq.flatMap(_.stageIds.toSeq.sorted.flatMap(s => st.getStageInfo(s).map(_.name)))
+    }
+  }
+
+  private val postingsDocs = Seq(
+    (1L, "the quick brown fox jumps over the lazy dog"),
+    (2L, "a lazy afternoon in the city with the dog"),
+    (3L, "spark window functions rank the rows"))
+
+  test("a warm postings search runs ONE job before its frame is drained: the bucket probe") {
+    import graft.llm.Bm25
+    import spark.implicits._
+    val dir = Files.createTempDirectory("bm25_jobs_search").toString
+    Bm25.writePostingsGen(postingsDocs.toDF("doc_id", "text"), "doc_id", "text", dir, nBuckets = 8)
+    val queries = Seq((1L, "lazy dog"), (2L, "spark rows")).toDF("q_id", "q_text")
+    Bm25.topKPerQueryIndexed(dir, queries, "q_id", "q_text", k = 3).collect() // warm the reader
+    // AQE stays on: the probe is a collectFast (one AQE-off job) and the
+    // meta row and the three table schemas come from the reader
+    val jobs = jobStages("bm25-search-jobs") {
+      Bm25.topKPerQueryIndexed(dir, queries, "q_id", "q_text", k = 3)
+    }
+    assert(jobs.size == 1, s"warm topKPerQueryIndexed ran ${jobs.size} jobs: $jobs")
+  }
+
+  test("a warm postings append runs no job before its postings pin") {
+    import graft.llm.Bm25
+    import spark.implicits._
+    val dir = Files.createTempDirectory("bm25_jobs_append").toString
+    val docs = postingsDocs.toDF("doc_id", "text")
+    Bm25.writePostingsGen(docs, "doc_id", "text", dir, nBuckets = 8)
+    Bm25.appendToPostings(dir, docs, "doc_id", "text", srcBatch = 1L) // warm the reader
+    // AQE off: one job per action — the pin's count, then the three sink writes
+    val jobs = jobStages("bm25-append-jobs", aqe = false) {
+      Bm25.appendToPostings(dir, docs, "doc_id", "text", srcBatch = 2L)
+    }
+    assert(jobs.headOption.exists(_.exists(_.startsWith("count at Bm25.scala"))),
+      s"the first job must be the postings pin: $jobs")
+    assert(jobs.size == 4, s"pin + three sink writes, no meta or schema job: $jobs")
+  }
+
+  test("a warm banded ingest step runs no metadata job") {
+    import graft.llm.Dedup
+    import spark.implicits._
+    val dir = Files.createTempDirectory("banded_jobs").toString
+    Dedup.writeBandedNearDupIndex(postingsDocs.toDF("doc_id", "text"), "doc_id", "text", dir,
+      bands = 4, rowsPerBand = 2, nBuckets = 4)
+    def batch(id: Long) = Seq((10L + id, s"the quick brown fox jumps over the lazy dog $id"),
+      (20L + id, s"entirely new words arrive in batch $id")).toDF("doc_id", "text")
+    Dedup.ingestAppendBanded(batch(0L), "doc_id", "text", dir, batchId = 0L)() // warm the reader
+    val jobs = jobStages("banded-ingest-jobs", aqe = false) {
+      Dedup.ingestAppendBanded(batch(1L), "doc_id", "text", dir, batchId = 1L)()
+    }
+    // the band-bucket probe, the append's broadcasts and its write: a meta
+    // row or a schema read would show as a `head at` or a non-write
+    // `parquet at` job
+    val meta = jobs.flatten.filter(n =>
+      n.startsWith("head at") || (n.startsWith("parquet at") && !n.contains("Generations.scala")))
+    assert(meta.isEmpty, s"metadata jobs in a warm ingest step: $jobs")
+    assert(jobs.headOption.exists(_.forall(_.startsWith("collect at Jobs.scala"))),
+      s"the first job must be the band-bucket probe: $jobs")
+  }
 }

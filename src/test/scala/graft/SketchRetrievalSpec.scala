@@ -708,6 +708,33 @@ class SketchRetrievalSpec extends AnyFunSuite {
       s"over-cap terms (within-gen AND summed-across-gens) must retrieve nothing: $got")
   }
 
+  test("generational postings: a failed sink is named after every sibling write settles") {
+    import graft.llm.Bm25
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("bm25_sink_fail").toString
+    Bm25.writePostingsGen(corpus.toDF("doc_id", "text"), "doc_id", "text", dir, nBuckets = 8)
+    // a regular file where the stats table belongs: that sink cannot write
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(dir, "stats"), true)
+    fs.create(new Path(dir, "stats")).close()
+    val docsB = Seq((6L, "new york pizza beats the lazy dog pizza")).toDF("doc_id", "text")
+    val e = intercept[IllegalStateException] {
+      Bm25.appendToPostings(dir, docsB, "doc_id", "text", srcBatch = 1L)
+    }
+    assert(e.getMessage.contains("failed in 1 of 3 sinks: stats ("), e.getMessage)
+    assert(e.getCause != null, "the failed sink's own error must be kept as the cause")
+    // the sibling writes had finished when the error surfaced: their
+    // generation is committed and no staging directory is left to race a
+    // caller's replay
+    Seq("postings", "dfparts").foreach { t =>
+      assert(spark.read.parquet(s"$dir/$t").where(col("src_batch") === 1L).count() > 0,
+        s"$t generation 1 must be committed")
+      val staging = fs.listStatus(new Path(dir, t)).map(_.getPath.getName)
+        .filter(n => n.startsWith(".spark-staging") || n == "_temporary")
+      assert(staging.isEmpty, s"$t still staging: ${staging.mkString(", ")}")
+    }
+  }
+
   test("generational postings guards: build-once layout rejected, probed scans prune") {
     import graft.llm.Bm25
     val docs    = corpus.toDF("doc_id", "text")
