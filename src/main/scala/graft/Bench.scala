@@ -9,9 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Methodology matches BASELINE.md exactly ("median of 3 runs, warm data"):
   * one untimed warm-up pass (JVM/codegen/page-cache warm-up — "warm data"),
   * then three timed rounds per case, report the per-case MEDIAN. Every case
-  * is forced through a noop write so Catalyst cannot prune the projected
-  * expressions or final sort (`.count()` would time projection queries as
-  * bare scans). Cases run in sorted name order.
+  * is drained through its executed plan (every row counted) so Catalyst
+  * cannot prune the projected expressions or final sort (`.count()` would
+  * time projection queries as bare scans). Cases run in sorted name order.
   *
   * Output hygiene (round-1 driver capture truncated the line): timings are
   * rounded to 4 decimals, and the full JSON is ALSO written to the file
@@ -39,16 +39,12 @@ object Bench {
   // q0*/q4* A/B the drain cut a further 1.1 s off the case-major subset
   // total (7.68 → 6.61 s, ~56 ms/case, no per-case min worse). With ~100
   // of the 140 cases under a second, that fixed overhead was ~1/10 of
-  // their measured "cost". SPARK_GRAFT_BENCH_FORCE=noop restores the old
-  // path for A/B.
-  private val forceMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORCE", "drain")
-  private def force(df: DataFrame): Unit =
-    if (forceMode == "noop") df.write.format("noop").mode("overwrite").save()
-    else {
-      val _ = df.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
-      }.sum()
-    }
+  // their measured "cost".
+  private[graft] def force(df: DataFrame): Unit = {
+    val _ = df.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L; while (it.hasNext) { it.next(); n += 1 }; Iterator.single(n)
+    }.sum()
+  }
 
   /** 1/5/15-min load averages ("-" off Linux): recorded at bench start and
     * end so a contended machine is visible in the JSON itself.
@@ -165,12 +161,7 @@ object Bench {
     // medians 10.32 → 7.68 s total under the same noop force (the old
     // medians were carrying cross-case cache pollution, not query cost),
     // NO per-case min worse (sum of mins also dropped).
-    // SPARK_GRAFT_BENCH_ORDER=round restores the old order for A/B.
-    val roundMajor = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("round")
-    val schedule =
-      if (roundMajor) for (r <- 1 to rounds; c <- cases) yield c
-      else for (c <- cases; r <- 1 to rounds) yield c
-    for ((name, run) <- schedule) {
+    for ((name, run) <- cases; _ <- 1 to rounds) {
       val t0 = System.nanoTime()
       // a failed round contributes NO timing (time-to-failure would read as
       // misleadingly fast); the case is flagged in the JSON "errors" list
@@ -228,11 +219,12 @@ object Bench {
     } yield s"""{"pipeline_e2e_median":${r4(pipeMed)},"pipeline_e2e_min":${r4(
         pipeMin)},"baseline_sec":${r4(base)},"ratio_median":${r4(pipeMed / base)},"ratio_min":${r4(
         pipeMin / base)},"bound":2.0,"pass":${pipeMed / base <= 2.0}}""").getOrElse("null")
-    // every appended record names its measurement mode: force (drain|noop)
-    // and order (case|round) both move reported times ~25%+ (ADVICE r12),
-    // so a BENCH.out line must be self-describing or historical trend
-    // comparisons silently mix methodologies
-    val mode = s""""force":"$forceMode","order":"${if (roundMajor) "round" else "case"}""""
+    // every appended record names its measurement mode: older BENCH.out
+    // lines also hold noop-write forces and round-major orders, and each
+    // moves reported times ~25%+ (ADVICE r12), so a line must be
+    // self-describing or historical trend comparisons silently mix
+    // methodologies
+    val mode = """"force":"drain","order":"case""""
     val json =
       s"""{"record":"total","metric":"total","value":${r4(total)},"unit":"sec",$mode,"queries":$qs,"mins":$mins,"gate":$gate,"errors":$errs,"loadavg":$load,"sf":"$sfDir"}"""
     val minsLine =

@@ -212,16 +212,17 @@ object AnnBuckets {
     * join emits BOTH directions of each pair (a×b with a ≠ b), so
     * consumers get anchor→neighbour rows without a symmetrize explode.
     *
-    * One self-join per table, unioned — deliberately NOT the fused
-    * single-join form ([[candidatePairsFused]]): an A/B at sf10
-    * (n = 200 k, auto bits = 11, tables = 13, `tools/FusionProbe`)
-    * measured the per-table union at 94–125 s vs the fused join's
-    * 164–174 s for the identical 371 M-pair output, and the fusion
-    * regressed production `SemDedup.keepFlagsApprox` 9.8–14.9 s →
-    * 45–53 s. Fewer jobs lost to one oversized sort: the fused form
-    * sorts nTables·n embedding-carrying rows per join side in a single
-    * exchange, while the per-table joins each sort n rows — and at
-    * scale the sort, not the job count, is the bottleneck.
+    * One self-join per table, unioned — deliberately NOT one fused
+    * self-join over a posexplode under `tb = tbl · 2^bits + bucket`: at
+    * sf10 (n = 200 k, auto bits = 11, tables = 13; BENCH_SF1.md
+    * "Round-13: LSH candidate-mining fusion") the per-table union took
+    * 94–125 s vs the fused join's 164–174 s for the identical 371 M-pair
+    * output, and the fusion regressed production
+    * `SemDedup.keepFlagsApprox` 9.8–14.9 s → 45–53 s. Fewer jobs lost to
+    * one oversized sort: the fused form sorts nTables·n
+    * embedding-carrying rows per join side in a single exchange, while
+    * the per-table joins each sort n rows — and at scale the sort, not
+    * the job count, is the bottleneck.
     *
     * @param e (vec_id, emb: array&lt;double&gt;, nrm) — the normalized base
     *          projection
@@ -407,47 +408,6 @@ object AnnBuckets {
       .dropDuplicates("a_id", "b_id")
   }
 
-  /** The fused alternative to [[candidatePairs]]: all `nTables` tables
-    * ride ONE self-join via a `posexplode` projection under the combined
-    * key `tb = tbl · 2^bits + bucket` (the [[writeBuckets]] layout). Kept
-    * because the pair-set parity is spec-pinned and the measurement is a
-    * real finding (see [[candidatePairs]]): same output, 1.4–1.8× slower
-    * at sf10 because one exchange sorting nTables·n embedding-carrying
-    * rows costs more than nTables sorts of n rows each. Not used by any
-    * production path.
-    */
-  private[graft] def candidatePairsFused(
-      e: DataFrame,
-      bits: Int,
-      dims: Int,
-      nTables: Int,
-      seed: Long): DataFrame = {
-    val exploded = e.select(
-      posexplode(array((0 until nTables).map(t =>
-        bucketCol(col("emb"), bits, dims, seed + t)): _*)).as(Seq("tbl", "bucket")),
-      col("vec_id"),
-      col("emb"),
-      col("nrm"))
-      .select(
-        (col("tbl") * (1 << bits) + col("bucket")).as("tb"),
-        col("vec_id"),
-        col("emb"),
-        col("nrm"))
-    val a = exploded.select(
-      col("tb"), col("vec_id").as("a_id"), col("emb").as("a_emb"), col("nrm").as("a_nrm"))
-    val b = exploded.select(
-      col("tb"), col("vec_id").as("b_id"), col("emb").as("b_emb"), col("nrm").as("b_nrm"))
-    a.join(b, Seq("tb")).where(col("a_id") =!= col("b_id"))
-      .select(
-        col("a_id"),
-        col("b_id"),
-        round(dot(col("a_emb"), col("b_emb")) / (col("a_nrm") * col("b_nrm")), 6).as("cos_sim"))
-      .dropDuplicates("a_id", "b_id")
-  }
-
-  /** One row per (table, bucket) with the combined partition key
-    * `tb = tbl · 2^nBits + bucket`.
-    */
   /** Long-id normalized base projection shared by the persisted-index
     * writer and both query-side bucketings.
     */
@@ -456,6 +416,9 @@ object AnnBuckets {
       .select(Cols.q(idCol).cast("long").as("vec_id"), Cols.q(embCol).cast("array<double>").as("emb"))
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
 
+  /** One row per (table, bucket) with the combined partition key
+    * `tb = tbl · 2^nBits + bucket`.
+    */
   private[graft] def bucketedRows(
       df: DataFrame,
       idCol: String,

@@ -293,7 +293,8 @@ object Bpe {
     * linear scans of the doc string, not k array rebuilds.
     *
     * DELIBERATELY not ported to the token-table kernel (VERDICT r12
-    * item 7, measured by `tools/BpeEncodeProbe` at sf10 / 500 k docs):
+    * item 7; BENCH_SF1.md "Round-13: BPE train/encode split", sf10 /
+    * 500 k docs):
     * the encode half costs 1.6–1.8 s against the trainer's 8–13 s — a
     * shuffle-free single projection whose best-case port saves ~1 s
     * while adding a vocab dictionary collect, per-doc int re-encode,

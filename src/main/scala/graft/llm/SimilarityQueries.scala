@@ -923,8 +923,8 @@ object SimilarityQueries {
     * with the corpus (the declared q120/q130 clause) — at 2 M vectors
     * it is ~10¹¹ pairs and excluded from the sf10 sweep like them. The
     * production `Auto` sizing holds bucket occupancy (and therefore
-    * per-vector candidate count) constant; `tools/SemDedupProbe
-    * <dir> approxOnly` measures that path at any scale.
+    * per-vector candidate count) constant; its sf10 cost is recorded in
+    * BENCH_SF1.md "Round-13: SemDedup crossover".
     */
   val q132SemDedupAnn: Declared = {
     val nBits   = 4

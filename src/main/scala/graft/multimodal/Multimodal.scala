@@ -485,9 +485,9 @@ object Multimodal {
       indexDir,
       // eager checkpoint: the indexed read evaluates its query frame once
       // per table (probe explosion) plus the probe-set collect — without
-      // pinning, a 100-media batch decoded 4× (measured in
-      // MediaFeatureBench); query batches are serve-sized by the indexed
-      // read's own probe-set bound, so materializing them is cheap
+      // pinning, a 100-media batch decoded 4× (BENCH_SF1.md "Round-15:
+      // persisted media features"); query batches are serve-sized by the
+      // indexed read's own probe-set bound, so materializing them is cheap
       decodeFeatures(queryMedia, dims).localCheckpoint(true),
       "media_id", "features", k)
   }

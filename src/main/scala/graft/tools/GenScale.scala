@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * (and thus lineitem joins and row counts) are unchanged, and the hot key
   * is printed so bench notes can name it.
   *
-  * Bench-only: the generated dir serves TimeOne/Bench at the new scale;
-  * correctness stays gated on the driver's own testdata.
+  * Bench-only: the generated dir serves `graft.Bench` (as
+  * `SPARK_GRAFT_SF_DIR`) at the new scale; correctness stays gated on the
+  * shipped testdata.
   *
   * Usage: GenScale <srcDir> <outDir> <factor> [--skew]
   */

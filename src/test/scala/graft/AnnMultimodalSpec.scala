@@ -82,8 +82,9 @@ class AnnMultimodalSpec extends AnyFunSuite {
   test("auto-sized ANN recall is gated at its measured operating point") {
     // the auto paths hold COST constant as n grows, so their recall is a
     // function of scale and must be gated at the measured point, not the
-    // fixed-size spec's (AnnScaleBench r10: auto recall at n=20k synthetic
-    // is 0.11 LSH / 0.22 IVF). Measured here across seeds {42, 7}:
+    // fixed-size spec's (BENCH_SF1.md "Round-10: ANN recall at sf1": auto
+    // recall at n=20k synthetic is 0.11 LSH / 0.22 IVF). Measured here
+    // across seeds {42, 7}:
     // LSH 0.440–0.457, IVF 0.429–0.464 — gates are measured-minus-margin
     for (seed <- Seq(42L, 7L)) {
       val lsh = AnnBuckets

@@ -247,6 +247,30 @@ class ScalePostureSpec extends AnyFunSuite {
       .foreach(j => assert(!plan.contains(j), s"q85 unexpectedly plans a $j"))
   }
 
+  test("q34 and q141 reuse exchanges in their final adaptive plans") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec        => s +: nodes(s.plan)
+      case other                    => other +: (other.children ++ other.subqueries).flatMap(nodes)
+    }
+    def reused(name: String): Int = {
+      val df = SparkEntry.queries(name)(spark, dir)
+      Bench.force(df) // AQE settles the final plan only once the query runs
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("isFinalPlan=true"), s"$name: plan not final:\n$plan")
+      nodes(plan).count(_.isInstanceOf[ReusedExchangeExec])
+    }
+    // q34: a shingle-keyed shuffle and the (b_id, sb) broadcast; q141: the
+    // distinct (q_id, term) exchange reused by the df-bounding semi-join
+    // (the same reuse plans/r17/*_executed.txt records at sf0.1)
+    val counts = Seq("q34_ngram_jaccard", "q141_bm25_multiquery").map(n => n -> reused(n)).toMap
+    assert(counts == Map("q34_ngram_jaccard" -> 2, "q141_bm25_multiquery" -> 1),
+      s"ReusedExchange nodes per final plan: $counts")
+  }
+
   test("q91 BM25 plans no token explode and ranks via TakeOrdered, not a global sort") {
     val plan = SparkEntry
       .queries("q91_bm25_topk")(spark, dir)

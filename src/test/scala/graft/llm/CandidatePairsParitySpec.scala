@@ -6,16 +6,13 @@ import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the fused single-join kernel ([[AnnBuckets.candidatePairsFused]],
-  * one posexplode + one self-join on `tb`) to the production per-table
-  * union ([[AnnBuckets.candidatePairs]]): the candidate-pair SET and every
-  * pair's cos_sim must be identical, at several table counts and seeds.
-  * Guards the fused form's key arithmetic (`tb = tbl · 2^bits + bucket`)
-  * against cross-table bucket collisions — the one way the two
-  * formulations could silently differ. The per-table form is production
-  * by measurement (see the candidatePairs scaladoc / tools/FusionProbe);
-  * this spec keeps the fused alternative honest should the tradeoff ever
-  * be re-measured.
+/** Pins the multi-probe LSH candidate kernel
+  * ([[AnnBuckets.candidatePairsMultiProbe]]) to the production per-table
+  * union ([[AnnBuckets.candidatePairs]]): with no probes the candidate-pair
+  * SET and every pair's cos_sim are identical, and with probes it is a
+  * symmetric superset. The per-table union itself is production by
+  * measurement (see the candidatePairs scaladoc and BENCH_SF1.md
+  * "Round-13: LSH candidate-mining fusion").
   */
 class CandidatePairsParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -61,25 +58,5 @@ class CandidatePairsParitySpec extends AnyFunSuite {
     val ids = mp.map(t => (t._1, t._2))
     assert(ids.forall { case (a, b) => ids.contains((b, a)) },
       "multi-probe pair set must contain both directions of every pair")
-  }
-
-  test("fused candidatePairs matches the per-table production kernel (pairs AND cos_sim)") {
-    for ((bits, tables, seed) <- Seq((4, 3, 42L), (5, 1, 7L), (3, 7, 1234L))) {
-      val fused = AnnBuckets
-        .candidatePairsFused(base, bits, 64, tables, seed)
-        .as[(Long, Long, Double)]
-        .collect()
-        .toSet
-      val production = AnnBuckets
-        .candidatePairs(base, bits, 64, tables, seed)
-        .as[(Long, Long, Double)]
-        .collect()
-        .toSet
-      assert(production.nonEmpty, s"no candidates at bits=$bits tables=$tables")
-      assert(
-        fused == production,
-        s"fused/per-table divergence at bits=$bits tables=$tables seed=$seed: " +
-          s"fusedOnly=${(fused -- production).take(3)} prodOnly=${(production -- fused).take(3)}")
-    }
   }
 }
