@@ -370,8 +370,9 @@ object Bench {
     // shutdown logging lands after them); build.sbt sets
     // run/outputStrategy := StdoutOutput so sbt passes them through bare
     // instead of wrapping them in an [info] prefix. The full line prints
-    // first, the compact line LAST — the capture window keeps the tail.
+    // first, the compact line LAST — the capture window keeps the tail;
+    // when everything fit, the full line IS the compact one and prints once.
     println(json)
-    println(compact)
+    if (compact ne json) println(compact)
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** The generational-table lifecycle every persisted index family shares
-  * (LSH buckets, IVF cells, IVFADC cells and drift rows, banded and flat
-  * near-dup signatures, BM25 postings/dfparts/stats, media features):
-  * a table is a parquet directory with a `src_batch=<g>` partition
-  * level, and each ingest batch owns exactly one generation `g`.
+  * (LSH buckets, IVF cells, IVFADC cells and drift rows, banded near-dup
+  * signatures, BM25 postings/dfparts/stats, media features): a table is
+  * a parquet directory with a `src_batch=<g>` partition level, and each
+  * ingest batch owns exactly one generation `g`. This is the only layout
+  * the families write and read.
   *
   *  - A bootstrap writes with an explicit STATIC overwrite, whatever the
   *    session's `partitionOverwriteMode`: it replaces every generation,
@@ -58,16 +59,14 @@ object Generations {
       .parquet(table)
 
   /** Fail fast when `table`, of `schema`, lacks the [[Col]] partition
-    * level (a single-generation or build-once layout, which stays valid
-    * for serving but cannot take appends), naming the family's
-    * generational writer `rebuildWith`.
+    * level (a table written by hand or by an older single-generation
+    * writer), naming the family's writer `rebuildWith`.
     */
   def require(schema: StructType, table: String, rebuildWith: String): Unit =
     Predef.require(
       schema.fieldNames.contains(Col),
-      s"$table uses a single-generation layout (no $Col partition level); ingest needs the " +
-        s"generational layout — rebuild it with $rebuildWith (the single-generation output " +
-        "stays valid for serving, only ingest requires the generational layout)")
+      s"$table uses a single-generation layout (no $Col partition level); the index needs " +
+        s"the generational layout — rebuild it with $rebuildWith")
 
   /** [[require]] over `table`'s schema as read now — for the families
     * without a meta sidecar ([[IndexMeta]] holds the others' schemas).

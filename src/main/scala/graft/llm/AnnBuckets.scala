@@ -628,11 +628,9 @@ object AnnBuckets {
           "the swap")
     }
 
-  /** The ONE bits-resolution rule for persisted writers ([[writeBuckets]],
-    * [[writeBucketsGen]], [[rebuildBucketsGen]]): auto bits clamp at
-    * [[MaxPersistedBits]] and the clamp is LOGGED — previously
-    * writeBucketsGen clamped silently while writeBuckets logged
-    * (ADVICE r14 #3).
+  /** The ONE bits-resolution rule for persisted writers
+    * ([[writeBucketsGen]], [[rebuildBucketsGen]]): auto bits clamp at
+    * [[MaxPersistedBits]] and the clamp is LOGGED (ADVICE r14 #3).
     */
   private def resolvePersistedBits(
       nBits: Int,
@@ -671,7 +669,22 @@ object AnnBuckets {
     gid
   }
 
-  /** `nProbes` is the PROBE BUDGET the index is sized for and served
+  /** Persist the LSH index in the GENERATIONAL layout
+    * (`buckets/tb=<id>/src_batch=<b>/…`) plus its meta sidecar — the
+    * q135/q125 ingest contract for the LSH index family:
+    * [[appendToBuckets]] adds a batch by writing ONLY that batch's
+    * partitions, history is never re-read or re-bucketed. Unlike IVFADC
+    * there is NO quantizer to drift: the hyperplanes are seed-derived
+    * constants, data-independent for the index's life, so appends are
+    * exact forever. What DOES drift is the SIZING — `autoBits`/`autoTables`
+    * were computed for the bootstrap corpus, and bucket occupancy grows
+    * linearly as batches append; watch [[bucketOccupancy]] (the
+    * q136-monitor analog for this family) and run [[rebuildBucketsGen]]
+    * when [[rebuildDue]] fires over it. Static overwrite on the
+    * bootstrap for the same reason as [[IvfPq.writeIndexGen]]: a rebuild
+    * must replace every generation.
+    *
+    * `nProbes` is the PROBE BUDGET the index is sized for and served
     * with: it is recorded in the meta sidecar, [[approxTopKIndexed]]
     * applies it on every read (each query probes its own bucket plus the
     * `nProbes` smallest-|margin| flip buckets per table — the q137 rule),
@@ -680,68 +693,8 @@ object AnnBuckets {
     * one at the same recall target (measured: t×2-probe matched plain
     * autoTables recall at ~⅓ the tables — BENCH_SF1.md). Default is the
     * r14 probed-auto operating point; pass `nTables = 2, nProbes = 0`
-    * for a pre-r14 plain index (old meta sidecars without the column
-    * read as nProbes = 0, so existing indexes serve unchanged).
-    */
-  def writeBuckets(
-      emb: DataFrame,
-      idCol: String,
-      embCol: String,
-      outDir: String,
-      nBits: Int = Auto,
-      dims: Int = 64,
-      nTables: Int = Auto,
-      seed: Long = 42L,
-      nProbes: Int = 2): Unit = {
-    val spark = emb.sparkSession
-    val n      = if (nBits == Auto || nTables == Auto) emb.count() else 0L
-    val bits   = resolvePersistedBits(nBits, n, "writeBuckets")
-    val tables = resolveTables(n, nTables, nProbes)
-    require(nProbes >= 0 && nProbes <= bits,
-      s"nProbes=$nProbes must be in [0, bits=$bits] — the recorded probe budget is applied " +
-        "on every index read, so an over-budget index would fail at read time instead")
-    // meta + stamp FIRST (the IvfPq posture, ADVICE r15 #2): a
-    // re-bootstrap over a LIVE index then fails every racing read fast —
-    // new meta vs old buckets marker mismatches, and once the buckets
-    // overwrite deletes the old marker the marker-missing state fails
-    // too (requireGeomConsistent); the old buckets-first order had the
-    // overwrite delete `_geom` so readers silently SKIPPED the check and
-    // bucketed queries with stale sizing against the new layout
-    val gid = writeMeta(spark, outDir, bits, dims, tables, seed, nProbes, epoch = 0L)
-    bucketedRows(emb, idCol, embCol, bits, dims, tables, seed)
-      // cluster rows by the partition key BEFORE the partitioned write:
-      // without it every write task emits a file into every `tb`
-      // directory (tasks × tables · 2^bits files — measured 327 k files
-      // and a 586 s build for the 5-table probed index at n = 200 k,
-      // 852 k and 1 758 s for the 13-table plain one); clustered, each
-      // directory gets its owning tasks' files only. One bounded shuffle
-      // of (id, emb, nrm) rows buys a ~file-count-proportional write —
-      // the same small-files posture the banded near-dup index write
-      // adopted in r13 (A/B in BENCH_SF1.md round-14 late section)
-      .repartition(col("tb"))
-      .write
-      .partitionBy("tb")
-      .mode("overwrite")
-      .parquet(s"$outDir/buckets")
-    writeGeomMarker(s"$outDir/buckets", gid, spark,
-      Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
-    // the sidecar went first: drop a schema a reader took before the table
-    IndexMeta.invalidate(spark, outDir)
-  }
-
-  /** [[writeBuckets]] in the GENERATIONAL layout
-    * (`buckets/tb=<id>/src_batch=<b>/…`) — the q135/q125 ingest contract
-    * for the LSH index family: [[appendToBuckets]] adds a batch by
-    * writing ONLY that batch's partitions, history is never re-read or
-    * re-bucketed. Unlike IVFADC there is NO quantizer to drift: the
-    * hyperplanes are seed-derived constants, data-independent for the
-    * index's life, so appends are exact forever. What DOES drift is the
-    * SIZING — `autoBits`/`autoTables` were computed for the bootstrap
-    * corpus, and bucket occupancy grows linearly as batches append;
-    * watch [[bucketOccupancy]] (the q136-monitor analog for this family)
-    * and run [[rebuildBucketsGen]] when [[rebuildDue]] fires over it.
-    * Static overwrite on the bootstrap for the same reason as
-    * [[IvfPq.writeIndexGen]]: a rebuild must replace every generation.
+    * for a plain index (old meta sidecars without the column read as
+    * nProbes = 0, so existing indexes serve unchanged).
     */
   def writeBucketsGen(
       emb: DataFrame,
@@ -760,16 +713,30 @@ object AnnBuckets {
     val tables = resolveTables(n, nTables, nProbes)
     require(nProbes >= 0 && nProbes <= bits,
       s"nProbes=$nProbes must be in [0, bits=$bits] — the recorded probe budget is applied " +
-        "on every index read")
-    // meta + stamp FIRST — see writeBuckets (ADVICE r15 #2); both
-    // bootstrap writers share the fail-fast-on-every-mixed-state order
+        "on every index read, so an over-budget index would fail at read time instead")
+    // meta + stamp FIRST (the IvfPq posture, ADVICE r15 #2): a
+    // re-bootstrap over a LIVE index then fails every racing read fast —
+    // new meta vs old buckets marker mismatches, and once the buckets
+    // overwrite deletes the old marker the marker-missing state fails
+    // too (requireGeomConsistent); a buckets-first order would have the
+    // overwrite delete `_geom` so readers silently SKIPPED the check and
+    // bucketed queries with stale sizing against the new layout
     val gid = writeMeta(spark, outDir, bits, dims, tables, seed, nProbes, epoch = 0L)
     Generations.write(
-      bucketedRows(emb, idCol, embCol, bits, dims, tables, seed).repartition(col("tb")),
+      bucketedRows(emb, idCol, embCol, bits, dims, tables, seed)
+        // cluster rows by the partition key BEFORE the partitioned write:
+        // without it every write task emits a file into every `tb`
+        // directory (tasks × tables · 2^bits files — measured 327 k files
+        // and a 586 s build for the 5-table probed index at n = 200 k,
+        // 852 k and 1 758 s for the 13-table plain one); clustered, each
+        // directory gets its owning tasks' files only (A/B in
+        // BENCH_SF1.md round-14 late section)
+        .repartition(col("tb")),
       s"$outDir/buckets", srcBatch, Seq("tb", Generations.Col), append = false)
     writeGeomMarker(s"$outDir/buckets", gid, spark,
       Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
-    IndexMeta.invalidate(spark, outDir) // as in writeBuckets
+    // the sidecar went first: drop a schema a reader took before the table
+    IndexMeta.invalidate(spark, outDir)
   }
 
   /** Incremental LSH-index ingest: bucket a NEW batch under the index's
@@ -988,7 +955,7 @@ object AnnBuckets {
         round(avg(col("occ")), 2).as("mean_occ"),
         max(col("occ")).as("max_occ"))
 
-  /** The probed query side of a [[writeBuckets]] index read: each query
+  /** The probed query side of a persisted-index read: each query
     * vector's own bucket PLUS its `nProbes` flip-neighbour buckets per
     * table (the [[probesFrame]] kernel — q137's hash-oracled rule),
     * under the combined `tb` key. At nProbes = 0 this degenerates to the
@@ -1022,17 +989,6 @@ object AnnBuckets {
       .reduce(_ unionByName _)
   }
 
-  /** Probe a [[writeBuckets]] index with a query batch: re-bucket the
-    * queries from the persisted parameters — applying the index's
-    * recorded PROBE BUDGET, so each query reads its own bucket plus its
-    * `nProbes` flip-neighbour buckets per table (the q137 multi-probe
-    * rule; r14) — collect the bounded probed (table, bucket) set,
-    * ≤ |queries| · nTables · (nProbes + 1) keys, the online-batch use
-    * case this index exists for, and apply it as a STATIC partition
-    * filter, so the index scan reads only the probed buckets' files. For
-    * a full-corpus self-join prefer [[approxTopK]], whose single-run
-    * bucketing avoids the probe-set collect.
-    */
   /** Probe-set collect ceiling for [[approxTopKIndexed]] — the bound is
     * queries × nTables × (nProbes + 1) int keys, which the serve-batch
     * use case keeps tiny; a full-corpus frame passed as `queries` blows
@@ -1042,6 +998,18 @@ object AnnBuckets {
     */
   val MaxProbedBuckets: Int = 1 << 16
 
+  /** Probe a [[writeBucketsGen]] index with a query batch: re-bucket the
+    * queries from the persisted parameters — applying the index's
+    * recorded PROBE BUDGET, so each query reads its own bucket plus its
+    * `nProbes` flip-neighbour buckets per table (the q137 multi-probe
+    * rule; r14) — collect the bounded probed (table, bucket) set,
+    * ≤ |queries| · nTables · (nProbes + 1) keys, the online-batch use
+    * case this index exists for, and apply it as a STATIC partition
+    * filter on the outer `tb` level, so the index scan reads only the
+    * probed buckets' files across every generation. For a full-corpus
+    * self-join prefer [[approxTopK]], whose single-run bucketing avoids
+    * the probe-set collect.
+    */
   def approxTopKIndexed(
       indexDir: String,
       queries: DataFrame,

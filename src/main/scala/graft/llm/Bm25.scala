@@ -100,9 +100,9 @@ object Bm25 {
     * the right one when the query SET is itself a table (retrieval
     * evaluation, query mining, batch search): per-term document postings
     * (term, doc, tf, dl) feed the df side and the contribution join (a
-    * deployment that searches repeatedly uses
-    * [[writePostings]]/[[topKPerQueryIndexed]], the build-once persisted
-    * form, instead) — each
+    * deployment that searches repeatedly persists the postings once with
+    * [[writePostingsGen]] and searches them with [[topKPerQueryIndexed]]
+    * instead) — each
     * query's DISTINCT terms join them on `term` (a query only ever meets
     * the docs containing its terms, never the corpus), and per-(query,
     * doc) scores rank inside a per-query window. Cost is
@@ -158,7 +158,7 @@ object Bm25 {
     val dfKept = maxTermDf.fold(df)(cap => df.where(col("__df") <= cap))
     // The df frame is ALWAYS bounded to the query-term set before it is
     // broadcast (a vocabulary-sized broadcast is an executor OOM at 10⁸+
-    // terms, the r16 writePostings lesson) — but by a broadcast-semi
+    // terms, the r16 postings-writer lesson) — but by a broadcast-semi
     // probe of the AGGREGATED df rows (vocab-count rows, one probe pass)
     // against the same qTerms broadcast the contribution join builds
     // (one exchange, reused), never by probing every token row.
@@ -307,16 +307,18 @@ object Bm25 {
 
   /** Build parameters from the meta sidecar, READ BY NAME (a positional
     * read would silently swap fields on a schema change — ADVICE r15 #4):
-    * (nBuckets, maxTermDf as Option, termHash). Pre-r16 indexes lack the
-    * `termHash` column and were bucketed with Spark's Murmur3 — readers
-    * must bucket query terms the same way their index was written.
+    * (nBuckets, maxTermDf as Option). Readers and appends bucket query
+    * terms by [[termBucket]], so an index bucketed any other way (a
+    * pre-r16 sidecar has no `termHash` and was bucketed with Spark's
+    * Murmur3) is refused here, for both.
     */
-  private def postingsMeta(ix: IndexMeta): (Int, Option[Long], String) = {
+  private def postingsMeta(ix: IndexMeta, postingsDir: String): (Int, Option[Long]) = {
+    val termHash = if (ix.has("termHash")) Some(ix.row.getAs[String]("termHash")) else None
+    require(termHash.contains("u32md5"),
+      s"postings at $postingsDir were not bucketed with u32md5 (sidecar termHash: " +
+        s"${termHash.getOrElse("absent")}) — rebuild via writePostingsGen")
     val cap = ix.row.getAs[Long]("maxTermDf")
-    (
-      ix.row.getAs[Int]("nBuckets"),
-      if (cap < 0) None else Some(cap),
-      if (ix.has("termHash")) ix.row.getAs[String]("termHash") else "murmur3")
+    (ix.row.getAs[Int]("nBuckets"), if (cap < 0) None else Some(cap))
   }
 
   private def writePostingsMeta(
@@ -330,84 +332,16 @@ object Bm25 {
       outDir)
   }
 
-  /** Persist the inverted postings — the build-once half the repeated-
-    * search deployment uses instead of re-exploding the corpus per call:
-    * posting rows (term, doc_id, tf, dl) with the per-term df
-    * DENORMALIZED on (no df join at query time), written as a
-    * term-HASH-bucketed partition layout (`postings/tb=<hash %
-    * nBuckets>/…`) so a query batch's term set prunes statically — the
-    * [[AnnBuckets.writeBuckets]] posture for the lexical family: a raw
-    * per-term partition layout would create one directory per vocabulary
-    * entry (millions at corpus scale), while the hash buckets bound the
-    * directory count outright. Corpus stats (N, avgdl) and the build
-    * parameters (nBuckets, df cap) ride sidecars; `maxTermDf` is applied
-    * at BUILD time, so stopword-grade postings never reach the disk at
-    * all.
-    *
-    * This layout FREEZES df on every posting row and the (N, avgdl)
-    * stats at build time — correct exactly as long as the corpus is
-    * static, which is this writer's contract: a corpus that grows uses
-    * [[writePostingsGen]]/[[appendToPostings]], where appends cannot
-    * mutate what earlier generations wrote because df/stats live as
-    * per-generation PARTIALS resolved at read.
-    */
-  def writePostings(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      nBuckets: Int = 256,
-      maxTermDf: Option[Long] = None): Unit = {
-    require(nBuckets >= 1 && nBuckets <= 4096,
-      s"nBuckets=$nBuckets out of range — the partition-dir count bound")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // ONE corpus pass for postings AND stats (r16 removed the second
-    // explode for df via the window count; r17 removes the second corpus
-    // SCAN for stats via the observed metric on the same pass — see
-    // [[observedPostings]]). The meta sidecar stays LAST: it is the
-    // layout's completion marker (readers route on it), so it must not
-    // become visible before the data tables exist.
-    // The repartition BY tb is the write-clustering exchange that already
-    // existed (one file per owning task per dir, the r14 rule); the
-    // window's ClusteredDistribution(tb, __term) is satisfied by it (tb
-    // is a function of __term), so the df count adds a sort within the
-    // already-shuffled partitions, not a new exchange.
-    val obs = org.apache.spark.sql.Observation()
-    val postings = observedPostings(docs, idCol, textCol, obs)
-      .withColumn("tb", termBucket(col("__term"), nBuckets))
-      .repartition(col("tb"))
-      .withColumn("__df",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy("tb", "__term")).cast("double"))
-    maxTermDf.fold(postings)(cap => postings.where(col("__df") <= cap))
-      .write
-      .partitionBy("tb")
-      .mode("overwrite")
-      .parquet(s"$outDir/postings")
-    // (N, avgdl) from the observed partials: avg = Σdl / #non-null-dl in
-    // ONE double division — the exact evaluation order of the old
-    // `avg("__dl")` aggregate (sum and count are integer-valued, exact).
-    val m = observedStats(obs)
-    val avgdl = Option(m("__dlsum")).map(s =>
-      s.asInstanceOf[Double] / m("__dlcnt").asInstanceOf[Long])
-    Seq((m("__n").asInstanceOf[Double], avgdl))
-      .toDF("__n", "__avgdl")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/stats")
-    writePostingsMeta(spark, outDir, nBuckets, maxTermDf)
-  }
-
   // ── generational postings (r16): the never-re-read-history ingest ───
   //
   // VERDICT r15 "what's missing" #1: the lexical family was the only
   // persisted index whose appends MUTATE existing rows' semantics — df
-  // and avgdl are corpus-global, so the build-once layout's denormalized
-  // df and frozen stats sidecar go stale the moment a document arrives.
-  // Design chosen (option (a) of the verdict's two): per-generation tf
-  // postings plus per-generation df PARTIALS and (n, Σdl) stats
-  // PARTIALS, resolved at query time — the sums are over INTEGER-VALUED
-  // doubles (counts and token counts), so they are exact in IEEE
+  // and avgdl are corpus-global, so a df denormalized onto the posting
+  // rows, or a frozen stats row, goes stale the moment a document
+  // arrives. Design chosen (option (a) of the verdict's two):
+  // per-generation tf postings plus per-generation df PARTIALS and
+  // (n, Σdl, #dl) stats PARTIALS, resolved at query time — the sums are
+  // over INTEGER-VALUED counts and token counts, so they are exact in IEEE
   // arithmetic regardless of generation count or order, and the resolved
   // df/N/avgdl equal a fresh build over the union bit-for-bit
   // (spec-pinned, and q144/q146 replay the whole ingest in DuckDB).
@@ -428,15 +362,22 @@ object Bm25 {
   // dfparts table keeps ALL terms (pre-cap) so the read-time filter can
   // see every term's true df.
 
-  /** [[writePostings]] in the GENERATIONAL layout — the q139/q140 ingest
-    * contract for the lexical family:
+  /** Persist the inverted postings — the build half the repeated-search
+    * deployment uses instead of re-exploding the corpus per call —
+    * as generation `srcBatch` of the lexical family's three tables:
     * `postings/tb=<b>/src_batch=<g>/` (term, doc_id, dl, tf),
     * `dfparts/tb=<b>/src_batch=<g>/` (term, per-generation df), and
-    * `stats/src_batch=<g>/` (n, Σdl) — [[appendToPostings]] adds a batch
-    * by writing ONLY that batch's partitions, and
-    * [[topKPerQueryIndexed]] resolves df/N/avgdl by summing the partials
-    * of the probed buckets at read. Static overwrite on the bootstrap: a
-    * re-bootstrap must replace every generation.
+    * `stats/src_batch=<g>/` (n, Σdl, #non-null dl), plus the `meta`
+    * sidecar (nBuckets, df cap, term hash) written LAST as the layout's
+    * completion marker. `tb` is a term-HASH bucket so a query batch's
+    * term set prunes statically: a raw per-term partition layout would
+    * create one directory per vocabulary entry (millions at corpus
+    * scale), while the hash buckets bound the directory count outright.
+    * [[appendToPostings]] adds a batch by writing ONLY that batch's
+    * partitions, and [[topKPerQueryIndexed]] resolves df/N/avgdl by
+    * summing the partials of the probed buckets at read. Static
+    * overwrite on the bootstrap: a re-bootstrap must replace every
+    * generation.
     */
   def writePostingsGen(
       docs: DataFrame,
@@ -470,10 +411,7 @@ object Bm25 {
       srcBatch: Long): Unit = {
     val ix = IndexMeta(docs.sparkSession, postingsDir)
     Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
-    val (nBuckets, maxTermDf, termHash) = postingsMeta(ix)
-    require(termHash == "u32md5",
-      s"postings at $postingsDir were bucketed with $termHash, not the generational " +
-        "layout's u32md5 — rebuild via writePostingsGen")
+    val (nBuckets, maxTermDf) = postingsMeta(ix, postingsDir)
     writeGenTables(docs, idCol, textCol, postingsDir, nBuckets, maxTermDf, srcBatch, append = true)
   }
 
@@ -494,7 +432,7 @@ object Bm25 {
     // further): the batch's postings are computed once (tb-clustered,
     // per-term df attached by a window count — {tb} ⊆ {tb, __term} so the
     // window reuses the repartition's clustering, no extra exchange) and
-    // pinned; the (n, Σdl) stats partial rides the SAME pass as an
+    // pinned; the (n, Σdl, #dl) stats partial rides the SAME pass as an
     // observed metric instead of a second corpus scan; and the three
     // table writes run CONCURRENTLY (independent sinks, guide §2.6) so
     // the write chain costs ~the slowest write, not the sum.
@@ -525,8 +463,10 @@ object Bm25 {
       // empty batch's observation may carry no stats at all.
       if (postings.count() == 0L) return
       val m = observedStats(obs)
-      val statsRow = Seq((m("__n").asInstanceOf[Double], Option(m("__dlsum")).map(_.asInstanceOf[Double])))
-        .toDF("__n", "__dlsum")
+      val statsRow = Seq((
+        m("__n").asInstanceOf[Double],
+        Option(m("__dlsum")).map(_.asInstanceOf[Double]),
+        m("__dlcnt").asInstanceOf[Long])).toDF("__n", "__dlsum", "__dlcnt")
       inParallel(
         // within-generation cap: a term over the cap INSIDE one generation
         // is over the global cap a fortiori (df only grows) — its postings
@@ -549,24 +489,23 @@ object Bm25 {
     } finally postings.unpersist(false)
   }
 
-  /** [[topKPerQuery]] against a persisted postings index (either
-    * layout): the query batch's DISTINCT terms map to their hash
-    * buckets, the bounded bucket set (≤ nBuckets ≤ 4096 after distinct —
-    * key-space-bounded like the IVF probed-cell collect, no size guard
-    * needed) applies as a STATIC partition filter, and the scan reads
-    * only those buckets' files — never the corpus-wide postings.
-    * Identical output to the in-memory path at the same df cap
-    * (spec-pinned parity; q145/q146 replay both layouts in DuckDB); the
+  /** [[topKPerQuery]] against a persisted postings index: the query
+    * batch's DISTINCT terms map to their hash buckets, the bounded bucket
+    * set (≤ nBuckets ≤ 4096 after distinct — key-space-bounded like the
+    * IVF probed-cell collect, no size guard needed) applies as a STATIC
+    * partition filter, and the scan reads only those buckets' files —
+    * never the corpus-wide postings. Identical output to the in-memory
+    * path at the same df cap (spec-pinned parity, null texts included;
+    * q145/q146 replay one- and two-generation indexes in DuckDB); the
     * corpus explode is never paid again.
     *
-    * A [[writePostings]] index reads df off the posting rows and (N,
-    * avgdl) off the one-row stats sidecar; a [[writePostingsGen]] index
-    * resolves them at read — df = Σ generation partials over the PROBED
-    * buckets only, stats = (Σnᵢ, Σdlᵢ/Σnᵢ) over the per-generation
-    * partials — and applies the recorded df cap to the summed df (the
-    * only point the global df is knowable under appends). All partials
-    * are integer-valued doubles, so the resolution is exact and
-    * order-independent.
+    * df/N/avgdl are resolved at read: df = Σ generation partials over the
+    * PROBED buckets only, stats = (Σnᵢ, Σdlᵢ/Σ#dlᵢ) over the
+    * per-generation partials — `avg(dl)` over the union, which skips
+    * null-text documents as the in-memory path does — and the recorded df
+    * cap applies to the summed df (the only point the global df is
+    * knowable under appends). All partials are integer-valued, so the
+    * resolution is exact and order-independent.
     */
   def topKPerQueryIndexed(
       postingsDir: String,
@@ -577,33 +516,27 @@ object Bm25 {
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     val ix = IndexMeta(queries.sparkSession, postingsDir)
-    val (nBuckets, maxTermDf, termHash) = postingsMeta(ix)
-    val bucketOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (termHash == "u32md5") termBucket(_, nBuckets)
-      else c => pmod(hash(c), lit(nBuckets)) // pre-r16 index: bucket as it was written
+    Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
+    val (nBuckets, maxTermDf) = postingsMeta(ix, postingsDir)
     val qTerms = queries.select(
       Cols.q(qIdCol).as("q_id"),
       explode(array_distinct(split(Cols.q(qTextCol), " "))).as("__term"))
       .distinct()
-      .withColumn("tb", bucketOf(col("__term")))
+      .withColumn("tb", termBucket(col("__term"), nBuckets))
     // the bounded probe set (one row per bucket) — one AQE-off job
     val probedTbs = Jobs.collectFast(qTerms.select("tb").distinct()).map(_.getInt(0)).toSeq
-    val postings = ix.read("postings").where(col("tb").isin(probedTbs: _*))
-    val generational = ix.schema("postings").fieldNames.contains(Generations.Col)
-    val (lists, stats) =
-      if (!generational) (postings, ix.read("stats"))
-      else {
-        val dfRes = ix.read("dfparts")
-          .where(col("tb").isin(probedTbs: _*))
-          .groupBy("__term")
-          .agg(sum(col("__df")).as("__df"))
-        val dfKept = maxTermDf.fold(dfRes)(cap => dfRes.where(col("__df") <= cap))
-        val st = ix.read("stats")
-          .agg(
-            sum(col("__n")).as("__n"),
-            (sum(col("__dlsum")) / sum(col("__n"))).as("__avgdl"))
-        (postings.join(broadcast(dfKept), Seq("__term")), st)
-      }
+    val dfRes = ix.read("dfparts")
+      .where(col("tb").isin(probedTbs: _*))
+      .groupBy("__term")
+      .agg(sum(col("__df")).as("__df"))
+    val dfKept = maxTermDf.fold(dfRes)(cap => dfRes.where(col("__df") <= cap))
+    val lists = ix.read("postings")
+      .where(col("tb").isin(probedTbs: _*))
+      .join(broadcast(dfKept), Seq("__term"))
+    val stats = ix.read("stats")
+      .agg(
+        sum(col("__n")).as("__n"),
+        (sum(col("__dlsum")) / sum(col("__dlcnt"))).as("__avgdl"))
     rankContributions(
       broadcast(qTerms.drop("tb")).join(lists, Seq("__term")), stats, k, k1, b)
   }

@@ -101,7 +101,7 @@ object Dedup {
     *
     * COMPATIBILITY NOTE (round 11): the DEFAULT family of the
     * signature-producing public APIs ([[minhashSignatures]],
-    * [[nearDupPairs]], [[bandedProjection]], [[writeNearDupIndex]],
+    * [[nearDupPairs]], [[bandedProjection]], [[writeBandedNearDupIndex]],
     * [[signatureProjection]]) changed md5 → xxhash64. Signature VALUES
     * under the default therefore changed; persisted-index paths are
     * protected by schema auto-detection ([[indexFamily]]), but ad-hoc
@@ -116,31 +116,6 @@ object Dedup {
   private def sigExpr(i: Int, family: SigHash, toksCol: String): String = family match {
     case Md5      => s"array_min(transform($toksCol, t -> md5(cast(concat('s$i|', t) AS BINARY))))"
     case XxHash64 => s"array_min(transform($toksCol, t -> xxhash64(concat('s$i|', t))))"
-  }
-
-  /** Refuse a pre-partitioned FLAT near-dup index (parquet files at the
-    * directory root with `src_batch` as a data column — the layout before
-    * `src_batch` became a partition column): appending `src_batch=`
-    * partition directories alongside flat files breaks Spark's partition
-    * discovery mid-stream with an opaque "conflicting directory
-    * structures" error. The fix is a rebuild, so fail with that message
-    * up front.
-    */
-  private[graft] def requirePartitionedIndexLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs   = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(path)) {
-      val flat = fs.listStatus(path).exists(e =>
-        e.isFile && e.getPath.getName.endsWith(".parquet"))
-      require(
-        !flat,
-        s"near-dup index at $indexDir uses the pre-partitioned FLAT layout (parquet files at " +
-          "the root with src_batch as a data column) — rebuild it with Dedup.writeNearDupIndex " +
-          "before streaming ingest; mixing src_batch= partition dirs with flat files breaks " +
-          "partition discovery")
-    }
   }
 
   /** Detect a signature index's hash family from its schema. */
@@ -177,32 +152,15 @@ object Dedup {
         (0 until nSigs).map(i => expr(sigExpr(i, family, "__toks")).as(s"sig$i")): _*)
   }
 
-  /** Persist the NEAR-dup half of the ingest index: (digest, sig0..sigN)
-    * distinct by content — signatures, never text, so the index stays
-    * O(distinct docs) rows of fixed width at any corpus size.
-    */
-  def writeNearDupIndex(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      outDir: String,
-      nSigs: Int = DefaultNearDupSigs,
-      family: SigHash = XxHash64): Unit =
-    // bootstrap generation -1: the streaming ingest loop appends survivor
-    // signatures as generation <batch id> and dedups batch N against
-    // `src_batch < N` only, which makes a REPLAYED batch see exactly
-    // the pre-append index (its own survivors excluded) instead of
-    // dropping them as self-duplicates. Batch consumers ignore the
-    // column ([[incrementalNearDupNew]] selects digest + sigs).
-    Generations.write(
-      signatureProjection(docs, idCol, textCol, nSigs, family).drop("__id").distinct(),
-      outDir, -1L, Seq(Generations.Col), append = false)
-
-  /** Incremental NEAR-dup dedup of a new batch against a persisted
-    * signature index — the fuzzy counterpart of [[incrementalNew]], which
-    * only stops byte-identical re-ingests. A new doc is dropped when some
-    * indexed doc shares ≥ 1 signature band (candidate generation — one
-    * equi-join on the band key, exactly the [[nearDupPairs]] bucket
+  /** Incremental NEAR-dup dedup of a new batch against a signature index
+    * — the fuzzy counterpart of [[incrementalNew]], which only stops
+    * byte-identical re-ingests. `index` is a (digest, sig0..sigN-1) frame
+    * (one row per distinct historical doc — the [[signatureProjection]]
+    * of the history, id dropped); the persisted form is the banded index
+    * ([[writeBandedNearDupIndex]] → [[incrementalNearDupNewBanded]]),
+    * which decides identically (spec-pinned). A new doc is dropped when
+    * some indexed doc shares ≥ 1 signature band (candidate generation —
+    * one equi-join on the band key, exactly the [[nearDupPairs]] bucket
     * shape) AND its signature agreement `|{i : sig_i = idx_i}| / nSigs`
     * reaches `simTau` (verification — minhash collision probability
     * estimates Jaccard, so this is the estimated-Jaccard threshold;
@@ -214,54 +172,14 @@ object Dedup {
     * Scale shape: candidates join band keys against a fixed-width index
     * (no text moves); verification touches candidate rows only; the
     * historical corpus is never re-read. Returns surviving
-    * (id, digest) rows.
+    * (id, digest) rows. 16 sigs / 0.75 agreement is the operating point
+    * the q125 probe measured: 8 × 0.5 degenerates on small shared
+    * vocabularies.
     */
-  /** One ingest-index signature-width default for the whole family —
-    * [[writeNearDupIndex]]'s bootstrap and [[incrementalNearDupNew]]'s
-    * `bands × rowsPerBand` must agree or the band projection cannot
-    * resolve the index's columns (checked below with a named error).
-    * 16 sigs / 0.75 agreement is the operating point the q125 probe
-    * measured: 8 × 0.5 degenerates on small shared vocabularies.
-    */
-  val DefaultNearDupSigs: Int = 16
-
   def incrementalNearDupNew(
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      index: DataFrame,
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
-      simTau: Double = 0.75,
-      maxBandDf: Option[Long] = Some(DefaultMaxShingleDf)): DataFrame = {
-    val n = bands * rowsPerBand
-    require(
-      index.columns.contains(s"sig${n - 1}"),
-      s"near-dup index is narrower than bands*rowsPerBand = $n signatures " +
-        s"(index columns: ${index.columns.filter(_.startsWith("sig")).length}) — " +
-        "bootstrap with writeNearDupIndex(nSigs = bands*rowsPerBand)")
-    // the new batch's signatures MUST be the index's family — detected
-    // from the index schema, so a family mismatch cannot silently verify.
-    // Pinned eagerly (r16): the lazy plan evaluated this projection 3×
-    // (band-candidate join, verification join, election anti-join) — one
-    // batch-bounded materialization replaces two repeats of the salted
-    // minhash work (the banded path does the same; the INDEX side is
-    // deliberately NOT pinned — it is history-sized). One-shot batch
-    // callers keep the localCheckpoint pin; loop callers that must
-    // release the pin per batch (the streaming ingest) pass a
-    // caller-managed persist through [[incrementalNearDupNewSigs]].
-    val newSigs = signatureProjection(newDocs, idCol, textCol, n, indexFamily(index))
-      .localCheckpoint(true)
-    incrementalNearDupNewSigs(newSigs, idCol, index, bands, rowsPerBand, simTau, maxBandDf)
-  }
-
-  /** [[incrementalNearDupNew]] over a PRE-MATERIALIZED signature frame
-    * (r17): the caller owns the pin's lifetime — see
-    * [[incrementalNearDupNewBandedSigs]] for why.
-    */
-  private[graft] def incrementalNearDupNewSigs(
-      newSigs: DataFrame,
-      idCol: String,
       index: DataFrame,
       bands: Int = 4,
       rowsPerBand: Int = 4,
@@ -273,7 +191,16 @@ object Dedup {
       index.columns.contains(s"sig${n - 1}"),
       s"near-dup index is narrower than bands*rowsPerBand = $n signatures " +
         s"(index columns: ${index.columns.filter(_.startsWith("sig")).length}) — " +
-        "bootstrap with writeNearDupIndex(nSigs = bands*rowsPerBand)")
+        "build it with nSigs = bands*rowsPerBand")
+    // the new batch's signatures MUST be the index's family — detected
+    // from the index schema, so a family mismatch cannot silently verify.
+    // Pinned eagerly (r16): the lazy plan evaluated this projection 3×
+    // (band-candidate join, verification join, election anti-join) — one
+    // batch-bounded materialization replaces two repeats of the salted
+    // minhash work (the banded path does the same; the INDEX side is
+    // deliberately NOT pinned — it is history-sized).
+    val newSigs = signatureProjection(newDocs, idCol, textCol, n, indexFamily(index))
+      .localCheckpoint(true)
     // -1e-9: binary rounding of simTau*n can land a hair above the exact
     // integer (0.55*20 = 11.000000000000002) and silently raise the
     // effective threshold — the prefixFilteredPairs ceil guard
@@ -321,41 +248,27 @@ object Dedup {
       .where(col("__matched") >= matchMin)
       .select("__id")
       .distinct()
-    val w = Window.partitionBy("digest").orderBy(col("__id"))
-    newSigs
-      .join(dropped, Seq("__id"), "left_anti")
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .select(col("__id").as(idCol), col("digest"))
+    electPerDigest(newSigs.join(dropped, Seq("__id"), "left_anti"), idCol)
   }
 
-  /** [[incrementalNearDupNew]] against a persisted index directory. */
-  def incrementalNearDupNew(
-      newDocs: DataFrame,
-      idCol: String,
-      textCol: String,
-      indexDir: String): DataFrame =
-    incrementalNearDupNew(
-      newDocs, idCol, textCol, newDocs.sparkSession.read.parquet(indexDir))
-
-  // ─── Banded persisted near-dup index (v2 layout) ────────────────────
+  // ─── Banded persisted near-dup index ────────────────────────────────
   //
-  // The flat layout ([[writeNearDupIndex]]) stores one (digest, sigs) row
-  // per doc, so EVERY ingest re-explodes the whole index into band rows
-  // and shuffles them through the df-cap window before the candidate
-  // join — the full index moves per batch (q125's sf10 ingest measured
-  // candidate-join-bound at 28 s). The banded layout stores the index
-  // PRE-EXPLODED into band rows, partitioned by (src_batch, band_idx,
-  // band_bucket) where band_bucket = xxhash64(band key) mod nBuckets —
-  // the [[IvfPq.writeIndex]] `cell=` pattern: an ingest batch collects
-  // its own band buckets (≤ bands × nBuckets values, one tiny collect)
-  // and reads ONLY the matching partition directories via static
-  // partition pruning. A band value's rows all hash to one bucket, so
-  // the df cap stays EXACT over the pruned read, and signatures ride
-  // inline on the band rows, so verification needs no join back to a
-  // corpus-sized table. Small/streaming batches prune hardest (a
-  // micro-batch touches a handful of buckets); a batch big enough to
-  // probe every bucket degrades gracefully to the full-scan cost.
+  // The index is stored PRE-EXPLODED into band rows, partitioned by
+  // (src_batch, band_idx, band_bucket) where band_bucket =
+  // xxhash64(band key) mod nBuckets — the [[IvfPq.writeIndexGen]] `cell=`
+  // pattern. Stored as one (digest, sigs) row per doc, EVERY ingest would
+  // re-explode the whole index into band rows and shuffle them through
+  // the df-cap window before the candidate join — the full index moving
+  // per batch (q125's sf10 ingest measured candidate-join-bound at 28 s
+  // in that shape). Pre-exploded, an ingest batch collects its own band
+  // buckets (≤ bands × nBuckets values, one tiny collect) and reads ONLY
+  // the matching partition directories via static partition pruning. A
+  // band value's rows all hash to one bucket, so the df cap stays EXACT
+  // over the pruned read, and signatures ride inline on the band rows,
+  // so verification needs no join back to a corpus-sized table.
+  // Small/streaming batches prune hardest (a micro-batch touches a
+  // handful of buckets); a batch big enough to probe every bucket
+  // degrades gracefully to the full-scan cost.
 
   /** Band-bucket count per band_idx in the banded layout: directories
     * per append = bands × nBuckets (128 at the defaults — coarse enough
@@ -408,10 +321,22 @@ object Dedup {
     def nSigs: Int = bands * rowsPerBand
   }
 
+  /** The banded index's contract, read through its `meta` sidecar — the
+    * layout's marker, so a directory without one (a flat signature table,
+    * or no index at all) is refused here with the bootstrap to run.
+    */
   private[graft] def readBandedMeta(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): BandedMeta = {
-    val ix = IndexMeta(spark, indexDir)
+    val ix =
+      try IndexMeta(spark, indexDir)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"near-dup index at $indexDir has no meta sidecar, so it is not a banded index " +
+              "(the only near-dup layout ingest reads) — bootstrap it with " +
+              "Dedup.writeBandedNearDupIndex")
+      }
     BandedMeta(
       ix.row.getAs[Int]("bands"),
       ix.row.getAs[Int]("rows_per_band"),
@@ -419,21 +344,11 @@ object Dedup {
       indexFamily(ix.schema("bands")))
   }
 
-  /** A banded index directory is self-describing: the `meta` sidecar is
-    * its marker ([[graft.stream.StreamingOps.nearDupIngestStream]] routes
-    * on this, so one streaming API serves both layouts).
-    */
-  def isBandedIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String): Boolean = {
-    val p  = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(p)
-  }
-
   /** Bootstrap the banded near-dup index: band rows under
     * `<outDir>/bands/src_batch=-1/band_idx=<b>/band_bucket=<h>/`, plus a
     * one-row `meta` sidecar (bands / rowsPerBand / nBuckets — the layout
     * contract every later ingest reads back; the hash family
-    * self-describes through the sig column types, as in the flat layout).
+    * self-describes through the sig column types).
     */
   def writeBandedNearDupIndex(
       docs: DataFrame,
@@ -470,7 +385,7 @@ object Dedup {
     * dynamic-partition overwrite of exactly the (src_batch=batchId,
     * band_idx, band_bucket) directories this batch produces, so a
     * crash-replayed batch rewrites its own partitions instead of
-    * duplicate-appending (the flat layout's replay contract, kept).
+    * duplicate-appending.
     */
   def appendBandedNearDupIndex(
       survivors: DataFrame,
@@ -489,7 +404,7 @@ object Dedup {
   }
 
   /** Within-batch exact election over anti-joined signature rows — the
-    * shared tail of both ingest layouts.
+    * shared tail of the in-memory and banded ingests.
     */
   private def electPerDigest(sigs: DataFrame, idCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -507,7 +422,8 @@ object Dedup {
     * (band_idx, band_bucket) partitions, the df cap windows over that
     * pruned subset only (exact — a band value lives in one bucket), and
     * verification runs inline on the band rows' carried signatures.
-    * Survivors equal the flat path's row for row (spec-pinned).
+    * Survivors equal the in-memory path's row for row over the same
+    * history (spec-pinned).
     *
     * `beforeBatch` is the streaming loop's replay guard: dedup batch N
     * against `src_batch < N` only.

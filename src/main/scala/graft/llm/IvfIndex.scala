@@ -180,7 +180,7 @@ object IvfIndex {
     // first — so element 0 is the home cell). The indexed table is
     // materialized (localCheckpoint) because both sides of the candidate
     // self-join derive from it — this IS the inverted index; the
-    // persisted form is [[writeIndex]]'s cell-partitioned table.
+    // persisted form is [[writeIndexGen]]'s cell-partitioned table.
     val indexed = withProbeCells(vecBase(emb, idCol, embCol), centroids, nProbe)
       .withColumn("cell", col("probe_cells").getItem(0))
       .localCheckpoint(true)
@@ -248,48 +248,7 @@ object IvfIndex {
       .select("a_id", "b_id", "rn", "cos_sim")
   }
 
-  /** Persist the inverted index: vectors written as a CELL-PARTITIONED
-    * parquet table (`<outDir>/cells/cell=<id>/…`) plus a centroid sidecar
-    * (`<outDir>/centroids`). This is the durable form of the index
-    * [[approxTopK]] materializes per run — at cluster scale the partition
-    * directory IS the inverted list: a probe join touches only the
-    * probed cells' files (partition pruning), so query cost scales with
-    * cells-probed, not corpus size, and the index is built once and
-    * shared across query sessions.
-    */
-  def writeIndex(
-      emb: DataFrame,
-      idCol: String,
-      embCol: String,
-      outDir: String,
-      nCells: Int = Auto,
-      iters: Int = 3,
-      seed: Int = 42): Unit = {
-    val spark = emb.sparkSession
-    // persisted layout = one partition dir per cell, so auto sizing caps
-    // at 4096 dirs (the in-memory 65536 ceiling would be a file-count
-    // hazard as a directory tree); past this corpus size use a bucketed
-    // table or coarser dirs over a finer in-file cell column
-    val (cells, sampleRows) =
-      if (nCells != Auto) (nCells, 4096)
-      else {
-        val n = emb.count()
-        val c = math.min(4096, autoCells(n))
-        (c, math.max(4096, 16 * c))
-      }
-    val centroids = trainCentroids(emb, idCol, embCol, cells, iters, seed, sampleRows)
-    assignedRows(emb, idCol, embCol, centroids)
-      // one task → one file per cell directory (the r13 banded-index
-      // write-clustering posture; unclustered, tasks × cells files)
-      .repartition(col("cell"))
-      .write
-      .partitionBy("cell")
-      .mode("overwrite")
-      .parquet(s"$outDir/cells")
-    writeCentroidSidecar(spark, centroids, outDir)
-  }
-
-  /** The assignment projection every persisted-IVF writer shares: each
+  /** The assignment projection the persisted-IVF writers share: each
     * vector with its nearest cell (nProbe = 1 head of the probe list —
     * the same argmin both query paths replay).
     */
@@ -327,11 +286,18 @@ object IvfIndex {
       .collect()
       .map(_.getSeq[Double](1).toArray)
 
-  /** [[writeIndex]] in the GENERATIONAL layout
-    * (`cells/cell=<id>/src_batch=<b>/…`) — the q135 ingest contract
-    * applied to the plain-IVF family, so no persisted index family
-    * silently lacks the lifecycle affordances its siblings document:
-    * [[appendToIndex]] adds a batch against the FROZEN centroid sidecar
+  /** Persist the inverted index: vectors written as a CELL-PARTITIONED
+    * parquet table in the GENERATIONAL layout
+    * (`<outDir>/cells/cell=<id>/src_batch=<b>/…`) plus a centroid sidecar
+    * (`<outDir>/centroids`). This is the durable form of the index
+    * [[approxTopK]] materializes per run — at cluster scale the cell
+    * directory IS the inverted list: a probe join touches only the
+    * probed cells' files (partition pruning), so query cost scales with
+    * cells-probed, not corpus size, and the index is built once and
+    * shared across query sessions. Auto sizing caps at 4096 cells (the
+    * in-memory 65536 ceiling would be a file-count hazard as a directory
+    * tree). The `src_batch` level is the q135 ingest contract applied to
+    * the plain-IVF family: [[appendToIndex]] adds a batch against the FROZEN centroid sidecar
     * by writing only that batch's partitions (history never re-read or
     * re-assigned), [[cellOccupancy]] is the sizing monitor. Static
     * overwrite on the bootstrap for the same reason as
@@ -430,7 +396,7 @@ object IvfIndex {
         round(avg(col("occ")), 2).as("mean_occ"),
         max(col("occ")).as("max_occ"))
 
-  /** Query a [[writeIndex]] index: assign probe cells to the query
+  /** Query a [[writeIndexGen]] index: assign probe cells to the query
     * vectors with the persisted centroids, join against the partitioned
     * cell table, rank exactly. The join key is the PARTITION column, and
     * the union of probed cells is bounded by nCells (≤ [[autoCells]]'s

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * = driver-side probe-cell pick + per-probed-cell ADC tables, then ONE
   * filter + projection + TakeOrdered over the probed cells' rows. At
   * cluster scale `cell` is the partition key, so the probe filter is
-  * partition pruning (the [[IvfIndex.writeIndex]] layout).
+  * partition pruning (the [[IvfIndex.writeIndexGen]] layout).
   */
 object IvfPq {
 
@@ -214,34 +214,6 @@ object IvfPq {
       .toDF("vec_id", "cell", "__codes", "err")
   }
 
-  /** Persist the composed index: the encoded corpus as one partition dir
-    * per cell (`cells/cell=<id>/` — m codes + id per row, nothing else),
-    * plus centroid and codebook sidecars (nCells + m·k rows). A probe
-    * filter over this layout is STATIC partition pruning: a query at
-    * nProbe=p reads p directories of code rows, never the corpus.
-    */
-  def writeIndex(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      outDir: String,
-      dims: Int,
-      nCells: Int = 16,
-      m: Int = 4,
-      k: Int = 16,
-      pqIters: Int = 2,
-      seed: Int = 42): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val (idx, encoded) = build(emb, idCol, vecCol, dims, nCells, m, k, pqIters, seed)
-    writeGeomStamp(spark, idx, outDir)
-    // one task -> one file per cell directory (the r13 banded-index
-    // write-clustering posture; unclustered, tasks x cells files)
-    encoded.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$outDir/cells")
-    writeQuantizerSidecars(spark, idx, outDir)
-  }
-
   /** Deterministic fingerprint of an index's GEOMETRY (coarse centroids +
     * PQ codebooks): two indexes with the same quantizer hash equal, a
     * retrained one differs. This is what lets a long-lived serve handle
@@ -260,9 +232,8 @@ object IvfPq {
     h
   }
 
-  /** The centroid + codebook sidecars shared by [[writeIndex]] and
-    * [[writeIndexGen]] — one writer so a sidecar schema change cannot
-    * break round-tripping for indexes written by the other layout.
+  /** The centroid + codebook sidecars [[writeIndexGen]] writes after
+    * the cells and [[loadIndex]] reads back.
     */
   private def writeQuantizerSidecars(
       spark: org.apache.spark.sql.SparkSession,
@@ -332,15 +303,17 @@ object IvfPq {
         col("vec_id") +: col("cell") +:
           (0 until index.cb.m).map(s => col("__codes")(s).as(s"code$s")) :+ col("err"): _*)
 
-  /** Persist an ALREADY-BUILT index and its encoded corpus in the
-    * GENERATIONAL layout: `cells/cell=<id>/src_batch=<b>/` — the
-    * [[writeIndex]] cell partitioning with a batch generation underneath,
-    * so incremental ingest ([[appendToIndex]]) can add or replay a batch
-    * by (over)writing only that batch's partitions. Probe filters still
-    * prune statically on `cell` (the outer directory level); the
-    * generation level only scopes writes. Takes a pre-built index so a
-    * relational (seed-pinned) quantizer can be persisted as easily as a
-    * Lloyd-trained one.
+  /** Persist an ALREADY-BUILT index ([[build]]) and its encoded corpus
+    * in the GENERATIONAL layout: `cells/cell=<id>/src_batch=<b>/` (m
+    * codes + id per row, nothing else), plus the geometry stamp and the
+    * centroid and codebook sidecars (nCells + m·k rows). A probe filter
+    * over this layout is STATIC partition pruning on `cell` (the outer
+    * directory level): a query at nProbe=p reads p cells' directories of
+    * code rows, never the corpus. The generation level only scopes
+    * writes, so incremental ingest ([[appendToIndex]]) can add or replay
+    * a batch by (over)writing only that batch's partitions. Takes a
+    * pre-built index so a relational (seed-pinned) quantizer can be
+    * persisted as easily as a Lloyd-trained one.
     */
   def writeIndexGen(
       idx: IvfPqIndex,
@@ -370,7 +343,7 @@ object IvfPq {
     * the only index-maintenance shape that works: the history is never
     * re-encoded, the write touches ≤ nCells directories, and serving
     * reads the probed cells across all generations via the same static
-    * pruning as a single-generation index.
+    * pruning on the outer `cell` level.
     *
     * Frozen-quantizer drift is the caller's trade: appended batches are
     * encoded in the batch-0 geometry (standard FAISS practice); retrain
@@ -548,12 +521,7 @@ object IvfPq {
     idx
   }
 
-  /** Query a [[writeIndex]] index: sidecars rebuild the in-memory
-    * [[IvfPqIndex]] (O(nCells + m·k) driver rows), and [[topK]]'s probe
-    * filter over the partitioned cell table executes as partition
-    * pruning — spec-asserted via the executed scan's partition count.
-    */
-  /** A [[writeIndex]] directory loaded for serving: the rebuilt in-memory
+  /** A [[writeIndexGen]] directory loaded for serving: the rebuilt in-memory
     * [[IvfPqIndex]] plus the cell-partitioned encoded corpus relation.
     * A serving process calls [[loadIndex]] ONCE and then [[topK]] /
     * [[scoreCandidates]] per query — the sidecar reads (two small
@@ -613,6 +581,11 @@ object IvfPq {
     LoadedIndex(idx, spark.read.parquet(s"$indexDir/cells"), dir = Some(indexDir))
   }
 
+  /** Query a [[writeIndexGen]] index: sidecars rebuild the in-memory
+    * [[IvfPqIndex]] (O(nCells + m·k) driver rows), and [[topK]]'s probe
+    * filter over the partitioned cell table executes as partition
+    * pruning — spec-asserted via the executed scan's partition count.
+    */
   def topKIndexed(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession,

@@ -290,8 +290,9 @@ object StreamingOps {
       .dropDuplicates("digest")
 
   /** STREAMING near-dup ingest loop: each micro-batch is deduplicated
-    * against the persisted signature index
-    * ([[graft.llm.Dedup.incrementalNearDupNew]] — band candidates +
+    * against the persisted BANDED signature index
+    * ([[graft.llm.Dedup.writeBandedNearDupIndex]] — band candidates from
+    * the batch's probed (band_idx, band_bucket) partitions only, then
     * signature-agreement verification, df-capped), survivors land in an
     * idempotent `batch_id=` partition, and the survivors' OWN signatures
     * are appended to the index — so batch N+1 dedups against everything
@@ -299,7 +300,8 @@ object StreamingOps {
     * right Structured Streaming shape here: the decision is a per-batch
     * relational program (anti-join + window election), not a running
     * aggregation, and the index append is a transactional side effect
-    * per batch.
+    * per batch. The index's meta sidecar carries its bands / rowsPerBand
+    * / bucket contract; a directory without one is refused up front.
     *
     * Replay safety: the survivor write is keyed by batch id (overwrite —
     * exactly-once), and the index carries `src_batch` provenance — batch
@@ -316,74 +318,27 @@ object StreamingOps {
       checkpoint: String,
       idCol: String = "doc_id",
       textCol: String = "text",
-      bands: Int = 4,
-      rowsPerBand: Int = 4,
       simTau: Double = 0.75): org.apache.spark.sql.streaming.StreamingQuery = {
-    // a BANDED index ([[graft.llm.Dedup.writeBandedNearDupIndex]])
-    // self-describes via its meta sidecar and carries its own bands /
-    // rowsPerBand contract — the params above apply to the flat layout
-    // only. The banded batch path reads just the batch's probed
-    // (band_idx, band_bucket) partitions instead of the whole index.
-    val banded = graft.llm.Dedup.isBandedIndex(docs.sparkSession, indexDir)
-    if (!banded)
-      graft.llm.Dedup.requirePartitionedIndexLayout(docs.sparkSession, indexDir)
+    // fail at start, not in the first micro-batch, on a non-banded directory
+    graft.llm.Dedup.readBandedMeta(docs.sparkSession, indexDir)
     // no collision guard: a fresh checkpoint replays on purpose (the
     // `src_batch < id` read reproduces each batch's survivors)
     Generations.ingestLoop(docs, checkpoint, baseGen = 0L, guarded = Nil) { (batch, id) =>
-      val spark = batch.sparkSession
-      val nSigs = bands * rowsPerBand
-      if (banded)
-        // ONE materialized signature projection per batch, shared by the
-        // ingest joins AND the index append, with both pins RELEASED at
-        // the end of the step (r17 — the previous shape local-checkpointed
-        // the signatures inside the ingest call, where the loop could
-        // never free them: one batch-sized pin accumulated per
-        // micro-batch until RDD GC, the r12 lesson this file already
-        // records at the monitored-loop comment below). The survivor-docs
-        // write runs inside `use`, BEFORE the append — on a crash between
-        // the two writes the replayed batch sees the pre-append index via
-        // the beforeBatch guard and reproduces the same survivors.
-        graft.llm.Dedup.ingestAppendBanded(
-          batch, idCol, textCol, indexDir, batchId = id, simTau = simTau) { survivors =>
-          batch
-            .join(survivors.select(idCol), Seq(idCol), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-        }
-      else {
-        val index  = spark.read.parquet(indexDir)
-        // the batch's signatures, computed ONCE in the index's hash
-        // family (schema-detected, so a loop over an md5-bootstrapped
-        // index stays md5 end to end) and pinned with a loop-managed
-        // persist: the ingest joins, the survivor-docs write, and the
-        // index append all read this one materialization, and the pin is
-        // released per batch (same r17 lifetime fix as the banded arm)
-        val family = graft.llm.Dedup.indexFamily(index)
-        val sigs = graft.llm.Dedup
-          .signatureProjection(batch, idCol, textCol, nSigs, family)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val survivors = graft.llm.Dedup
-            .incrementalNearDupNewSigs(
-              sigs, idCol, index.where(col(Generations.Col) < id), bands, rowsPerBand, simTau)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            batch
-              .join(survivors.select(idCol), Seq(idCol), "left_semi")
-              .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
-            // generation `id` append: a crash-replayed batch rewrites
-            // the same directories instead of re-appending duplicate
-            // signature rows, so the index stays O(distinct survivors)
-            // across any number of replays. Survivor signatures come
-            // from the pinned projection (semi-join on the elected ids),
-            // not a re-run over the survivor docs.
-            Generations.write(
-              sigs
-                .join(survivors.select(col(idCol).as("__id")), Seq("__id"), "left_semi")
-                .drop("__id")
-                .distinct(),
-              indexDir, id, Seq(Generations.Col), append = true)
-          } finally survivors.unpersist(false)
-        } finally sigs.unpersist(false)
+      // ONE materialized signature projection per batch, shared by the
+      // ingest joins AND the index append, with both pins RELEASED at the
+      // end of the step (r17 — local-checkpointing the signatures inside
+      // the ingest call left them where the loop could never free them:
+      // one batch-sized pin accumulated per micro-batch until RDD GC, the
+      // r12 lesson this file already records at the monitored-loop
+      // comment below). The survivor-docs write runs inside `use`, BEFORE
+      // the append — on a crash between the two writes the replayed batch
+      // sees the pre-append index via the beforeBatch guard and
+      // reproduces the same survivors.
+      graft.llm.Dedup.ingestAppendBanded(
+        batch, idCol, textCol, indexDir, batchId = id, simTau = simTau) { survivors =>
+        batch
+          .join(survivors.select(idCol), Seq(idCol), "left_semi")
+          .write.mode("overwrite").parquet(s"$outDir/batch_id=$id")
       }
     }
   }
@@ -395,7 +350,8 @@ object StreamingOps {
     * broadcast centroids, codes = the PQ argmin over the broadcast
     * codebooks), so the SAME expressions run batch and streaming with no
     * state and no watermark; a downstream `partitionBy("cell")` sink
-    * appends straight into the [[graft.llm.IvfPq.writeIndex]] layout.
+    * appends straight into the [[graft.llm.IvfPq.writeIndexGen]] layout's
+    * cell partitioning.
     * StreamingSpec pins batch ≡ stream code-for-code.
     */
   def ivfPqEncodeStream(

@@ -158,7 +158,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
     import graft.llm.IvfIndex
     val emb = Tables(spark, dir).embeddings
     val idx = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    IvfIndex.writeIndex(emb, "vec_id", "embedding", idx, nCells = 16)
+    IvfIndex.writeIndexGen(emb, "vec_id", "embedding", idx, nCells = 16)
     // same corpus as queries (self-indexing) must equal the in-memory
     // plan: identical centroids (deterministic training), same probes,
     // same ranking
@@ -194,7 +194,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
   test("persisted LSH buckets reproduce the in-memory path and prune buckets") {
     val emb = Tables(spark, dir).embeddings
     val idx = java.nio.file.Files.createTempDirectory("lsh_idx").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2,
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2,
       nProbes = 0)
     val fromIndex = AnnBuckets.approxTopKIndexed(idx, emb, "vec_id", "embedding", k = 5)
     val inMemory  = AnnBuckets.approxTopK(emb, "vec_id", "embedding", k = 5, nBits = 4, nTables = 2,
@@ -223,7 +223,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables(spark, dir).embeddings
     val idx = java.nio.file.Files.createTempDirectory("lsh_idx_mp").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2, nProbes = 2)
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2, nProbes = 2)
     // the meta sidecar carries the probe budget the index was sized for
     val fromIndex = AnnBuckets.approxTopKIndexed(idx, emb, "vec_id", "embedding", k = 5)
     // in-memory equivalent: the DIRECTED multi-probe candidate stage
@@ -246,7 +246,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
     // probes buy recall at EQUAL index size: the probed read of this
     // 2-table index beats the plain read of the same 2 tables
     val plainIdx = java.nio.file.Files.createTempDirectory("lsh_idx_plain").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", plainIdx, nBits = 4, nTables = 2,
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", plainIdx, nBits = 4, nTables = 2,
       nProbes = 0)
     def recallOf(df: org.apache.spark.sql.DataFrame): Double = {
       val got = df.select("a_id", "b_id").as[(Long, Long)].collect().toSet
@@ -304,10 +304,13 @@ class AnnMultimodalSpec extends AnyFunSuite {
       nBits = 4, nTables = 2, nProbes = 0)
     TestSpark.assertFrameEqual(fromIndex, inMemory)
 
-    // single-generation writeBuckets output is refused with the rebuild path
+    // a single-generation buckets table (no src_batch level), written by
+    // hand under a valid meta sidecar, is refused with the rebuild path
     val plainIdx = java.nio.file.Files.createTempDirectory("lsh_plain_guard").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", plainIdx, nBits = 4, nTables = 2,
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", plainIdx, nBits = 4, nTables = 2,
       nProbes = 0)
+    spark.read.parquet(s"$idx/buckets").drop(graft.core.Generations.Col)
+      .write.partitionBy("tb").mode("overwrite").parquet(s"$plainIdx/buckets")
     val e = intercept[IllegalArgumentException] {
       AnnBuckets.appendToBuckets(plainIdx, b1, "vec_id", "embedding", srcBatch = 1L)
     }
@@ -380,9 +383,11 @@ class AnnMultimodalSpec extends AnyFunSuite {
       IvfIndex.approxTopKIndexed(idx, emb, "vec_id", "embedding", k = 5),
       IvfIndex.approxTopKIndexed(idxB, emb, "vec_id", "embedding", k = 5))
 
-    // single-generation writeIndex output is refused with the rebuild path
+    // a single-generation cells table (no src_batch level), written by
+    // hand, is refused with the rebuild path
     val plainIdx = java.nio.file.Files.createTempDirectory("ivf_plain_guard").toString
-    IvfIndex.writeIndex(emb, "vec_id", "embedding", plainIdx, nCells = 8)
+    spark.read.parquet(s"$idx/cells").drop(graft.core.Generations.Col)
+      .write.partitionBy("cell").parquet(s"$plainIdx/cells")
     val e = intercept[IllegalArgumentException] {
       IvfIndex.appendToIndex(plainIdx, b1, "vec_id", "embedding", srcBatch = 1L)
     }
@@ -593,7 +598,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
   test("approxTopKIndexed fails fast past the probe-set bound, naming the full-corpus path") {
     val emb = Tables(spark, dir).embeddings
     val idx = java.nio.file.Files.createTempDirectory("lsh_idx_guard").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2)
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", idx, nBits = 4, nTables = 2)
     val e = intercept[IllegalArgumentException] {
       AnnBuckets.approxTopKIndexed(idx, emb, "vec_id", "embedding", k = 3, maxProbedBuckets = 2)
     }

@@ -113,13 +113,13 @@ class ClusteredRecallSpec extends AnyFunSuite {
   }
 
   test("DEFAULT-sized persisted index holds the recall floor (writeBuckets → approxTopKIndexed)") {
-    // the out-of-box index path: writeBuckets with ALL defaults (Auto
+    // the out-of-box index path: writeBucketsGen with ALL defaults (Auto
     // tables sized under the recorded probe budget) served through
     // approxTopKIndexed, which applies that budget per read. Directed
     // (query → corpus) reads have no symmetrize step, so the floor is
     // the in-memory one
     val idx = java.nio.file.Files.createTempDirectory("lsh_idx_default").toString
-    AnnBuckets.writeBuckets(emb, "vec_id", "embedding", idx)
+    AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", idx)
     val r = recallOf(AnnBuckets.approxTopKIndexed(idx, emb, "vec_id", "embedding", k = 5))
     assert(r >= 0.80,
       f"default-sized persisted-index recall@5 $r%.3f under floor 0.80 — the shipped index " +

@@ -488,14 +488,6 @@ class DedupSpec extends AnyFunSuite {
       assert(gens(s"$banded/bands") == Set(-1L, 0L), "sanity: the append added generation 0")
       bootBanded()
       assert(gens(s"$banded/bands") == Set(-1L), "banded re-bootstrap must drop generation 0")
-      val flat = java.nio.file.Files.createTempDirectory("flat_reboot").toString
-      Dedup.writeNearDupIndex(old, "doc_id", "text", flat)
-      graft.core.Generations.write(
-        Dedup.signatureProjection(fresh, "doc_id", "text", Dedup.DefaultNearDupSigs).drop("__id"),
-        flat, 0L, Seq(graft.core.Generations.Col), append = true)
-      assert(gens(flat) == Set(-1L, 0L), "sanity: the append added generation 0")
-      Dedup.writeNearDupIndex(old, "doc_id", "text", flat)
-      assert(gens(flat) == Set(-1L), "flat re-bootstrap must drop generation 0")
     } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 }

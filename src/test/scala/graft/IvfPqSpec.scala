@@ -24,6 +24,13 @@ class IvfPqSpec extends AnyFunSuite {
       .select("vec_id").as[Long].collect().toSeq
   }
 
+  /** The persisted index every serving spec reads: one generation. */
+  private def writeIndex(dir: String): Unit = {
+    val (idx, encoded) =
+      IvfPq.build(emb, "vec_id", "embedding", dims = 64, nCells = 16, m = 4, k = 16)
+    IvfPq.writeIndexGen(idx, encoded, dir)
+  }
+
   test("kernel residual frame is bit-identical to the expression residual path") {
     val centroids = graft.llm.IvfIndex.trainCentroids(emb, "vec_id", "embedding", 16, seed = 42)
     // value comparison (the schemas differ only in nullability metadata:
@@ -85,7 +92,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("persisted IVFADC index reproduces the in-memory search and prunes cells") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_idx").toString
-    IvfPq.writeIndex(emb, "vec_id", "embedding", dir, dims = 64, nCells = 16, m = 4, k = 16)
+    writeIndex(dir)
     val q = emb.where(col("vec_id") === 42)
       .select(col("embedding").cast("array<double>")).collect()(0).getSeq[Double](0).toArray
     val fromIndex = IvfPq.topKIndexed(dir, spark, q, k = 10, nProbe = 4)
@@ -118,7 +125,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("loadIndex serves topK and scoreCandidates equal to the one-shot path") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_loaded").toString
-    IvfPq.writeIndex(emb, "vec_id", "embedding", dir, dims = 64, nCells = 16, m = 4, k = 16)
+    writeIndex(dir)
     val q = emb.where(col("vec_id") === 42)
       .select(col("embedding").cast("array<double>")).collect()(0).getSeq[Double](0).toArray
     val loaded = IvfPq.loadIndex(dir, spark)
@@ -136,7 +143,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("scoreCandidatesServe: identical scores, partitions pruned to the batch's probed cells") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_servebatch").toString
-    IvfPq.writeIndex(emb, "vec_id", "embedding", dir, dims = 64, nCells = 16, m = 4, k = 16)
+    writeIndex(dir)
     val loaded = IvfPq.loadIndex(dir, spark)
     // a small serve batch at nProbe 2: on i.i.d. vectors each query's
     // probes land near-uniformly, so the batch union must stay strictly
@@ -294,8 +301,12 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("appendToIndex refuses the single-generation layout with a rebuild message") {
+    // a single-generation cells table (no src_batch level), written by hand
+    val src = java.nio.file.Files.createTempDirectory("ivfpq_v1guard_src").toString
+    writeIndex(src)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_v1guard").toString
-    IvfPq.writeIndex(emb, "vec_id", "embedding", dir, dims = 64, nCells = 16, m = 4, k = 16)
+    spark.read.parquet(s"$src/cells").drop(graft.core.Generations.Col)
+      .write.partitionBy("cell").parquet(s"$dir/cells")
     val e = intercept[IllegalArgumentException] {
       IvfPq.appendToIndex(dir, emb.limit(5), "vec_id", "embedding", srcBatch = 1L)
     }
@@ -366,7 +377,7 @@ class IvfPqSpec extends AnyFunSuite {
 
   test("scoreCandidatesServe fails fast past the probe-row bound, naming the distributed path") {
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_serveguard").toString
-    IvfPq.writeIndex(emb, "vec_id", "embedding", dir, dims = 64, nCells = 16, m = 4, k = 16)
+    writeIndex(dir)
     val loaded = IvfPq.loadIndex(dir, spark)
     val e = intercept[IllegalArgumentException] {
       // the full corpus as a "serve batch" must trip the guard, not OOM

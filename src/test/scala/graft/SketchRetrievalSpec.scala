@@ -345,24 +345,25 @@ class SketchRetrievalSpec extends AnyFunSuite {
       (9991L, "antidisestablishment otorhinolaryngology floccinaucinihilipilification qq ww ee rr"))
       .toDF("doc_id", "text")
     val idxDir = java.nio.file.Files.createTempDirectory("neardup_idx").toString
-    Dedup.writeNearDupIndex(old, "doc_id", "text", idxDir, nSigs = 16)
+    Dedup.writeBandedNearDupIndex(old, "doc_id", "text", idxDir)
     // the persisted index is signatures + digest only — no text column
-    val idxCols = spark.read.parquet(idxDir).columns.toSet
+    val idxCols = spark.read.parquet(s"$idxDir/bands").columns.toSet
     assert(!idxCols.contains("text") && idxCols.contains("digest") && idxCols.contains("sig15"))
 
     val newBatch = clones.unionByName(novel)
-    val survDir = Dedup
+    val index = Dedup.signatureProjection(old, "doc_id", "text", 16).drop("__id").distinct()
+    val survMem = Dedup
       .incrementalNearDupNew(newBatch, "doc_id", "text",
-        spark.read.parquet(idxDir), bands = 4, rowsPerBand = 4, simTau = 0.75)
+        index, bands = 4, rowsPerBand = 4, simTau = 0.75)
       .select("doc_id").as[Long].collect().toSet
-    assert(survDir == Set(9990L, 9991L),
-      s"expected only the novel docs to survive, got $survDir")
+    assert(survMem == Set(9990L, 9991L),
+      s"expected only the novel docs to survive, got $survMem")
     // persisted-dir entry point equals the in-memory variant under the
     // library defaults (16 sigs / 0.75) on both paths
-    val viaDir = Dedup.incrementalNearDupNew(newBatch, "doc_id", "text", idxDir)
+    val viaDir = Dedup.incrementalNearDupNewBanded(newBatch, "doc_id", "text", idxDir)
       .select("doc_id").as[Long].collect().toSet
     val viaMem = Dedup
-      .incrementalNearDupNew(newBatch, "doc_id", "text", spark.read.parquet(idxDir))
+      .incrementalNearDupNew(newBatch, "doc_id", "text", index)
       .select("doc_id").as[Long].collect().toSet
     assert(viaDir == viaMem, "indexDir and in-memory index paths diverge")
   }
@@ -381,20 +382,20 @@ class SketchRetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val newBatch = clones.unionByName(novel)
 
-    val flatDir   = java.nio.file.Files.createTempDirectory("neardup_flat").toString
     val bandedDir = java.nio.file.Files.createTempDirectory("neardup_banded").toString
-    Dedup.writeNearDupIndex(old, "doc_id", "text", flatDir, nSigs = 16)
     Dedup.writeBandedNearDupIndex(old, "doc_id", "text", bandedDir, bands = 4, rowsPerBand = 4)
-    assert(Dedup.isBandedIndex(spark, bandedDir) && !Dedup.isBandedIndex(spark, flatDir))
 
-    // decision parity: the banded plan elects exactly the flat plan's rows
-    val flat = Dedup
-      .incrementalNearDupNew(newBatch, "doc_id", "text", spark.read.parquet(flatDir))
+    // decision parity: the banded plan elects exactly the in-memory plan's
+    // rows over the same history
+    val inMem = Dedup
+      .incrementalNearDupNew(newBatch, "doc_id", "text",
+        Dedup.signatureProjection(old, "doc_id", "text", 16).drop("__id").distinct())
       .select("doc_id").as[Long].collect().toSet
     val banded = Dedup
       .incrementalNearDupNewBanded(newBatch, "doc_id", "text", bandedDir)
       .select("doc_id").as[Long].collect().toSet
-    assert(banded == flat, s"banded != flat: only-banded=${banded -- flat}, only-flat=${flat -- banded}")
+    assert(banded == inMem,
+      s"banded != in-memory: only-banded=${banded -- inMem}, only-in-memory=${inMem -- banded}")
     assert(banded == Set(9990L, 9991L))
 
     // partition pruning: a one-doc probe reads <= bands × its distinct
@@ -575,7 +576,7 @@ class SketchRetrievalSpec extends AnyFunSuite {
     val docs    = corpus.toDF("doc_id", "text")
     val queries = Seq((1L, "new the"), (2L, "spark window"), (3L, "lazy dog")).toDF("q_id", "q_text")
     val pDir = java.nio.file.Files.createTempDirectory("bm25_postings").toString
-    Bm25.writePostings(docs, "doc_id", "text", pDir, nBuckets = 8)
+    Bm25.writePostingsGen(docs, "doc_id", "text", pDir, nBuckets = 8)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("q_id", "doc_id", "score", "rn")
       .as[(Long, Long, Double, Int)].collect().toSeq.sorted
@@ -585,7 +586,7 @@ class SketchRetrievalSpec extends AnyFunSuite {
       "the persisted path must reproduce the in-memory path exactly")
     // the build-time df cap is part of the index: capped parity too
     val pDirCap = java.nio.file.Files.createTempDirectory("bm25_postings_cap").toString
-    Bm25.writePostings(docs, "doc_id", "text", pDirCap, nBuckets = 8, maxTermDf = Some(2L))
+    Bm25.writePostingsGen(docs, "doc_id", "text", pDirCap, nBuckets = 8, maxTermDf = Some(2L))
     assert(
       rows(Bm25.topKPerQueryIndexed(pDirCap, queries, "q_id", "q_text", k = 5)) ==
         rows(Bm25.topKPerQuery(docs, "doc_id", "text", queries, "q_id", "q_text", k = 5,
@@ -643,6 +644,32 @@ class SketchRetrievalSpec extends AnyFunSuite {
         spark.read.parquet(s"$fDir/postings")
           .join(docsB.select(col("doc_id")), Seq("doc_id"), "left_semi").count(),
       "generation 1 must hold exactly the appended docs' postings")
+  }
+
+  test("generational postings: null and empty texts score like the in-memory path across " +
+    "bootstrap and append") {
+    import graft.llm.Bm25
+    // null texts count toward N but have no length, so avgdl must skip
+    // them (the in-memory `avg`) in every generation; an empty text has
+    // length 1 (one "" token)
+    val docsA = Seq[(Long, String)](
+      (1L, "new york pizza the best"), (2L, null), (3L, ""), (4L, "lazy dog the end"))
+      .toDF("doc_id", "text")
+    val docsB = Seq[(Long, String)](
+      (5L, null), (6L, "new dog in the city"), (7L, null), (8L, "pizza"))
+      .toDF("doc_id", "text")
+    val queries = Seq((1L, "new the"), (2L, "pizza dog")).toDF("q_id", "q_text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("q_id", "doc_id", "score", "rn")
+      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+    val dir = java.nio.file.Files.createTempDirectory("bm25_gen_nulls").toString
+    Bm25.writePostingsGen(docsA, "doc_id", "text", dir, nBuckets = 8)
+    Bm25.appendToPostings(dir, docsB, "doc_id", "text", srcBatch = 1L)
+    val inMem = rows(Bm25.topKPerQuery(docsA.unionByName(docsB), "doc_id", "text", queries,
+      "q_id", "q_text", k = 5))
+    assert(inMem.nonEmpty)
+    assert(rows(Bm25.topKPerQueryIndexed(dir, queries, "q_id", "q_text", k = 5)) == inMem,
+      "indexed search over null-text generations must equal the in-memory path")
   }
 
   test("generational postings: an empty append adds nothing, a later append scores as if alone") {
@@ -737,18 +764,41 @@ class SketchRetrievalSpec extends AnyFunSuite {
 
   test("generational postings guards: build-once layout rejected, probed scans prune") {
     import graft.llm.Bm25
-    val docs    = corpus.toDF("doc_id", "text")
-    val oldDir  = java.nio.file.Files.createTempDirectory("bm25_flat_guard").toString
-    Bm25.writePostings(docs, "doc_id", "text", oldDir, nBuckets = 8)
+    val docs = corpus.toDF("doc_id", "text")
+    val gDir = java.nio.file.Files.createTempDirectory("bm25_gen_prune").toString
+    Bm25.writePostingsGen(docs, "doc_id", "text", gDir, nBuckets = 8)
+    // a single-generation postings table (no src_batch level), written by
+    // hand under a valid meta sidecar
+    val oldDir = java.nio.file.Files.createTempDirectory("bm25_flat_guard").toString
+    Bm25.writePostingsGen(docs, "doc_id", "text", oldDir, nBuckets = 8)
+    spark.read.parquet(s"$gDir/postings").drop(graft.core.Generations.Col)
+      .write.partitionBy("tb").mode("overwrite").parquet(s"$oldDir/postings")
     val e = intercept[IllegalArgumentException] {
       Bm25.appendToPostings(oldDir, docs, "doc_id", "text", srcBatch = 1L)
     }
     assert(e.getMessage.contains("writePostingsGen"),
       s"the guard must name the rebuild path: ${e.getMessage}")
-    // static bucket pruning holds on the generational layout too: a
-    // one-term query reads one hash bucket of postings AND of dfparts
-    val gDir = java.nio.file.Files.createTempDirectory("bm25_gen_prune").toString
-    Bm25.writePostingsGen(docs, "doc_id", "text", gDir, nBuckets = 8)
+    val eRead = intercept[IllegalArgumentException] {
+      Bm25.topKPerQueryIndexed(oldDir, Seq((1L, "new")).toDF("q_id", "q_text"), "q_id", "q_text")
+    }
+    assert(eRead.getMessage.contains("writePostingsGen"), eRead.getMessage)
+    // a sidecar without the u32md5 term hash (a pre-r16 index) is refused
+    // by reads and appends alike, with the same rebuild message
+    val foreignDir = java.nio.file.Files.createTempDirectory("bm25_foreign_hash").toString
+    Bm25.writePostingsGen(docs, "doc_id", "text", foreignDir, nBuckets = 8)
+    graft.core.IndexMeta.write(Seq((8, -1L)).toDF("nBuckets", "maxTermDf"), foreignDir)
+    val eHash = Seq(
+      intercept[IllegalArgumentException] {
+        Bm25.appendToPostings(foreignDir, docs, "doc_id", "text", srcBatch = 1L)
+      },
+      intercept[IllegalArgumentException] {
+        Bm25.topKPerQueryIndexed(foreignDir, Seq((1L, "new")).toDF("q_id", "q_text"), "q_id",
+          "q_text")
+      }).map(_.getMessage)
+    assert(eHash.distinct.size == 1 && eHash.head.contains("u32md5") &&
+      eHash.head.contains("writePostingsGen"), s"foreign term hash: $eHash")
+    // static bucket pruning holds on the generational layout: a one-term
+    // query reads one hash bucket of postings AND of dfparts
     val res = Bm25.topKPerQueryIndexed(gDir, Seq((9L, "pentaquark")).toDF("q_id", "q_text"),
       "q_id", "q_text", k = 3)
     res.collect()
@@ -834,14 +884,13 @@ class SketchRetrievalSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val expectN     = 4.0
     val expectAvgdl = (3.0 + 1.0 + 2.0) / 3.0 // null text excluded from avg, not from N
-    val pDir = java.nio.file.Files.createTempDirectory("bm25_stats_obs").toString
-    Bm25.writePostings(docs, "doc_id", "text", pDir, nBuckets = 4)
-    val st = spark.read.parquet(s"$pDir/stats").as[(Double, Double)].collect().toSeq
-    assert(st == Seq((expectN, expectAvgdl)), s"build-once stats: $st")
     val gDir = java.nio.file.Files.createTempDirectory("bm25_stats_obs_gen").toString
     Bm25.writePostingsGen(docs, "doc_id", "text", gDir, nBuckets = 4)
     val gt = spark.read.parquet(s"$gDir/stats")
-      .select("__n", "__dlsum").as[(Double, Double)].collect().toSeq
-    assert(gt == Seq((expectN, 6.0)), s"generational stats partial: $gt")
+      .select("__n", "__dlsum", "__dlcnt").as[(Double, Double, Long)].collect().toSeq
+    assert(gt == Seq((expectN, 6.0, 3L)), s"generational stats partial: $gt")
+    // the partials resolve to N and the avg over non-null lengths
+    val (n, dlsum, dlcnt) = gt.head
+    assert(n == expectN && dlsum / dlcnt == expectAvgdl, s"resolved stats: $gt")
   }
 }

@@ -264,7 +264,7 @@ class StreamingSpec extends AnyFunSuite {
     val idxDir = java.nio.file.Files.createTempDirectory("nd_ingest_idx").toString
     val outDir = java.nio.file.Files.createTempDirectory("nd_ingest_out").toString
     val cp     = java.nio.file.Files.createTempDirectory("nd_ingest_cp").toString
-    Dedup.writeNearDupIndex(old, "doc_id", "text", idxDir, nSigs = 16)
+    Dedup.writeBandedNearDupIndex(old, "doc_id", "text", idxDir, bands = 4, rowsPerBand = 4)
 
     val q = StreamingOps.nearDupIngestStream(
       StreamingOps.readDocumentStream(spark, streamDir, maxFilesPerTrigger = Some(1)),
@@ -293,7 +293,7 @@ class StreamingSpec extends AnyFunSuite {
     // replay with a fresh checkpoint: batch ids recur, the src_batch < id
     // filter hides each batch's own (and later) appends, so survivor
     // partitions reproduce exactly despite the polluted index
-    val idxRowsAfterFirstRun = spark.read.parquet(idxDir).count()
+    val idxRowsAfterFirstRun = spark.read.parquet(s"$idxDir/bands").count()
     val cp2 = java.nio.file.Files.createTempDirectory("nd_ingest_cp2").toString
     val q2 = StreamingOps.nearDupIngestStream(
       StreamingOps.readDocumentStream(spark, streamDir, maxFilesPerTrigger = Some(1)),
@@ -302,22 +302,22 @@ class StreamingSpec extends AnyFunSuite {
     assert(partIds(0) == s1 && partIds(1) == s2, "replayed batches diverged from the first run")
     // index append is idempotent: the replay dynamic-overwrites each batch's
     // src_batch partition, so the index must NOT grow across replays
-    assert(spark.read.parquet(idxDir).count() == idxRowsAfterFirstRun,
+    assert(spark.read.parquet(s"$idxDir/bands").count() == idxRowsAfterFirstRun,
       "replayed batches must overwrite their src_batch partitions, not re-append")
   }
 
   test("near-dup ingest refuses a pre-partitioned flat index layout with a rebuild message") {
     import spark.implicits._
     val flatIdx = java.nio.file.Files.createTempDirectory("nd_flat_idx").toString
-    // the pre-r11 layout: parquet files at the root, src_batch a data column
+    // a flat signature table: parquet files at the root, no meta sidecar
     Seq(("d1", 1L, 2L, -1L)).toDF("digest", "sig0", "sig1", "src_batch")
       .coalesce(1).write.mode("overwrite").parquet(flatIdx)
     val err = intercept[IllegalArgumentException] {
       StreamingOps.nearDupIngestStream(
         StreamingOps.readDocumentStream(spark, flatIdx), flatIdx, flatIdx, flatIdx)
     }
-    assert(err.getMessage.contains("FLAT layout") && err.getMessage.contains("writeNearDupIndex"),
-      s"wrong error: ${err.getMessage}")
+    assert(err.getMessage.contains("no meta sidecar") &&
+      err.getMessage.contains("writeBandedNearDupIndex"), s"wrong error: ${err.getMessage}")
   }
 
   test("streaming IVFADC ingest loop: generations land by batch id, restart is a no-op, " +
