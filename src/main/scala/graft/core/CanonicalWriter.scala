@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Sink helpers (SURVEY.md §2B scans/sinks): parquet for pipeline outputs,
-  * and a CANONICAL CSV for hash-comparison — total row order over every
+/** Sink helper (SURVEY.md §2B scans/sinks): a CANONICAL CSV for
+  * hash-comparison — total row order over every
   * column, fixed float formatting (so an engine's last-ulp noise can't
   * change the bytes), ISO timestamps, single header file.
   */
@@ -43,8 +43,4 @@ object CanonicalWriter {
       .mode(SaveMode.Overwrite)
       .option("header", "true")
       .csv(path)
-
-  /** Plain parquet sink for pipeline outputs. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 }

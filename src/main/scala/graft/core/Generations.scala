@@ -28,9 +28,9 @@ import org.apache.spark.sql.types.StructType
   *
   * What stays with each family: its partition columns under or around
   * `src_batch`, its pre-write clustering (`repartition`/`coalesce`, which
-  * fixes the files per directory), its meta sidecar's fields and their
-  * commit order relative to the table write ([[IndexMeta]] writes and
-  * reads the sidecar).
+  * fixes the files per directory), its meta sidecar's fields and format
+  * and their commit order relative to the table write ([[IndexMeta]]
+  * writes, checks and reads the sidecar).
   */
 object Generations {
 
@@ -60,19 +60,14 @@ object Generations {
 
   /** Fail fast when `table`, of `schema`, lacks the [[Col]] partition
     * level (a table written by hand or by an older single-generation
-    * writer), naming the family's writer `rebuildWith`.
+    * writer), naming the family's writer `rebuildWith`. Every family
+    * passes the schema its [[IndexMeta]] holds, so the check costs no job.
     */
   def require(schema: StructType, table: String, rebuildWith: String): Unit =
     Predef.require(
       schema.fieldNames.contains(Col),
       s"$table uses a single-generation layout (no $Col partition level); the index needs " +
         s"the generational layout — rebuild it with $rebuildWith")
-
-  /** [[require]] over `table`'s schema as read now — for the families
-    * without a meta sidecar ([[IndexMeta]] holds the others' schemas).
-    */
-  def require(spark: SparkSession, table: String, rebuildWith: String): Unit =
-    require(spark.read.parquet(table).schema, table, rebuildWith)
 
   /** Highest generation across `tables`, or −1 when they hold no rows —
     * the max aggregate is null over zero rows (a bootstrap from an empty

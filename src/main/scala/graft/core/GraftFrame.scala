@@ -31,11 +31,6 @@ final case class GraftFrame(
 
   def mapDf(f: DataFrame => DataFrame): GraftFrame = copy(df = f(df))
 
-  def withCat(col: String, info: CategoryInfo): GraftFrame =
-    copy(cats = cats + (col -> info))
-
-  def dropCat(col: String): GraftFrame = copy(cats = cats - col)
-
   /** Unordered categorical columns, in DataFrame column order. */
   def unorderedCatCols: Seq[String] =
     df.columns.toIndexedSeq.filter(c => cats.get(c).exists(!_.ordered))

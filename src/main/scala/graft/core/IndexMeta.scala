@@ -11,6 +11,13 @@ import org.apache.spark.sql.types.StructType
   * read would silently swap fields on a schema change) and the schema of
   * each of the index's tables.
   *
+  * All six families keep one. Bm25, banded Dedup, Multimodal and IvfIndex
+  * write it LAST, as the bootstrap's completion marker; AnnBuckets and
+  * IvfPq write it FIRST, since it carries their geometry stamp and a stamp
+  * that lands before the tables makes a load racing a rebuild fail fast.
+  * Its `format` field names the layout, and [[IndexMeta.apply]] is the one
+  * check of whether this code can read a directory.
+  *
   * Everything here changes only when the index is (re)bootstrapped, yet a
   * fresh `spark.read.parquet` pays a schema-inference job for every table
   * it opens and a `head()` job for the sidecar row — fixed per-call costs
@@ -33,9 +40,6 @@ final class IndexMeta private (spark: SparkSession, dir: String, entry: IndexMet
 
   /** The sidecar row; fields by name. */
   def row: Row = entry.row
-
-  /** Whether the sidecar carries `field` (older sidecars lack newer fields). */
-  def has(field: String): Boolean = row.schema.fieldNames.contains(field)
 
   /** Schema of `<dir>/<table>`, inferred on first use under this stamp. */
   def schema(table: String): StructType =
@@ -63,12 +67,20 @@ object IndexMeta {
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
-  /** The index at `dir`, its sidecar stamp checked against the cache. */
-  def apply(spark: SparkSession, dir: String): IndexMeta = {
+  /** The index at `dir`, its sidecar stamp checked against the cache. A
+    * missing sidecar or another `format` is refused, naming the bootstrap
+    * `writer`.
+    */
+  def apply(spark: SparkSession, dir: String, format: String, writer: String): IndexMeta = {
     val (p, fs) = metaPath(spark, dir)
-    val stamp = fs.listStatus(p).toSeq
-      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
-      .sorted
+    val listing =
+      try fs.listStatus(p)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"index at $dir has no meta sidecar — bootstrap it with $writer")
+      }
+    val stamp  = listing.toSeq.map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).sorted
     val key    = fs.makeQualified(p).toString
     val cached = Entries.get(key)
     val entry =
@@ -81,11 +93,15 @@ object IndexMeta {
         Entries.put(key, e)
         e
       }
+    val found =
+      if (entry.row.schema.fieldNames.contains("format")) entry.row.getAs[String]("format") else "absent"
+    require(found == format,
+      s"index at $dir has sidecar format $found, not $format — rebuild it with $writer")
     new IndexMeta(spark, dir, entry)
   }
 
   /** Write the one-row sidecar `meta` of the index at `dir` and drop its
-    * cached entry.
+    * cached entry. `meta` carries the family's `format` field.
     */
   def write(meta: DataFrame, dir: String): Unit = {
     meta.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")

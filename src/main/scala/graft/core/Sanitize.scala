@@ -30,10 +30,6 @@ object Sanitize {
   def sanitizeColNames(cols: Seq[String]): Option[Seq[String]] =
     Option(cols).filter(_.nonEmpty).map(_.map(cleanText))
 
-  /** Same transform as a Catalyst expression, for applying to data columns. */
-  def cleanTextCol(c: Column): Column =
-    lower(regexp_replace(trim(c), " +", "_"))
-
   /** `_column_wrangler` (tasks.py:111–121): sanitize all column names. */
   def columnWrangler(df: DataFrame): DataFrame =
     df.toDF(df.columns.map(cleanText).toIndexedSeq: _*)

@@ -441,12 +441,6 @@ object AnnBuckets {
         col("nrm"))
   }
 
-  /** Persist the LSH index: vectors written once per hash table as a
-    * `tb`-partitioned parquet table (`<outDir>/buckets/tb=<id>/…`) plus a
-    * parameter sidecar (`<outDir>/meta`: nBits, dims, nTables, seed) so
-    * queries re-bucket with the exact same hyperplanes. The durable form
-    * of [[approxTopK]]'s per-run bucketing — build once, probe many.
-    */
   /** Auto-sized PERSISTED buckets cap at 2^14 dirs per table: a partition
     * directory per bucket is the index layout, and a 2^24-bit in-memory
     * bucketing would mean 16M+ directories — a file-count explosion no
@@ -456,13 +450,9 @@ object AnnBuckets {
     */
   val MaxPersistedBits: Int = 14
 
-  /** The parameter sidecar of a persisted LSH index, decoded with
-    * backward-compatible defaults: pre-r14 sidecars have no `nProbes`
-    * (plain single-bucket reads), pre-r15 ones no `epoch`/`geom_id`
-    * (never rebuilt, no stamp to check). `geomId` is `None` exactly when
-    * the index predates the rebuild loop — [[rebuildBucketsGen]] always
-    * stamps, so "no stamp" is unrepresentable as a real hash value (the
-    * `Option`-not-sentinel rule, ADVICE r14).
+  /** The parameter sidecar of a persisted LSH index, decoded: the sizing,
+    * the probe budget, the rebuild epoch and the geometry stamp
+    * ([[stamped]] over the other six) that every writer records.
     */
   final case class BucketsMeta(
       nBits: Int,
@@ -471,7 +461,12 @@ object AnnBuckets {
       seed: Long,
       nProbes: Int,
       epoch: Long,
-      geomId: Option[Long])
+      geomId: Long)
+
+  private val BucketsFormat = "lsh-buckets/1"
+
+  private def bucketsIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String) =
+    IndexMeta(spark, indexDir, BucketsFormat, "AnnBuckets.writeBucketsGen")
 
   /** An index's parameter sidecar, decoded. The sidecar row itself is
     * read once per (re)bootstrap by [[graft.core.IndexMeta]], so a call
@@ -484,40 +479,40 @@ object AnnBuckets {
   def readBucketsMeta(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): BucketsMeta = {
-    val ix  = IndexMeta(spark, indexDir)
-    val row = ix.row
+    val row = bucketsIndex(spark, indexDir).row
     BucketsMeta(
       row.getAs[Int]("nBits"),
       row.getAs[Int]("dims"),
       row.getAs[Int]("nTables"),
       row.getAs[Long]("seed"),
-      if (ix.has("nProbes")) row.getAs[Int]("nProbes") else 0,
-      if (ix.has("epoch")) row.getAs[Long]("epoch") else 0L,
-      if (ix.has("geom_id")) Some(row.getAs[Long]("geom_id")) else None)
+      row.getAs[Int]("nProbes"),
+      row.getAs[Long]("epoch"),
+      row.getAs[Long]("geom_id"))
   }
 
-  /** Deterministic stamp of an LSH index GEOMETRY + rebuild epoch
-    * (FNV-1a over the sizing tuple): unlike IVFADC there is no trained
-    * quantizer to fingerprint — the hyperplanes are (seed, bits)-derived
-    * — but a REBUILD collapses generations and may resize, so the epoch
-    * is mixed in to make every rebuild observable even when the sizing
-    * lands unchanged (a replayed ingest batch that was already collapsed
-    * into the rebuilt batch-0 would otherwise silently double rows).
+  /** A sizing with its deterministic stamp of the LSH index GEOMETRY +
+    * rebuild epoch (FNV-1a over the sizing tuple): unlike IVFADC there is
+    * no trained quantizer to fingerprint — the hyperplanes are (seed,
+    * bits)-derived — but a REBUILD collapses generations and may resize,
+    * so the epoch is mixed in to make every rebuild observable even when
+    * the sizing lands unchanged (a replayed ingest batch that was already
+    * collapsed into the rebuilt batch-0 would otherwise silently double
+    * rows).
     */
-  private[graft] def lshGeomId(
+  private def stamped(
       bits: Int,
       dims: Int,
       tables: Int,
       seed: Long,
       nProbes: Int,
-      epoch: Long): Long = {
+      epoch: Long): BucketsMeta = {
     var h = 0xcbf29ce484222325L
     def mix(x: Long): Unit = {
       var i = 0
       while (i < 8) { h ^= (x >>> (8 * i)) & 0xffL; h *= 0x100000001b3L; i += 1 }
     }
     Seq(bits.toLong, dims.toLong, tables.toLong, seed, nProbes.toLong, epoch).foreach(mix)
-    h
+    BucketsMeta(bits, dims, tables, seed, nProbes, epoch, h)
   }
 
   /** The stamp lives in BOTH halves of the index — `meta.geom_id` and an
@@ -544,14 +539,12 @@ object AnnBuckets {
     */
   private[graft] def writeGeomMarker(
       bucketsDir: String,
-      gid: Long,
-      spark: org.apache.spark.sql.SparkSession,
-      meta: Option[BucketsMeta] = None): Unit = {
+      m: BucketsMeta,
+      spark: org.apache.spark.sql.SparkSession): Unit = {
     val p   = geomMarkerPath(bucketsDir)
     val fs  = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
-    val body = meta.fold(gid.toString)(m =>
-      s"$gid|${m.nBits}|${m.dims}|${m.nTables}|${m.seed}|${m.nProbes}|${m.epoch}")
+    val body = s"${m.geomId}|${m.nBits}|${m.dims}|${m.nTables}|${m.seed}|${m.nProbes}|${m.epoch}"
     out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
   }
@@ -592,41 +585,38 @@ object AnnBuckets {
             s   <- seed.toLongOption
             p   <- probes.toIntOption
             e   <- epoch.toLongOption
-            if lshGeomId(b, d, t, s, p, e) == gid
-          } yield BucketsMeta(b, d, t, s, p, e, Some(gid))
+            m = stamped(b, d, t, s, p, e)
+            if m.geomId == gid
+          } yield m
         case _ => None
       }
     }
 
-  /** Meta-vs-buckets stamp agreement, skipped for pre-r15 indexes (no
-    * stamp on either half — nothing was ever rebuilt). A STAMPED meta
-    * with a MISSING buckets marker is itself a mid-write state, not a
-    * skip: every stamped writer ends by writing the marker, so its
+  /** Meta-vs-buckets stamp agreement. A MISSING buckets marker is itself
+    * a mid-write state: every writer ends by writing the marker, so its
     * absence means a (re)bootstrap's buckets overwrite deleted the old
     * marker and died (or is in flight) before writing the new one —
-    * silently skipping here would serve queries bucketed with meta
-    * sizing against a buckets table of unknown completeness
-    * (ADVICE r15 #2).
+    * serving then would bucket queries with meta sizing against a
+    * buckets table of unknown completeness (ADVICE r15 #2).
     */
   private def requireGeomConsistent(
       indexDir: String,
       meta: BucketsMeta,
-      spark: org.apache.spark.sql.SparkSession): Unit =
-    meta.geomId.foreach { mid =>
-      val bid = readGeomMarker(s"$indexDir/buckets", spark)
-      require(
-        bid.nonEmpty,
-        s"LSH index at $indexDir is mid-rebuild or was left inconsistent: its meta carries a " +
-          s"geometry stamp ($mid) but the buckets table has no _geom marker — a (re)bootstrap " +
-          "overwrite is in flight or died before stamping; retry after it completes, or " +
-          "re-run writeBucketsGen / rebuildBucketsGen to restore a consistent index")
-      require(
-        bid.contains(mid),
-        s"LSH index at $indexDir is mid-rebuild or was left inconsistent (meta geometry " +
-          s"stamp $mid != buckets stamp ${bid.get}) — a rebuildBucketsGen swap is in flight or " +
-          "failed partway; retry after it completes, or re-run rebuildBucketsGen to finish " +
-          "the swap")
-    }
+      spark: org.apache.spark.sql.SparkSession): Unit = {
+    val bid = readGeomMarker(s"$indexDir/buckets", spark)
+    require(
+      bid.nonEmpty,
+      s"LSH index at $indexDir is mid-rebuild or was left inconsistent: its meta carries a " +
+        s"geometry stamp (${meta.geomId}) but the buckets table has no _geom marker — a (re)bootstrap " +
+        "overwrite is in flight or died before stamping; retry after it completes, or " +
+        "re-run writeBucketsGen / rebuildBucketsGen to restore a consistent index")
+    require(
+      bid.contains(meta.geomId),
+      s"LSH index at $indexDir is mid-rebuild or was left inconsistent (meta geometry " +
+        s"stamp ${meta.geomId} != buckets stamp ${bid.get}) — a rebuildBucketsGen swap is in flight or " +
+        "failed partway; retry after it completes, or re-run rebuildBucketsGen to finish " +
+        "the swap")
+  }
 
   /** The ONE bits-resolution rule for persisted writers
     * ([[writeBucketsGen]], [[rebuildBucketsGen]]): auto bits clamp at
@@ -648,25 +638,16 @@ object AnnBuckets {
       b
     }
 
-  /** The one meta-sidecar writer (bootstraps at epoch 0, rebuilds bump
-    * it); returns the geometry stamp it recorded.
-    */
+  /** The one meta-sidecar writer (bootstraps at epoch 0, rebuilds bump it). */
   private def writeMeta(
       spark: org.apache.spark.sql.SparkSession,
       outDir: String,
-      bits: Int,
-      dims: Int,
-      tables: Int,
-      seed: Long,
-      nProbes: Int,
-      epoch: Long): Long = {
+      m: BucketsMeta): Unit = {
     import spark.implicits._
-    val gid = lshGeomId(bits, dims, tables, seed, nProbes, epoch)
     IndexMeta.write(
-      Seq((bits, dims, tables, seed, nProbes, epoch, gid))
-        .toDF("nBits", "dims", "nTables", "seed", "nProbes", "epoch", "geom_id"),
+      Seq((m.nBits, m.dims, m.nTables, m.seed, m.nProbes, m.epoch, m.geomId, BucketsFormat))
+        .toDF("nBits", "dims", "nTables", "seed", "nProbes", "epoch", "geom_id", "format"),
       outDir)
-    gid
   }
 
   /** Persist the LSH index in the GENERATIONAL layout
@@ -693,8 +674,7 @@ object AnnBuckets {
     * one at the same recall target (measured: t×2-probe matched plain
     * autoTables recall at ~⅓ the tables — BENCH_SF1.md). Default is the
     * r14 probed-auto operating point; pass `nTables = 2, nProbes = 0`
-    * for a plain index (old meta sidecars without the column read as
-    * nProbes = 0, so existing indexes serve unchanged).
+    * for a plain index.
     */
   def writeBucketsGen(
       emb: DataFrame,
@@ -718,10 +698,9 @@ object AnnBuckets {
     // re-bootstrap over a LIVE index then fails every racing read fast —
     // new meta vs old buckets marker mismatches, and once the buckets
     // overwrite deletes the old marker the marker-missing state fails
-    // too (requireGeomConsistent); a buckets-first order would have the
-    // overwrite delete `_geom` so readers silently SKIPPED the check and
-    // bucketed queries with stale sizing against the new layout
-    val gid = writeMeta(spark, outDir, bits, dims, tables, seed, nProbes, epoch = 0L)
+    // too (requireGeomConsistent)
+    val m = stamped(bits, dims, tables, seed, nProbes, epoch = 0L)
+    writeMeta(spark, outDir, m)
     Generations.write(
       bucketedRows(emb, idCol, embCol, bits, dims, tables, seed)
         // cluster rows by the partition key BEFORE the partitioned write:
@@ -733,8 +712,7 @@ object AnnBuckets {
         // BENCH_SF1.md round-14 late section)
         .repartition(col("tb")),
       s"$outDir/buckets", srcBatch, Seq("tb", Generations.Col), append = false)
-    writeGeomMarker(s"$outDir/buckets", gid, spark,
-      Some(BucketsMeta(bits, dims, tables, seed, nProbes, 0L, Some(gid))))
+    writeGeomMarker(s"$outDir/buckets", m, spark)
     // the sidecar went first: drop a schema a reader took before the table
     IndexMeta.invalidate(spark, outDir)
   }
@@ -762,7 +740,7 @@ object AnnBuckets {
   private[graft] def requireGenerational(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): Unit =
-    Generations.require(IndexMeta(spark, indexDir).schema("buckets"), s"$indexDir/buckets",
+    Generations.require(bucketsIndex(spark, indexDir).schema("buckets"), s"$indexDir/buckets",
       "AnnBuckets.writeBucketsGen")
 
   /** The [[appendToBuckets]] write against ALREADY-LOADED meta — the
@@ -782,15 +760,13 @@ object AnnBuckets {
       idCol: String,
       embCol: String,
       srcBatch: Long): Unit = {
-    meta.geomId.foreach { mid =>
-      val cur = readGeomMarker(s"$indexDir/buckets", emb.sparkSession)
-      require(
-        cur.contains(mid),
-        s"LSH index at $indexDir was rebuilt since its meta was loaded (buckets stamp " +
-          s"${cur.orNull} != loaded $mid) — the rebuild resized the index and collapsed its " +
-          "generations, so appending under the stale sizing would corrupt it; reload via " +
-          "AnnBuckets.readBucketsMeta and restart the ingest generation space")
-    }
+    val cur = readGeomMarker(s"$indexDir/buckets", emb.sparkSession)
+    require(
+      cur.contains(meta.geomId),
+      s"LSH index at $indexDir was rebuilt since its meta was loaded (buckets stamp " +
+        s"${cur.orNull} != loaded ${meta.geomId}) — the rebuild resized the index and collapsed " +
+        "its generations, so appending under the stale sizing would corrupt it; reload via " +
+        "AnnBuckets.readBucketsMeta and restart the ingest generation space")
     Generations.write(
       bucketedRows(emb, idCol, embCol, meta.nBits, meta.dims, meta.nTables, meta.seed)
         .repartition(col("tb")),
@@ -871,7 +847,7 @@ object AnnBuckets {
         entryFs.rename(tmpPath, livePath),
         s"rebuildBucketsGen: swap-repair rename $tmpPath -> $livePath failed; the complete " +
           "rebuilt table is intact at the temp path — retry, or move it into place manually")
-      writeMeta(spark, indexDir, m.nBits, m.dims, m.nTables, m.seed, m.nProbes, m.epoch)
+      writeMeta(spark, indexDir, m)
     }
     requireGenerational(indexDir, spark)
     val stored = readBucketsMeta(indexDir, spark)
@@ -884,7 +860,7 @@ object AnnBuckets {
     // is the repair, and the requested rebuild then proceeds on the
     // repaired index.
     val old = readGeomMarker(s"$indexDir/buckets", spark) match {
-      case Some(mgid) if stored.geomId.exists(_ != mgid) =>
+      case Some(mgid) if mgid != stored.geomId =>
         val m = readMarkerMeta(s"$indexDir/buckets", spark).getOrElse(
           throw new IllegalStateException(
             s"LSH index at $indexDir has mismatched stamps but a non-self-describing buckets " +
@@ -895,11 +871,11 @@ object AnnBuckets {
           .getLogger(getClass)
           .warn(s"rebuildBucketsGen: finishing an interrupted swap at $indexDir " +
             s"(meta epoch ${stored.epoch} -> marker epoch ${m.epoch}) before rebuilding")
-        writeMeta(spark, indexDir, m.nBits, m.dims, m.nTables, m.seed, m.nProbes, m.epoch)
+        writeMeta(spark, indexDir, m)
         m
       case _ => stored
     }
-    val corpus = IndexMeta(spark, indexDir)
+    val corpus = bucketsIndex(spark, indexDir)
       .read("buckets")
       .where(col("tb") < lit(1 << old.nBits)) // table 0: every vector, once
       .select(col("vec_id"), col("emb"))
@@ -911,16 +887,14 @@ object AnnBuckets {
     require(old.nProbes <= bits,
       s"recorded probe budget ${old.nProbes} exceeds rebuilt bits=$bits — shrink the budget " +
         "or the target occupancy")
-    val epoch = old.epoch + 1
-    val gid   = lshGeomId(bits, old.dims, tables, old.seed, old.nProbes, epoch)
-    val tmp   = s"$indexDir/buckets.rebuild"
+    val next = stamped(bits, old.dims, tables, old.seed, old.nProbes, old.epoch + 1)
+    val tmp  = s"$indexDir/buckets.rebuild"
     // the rebuild write READS the live buckets (lazily, during this job)
     // and must not overwrite its own input — hence the sibling temp dir
     Generations.write(
       bucketedRows(corpus, "vec_id", "emb", bits, old.dims, tables, old.seed).repartition(col("tb")),
       tmp, 0L, Seq("tb", Generations.Col), append = false)
-    writeGeomMarker(tmp, gid, spark,
-      Some(BucketsMeta(bits, old.dims, tables, old.seed, old.nProbes, epoch, Some(gid))))
+    writeGeomMarker(tmp, next, spark)
     val fs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/buckets")
@@ -929,8 +903,8 @@ object AnnBuckets {
       fs.rename(new org.apache.hadoop.fs.Path(tmp), live),
       s"rebuildBucketsGen: rename $tmp -> $live failed; the complete rebuilt table is intact " +
         "at the temp path — re-run rebuildBucketsGen or move it into place manually")
-    writeMeta(spark, indexDir, bits, old.dims, tables, old.seed, old.nProbes, epoch)
-    BucketsMeta(bits, old.dims, tables, old.seed, old.nProbes, epoch, Some(gid))
+    writeMeta(spark, indexDir, next)
+    next
   }
 
   /** Occupancy report for a persisted LSH index — the sizing-drift
@@ -945,7 +919,7 @@ object AnnBuckets {
   def bucketOccupancy(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    IndexMeta(spark, indexDir)
+    bucketsIndex(spark, indexDir)
       .read("buckets")
       .groupBy("tb")
       .agg(count(lit(1)).as("occ"))
@@ -1018,8 +992,7 @@ object AnnBuckets {
       k: Int = 5,
       maxProbedBuckets: Int = MaxProbedBuckets): DataFrame = {
     val spark = queries.sparkSession
-    // probe budget from the sidecar — a pre-r14 index has no column and
-    // serves plain (single-bucket) reads, exactly as it was written for
+    // probe budget from the sidecar: the index serves as it was sized
     val meta = readBucketsMeta(indexDir, spark)
     // fail fast on a mid-rebuild mixed state rather than bucketing the
     // queries with the wrong hyperplane count
@@ -1046,7 +1019,7 @@ object AnnBuckets {
         "is for BOUNDED query batches; for a full-corpus self-join use AnnBuckets.approxTopK " +
         "(single-run bucketing, no probe-set collect), or raise maxProbedBuckets explicitly")
     val probedTbs: Seq[Int] = probedKeys.map(_.getInt(0)).toSeq
-    val lists = IndexMeta(spark, indexDir)
+    val lists = bucketsIndex(spark, indexDir)
       .read("buckets")
       .where(col("tb").isin(probedTbs: _*))
       .select(

@@ -305,31 +305,19 @@ object Bm25 {
     } finally pool.shutdown()
   }
 
-  /** Build parameters from the meta sidecar, READ BY NAME (a positional
-    * read would silently swap fields on a schema change — ADVICE r15 #4):
-    * (nBuckets, maxTermDf as Option). Readers and appends bucket query
-    * terms by [[termBucket]], so an index bucketed any other way (a
-    * pre-r16 sidecar has no `termHash` and was bucketed with Spark's
-    * Murmur3) is refused here, for both.
-    */
-  private def postingsMeta(ix: IndexMeta, postingsDir: String): (Int, Option[Long]) = {
-    val termHash = if (ix.has("termHash")) Some(ix.row.getAs[String]("termHash")) else None
-    require(termHash.contains("u32md5"),
-      s"postings at $postingsDir were not bucketed with u32md5 (sidecar termHash: " +
-        s"${termHash.getOrElse("absent")}) — rebuild via writePostingsGen")
-    val cap = ix.row.getAs[Long]("maxTermDf")
-    (ix.row.getAs[Int]("nBuckets"), if (cap < 0) None else Some(cap))
-  }
+  /** Terms bucketed by [[termBucket]]'s u32 MD5, stats partials with `__dlcnt`. */
+  private val PostingsFormat = "bm25/u32md5/2"
 
-  private def writePostingsMeta(
+  /** The postings index at `postingsDir` and its build parameters, read
+    * by name from the sidecar: (reader, nBuckets, maxTermDf as Option).
+    */
+  private def postingsIndex(
       spark: org.apache.spark.sql.SparkSession,
-      outDir: String,
-      nBuckets: Int,
-      maxTermDf: Option[Long]): Unit = {
-    import spark.implicits._
-    IndexMeta.write(
-      Seq((nBuckets, maxTermDf.getOrElse(-1L), "u32md5")).toDF("nBuckets", "maxTermDf", "termHash"),
-      outDir)
+      postingsDir: String): (IndexMeta, Int, Option[Long]) = {
+    val ix = IndexMeta(spark, postingsDir, PostingsFormat, "Bm25.writePostingsGen")
+    Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
+    val cap = ix.row.getAs[Long]("maxTermDf")
+    (ix, ix.row.getAs[Int]("nBuckets"), if (cap < 0) None else Some(cap))
   }
 
   // ── generational postings (r16): the never-re-read-history ingest ───
@@ -368,7 +356,7 @@ object Bm25 {
     * `postings/tb=<b>/src_batch=<g>/` (term, doc_id, dl, tf),
     * `dfparts/tb=<b>/src_batch=<g>/` (term, per-generation df), and
     * `stats/src_batch=<g>/` (n, Σdl, #non-null dl), plus the `meta`
-    * sidecar (nBuckets, df cap, term hash) written LAST as the layout's
+    * sidecar (nBuckets, df cap, format) written LAST as the layout's
     * completion marker. `tb` is a term-HASH bucket so a query batch's
     * term set prunes statically: a raw per-term partition layout would
     * create one directory per vocabulary entry (millions at corpus
@@ -389,8 +377,13 @@ object Bm25 {
       srcBatch: Long = 0L): Unit = {
     require(nBuckets >= 1 && nBuckets <= 4096,
       s"nBuckets=$nBuckets out of range — the partition-dir count bound")
+    val spark = docs.sparkSession
+    import spark.implicits._
     writeGenTables(docs, idCol, textCol, outDir, nBuckets, maxTermDf, srcBatch, append = false)
-    writePostingsMeta(docs.sparkSession, outDir, nBuckets, maxTermDf)
+    IndexMeta.write(
+      Seq((nBuckets, maxTermDf.getOrElse(-1L), PostingsFormat))
+        .toDF("nBuckets", "maxTermDf", "format"),
+      outDir)
   }
 
   /** Incremental postings ingest: explode ONLY the new batch under the
@@ -409,9 +402,7 @@ object Bm25 {
       idCol: String,
       textCol: String,
       srcBatch: Long): Unit = {
-    val ix = IndexMeta(docs.sparkSession, postingsDir)
-    Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
-    val (nBuckets, maxTermDf) = postingsMeta(ix, postingsDir)
+    val (_, nBuckets, maxTermDf) = postingsIndex(docs.sparkSession, postingsDir)
     writeGenTables(docs, idCol, textCol, postingsDir, nBuckets, maxTermDf, srcBatch, append = true)
   }
 
@@ -515,9 +506,7 @@ object Bm25 {
       k: Int = 10,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val ix = IndexMeta(queries.sparkSession, postingsDir)
-    Generations.require(ix.schema("postings"), s"$postingsDir/postings", "Bm25.writePostingsGen")
-    val (nBuckets, maxTermDf) = postingsMeta(ix, postingsDir)
+    val (ix, nBuckets, maxTermDf) = postingsIndex(queries.sparkSession, postingsDir)
     val qTerms = queries.select(
       Cols.q(qIdCol).as("q_id"),
       explode(array_distinct(split(Cols.q(qTextCol), " "))).as("__term"))

@@ -321,6 +321,11 @@ object Dedup {
     def nSigs: Int = bands * rowsPerBand
   }
 
+  private val BandedFormat = "banded-neardup/1"
+
+  private def bandedIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String) =
+    IndexMeta(spark, indexDir, BandedFormat, "Dedup.writeBandedNearDupIndex")
+
   /** The banded index's contract, read through its `meta` sidecar — the
     * layout's marker, so a directory without one (a flat signature table,
     * or no index at all) is refused here with the bootstrap to run.
@@ -328,15 +333,7 @@ object Dedup {
   private[graft] def readBandedMeta(
       spark: org.apache.spark.sql.SparkSession,
       indexDir: String): BandedMeta = {
-    val ix =
-      try IndexMeta(spark, indexDir)
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalArgumentException(
-            s"near-dup index at $indexDir has no meta sidecar, so it is not a banded index " +
-              "(the only near-dup layout ingest reads) — bootstrap it with " +
-              "Dedup.writeBandedNearDupIndex")
-      }
+    val ix = bandedIndex(spark, indexDir)
     BandedMeta(
       ix.row.getAs[Int]("bands"),
       ix.row.getAs[Int]("rows_per_band"),
@@ -346,9 +343,9 @@ object Dedup {
 
   /** Bootstrap the banded near-dup index: band rows under
     * `<outDir>/bands/src_batch=-1/band_idx=<b>/band_bucket=<h>/`, plus a
-    * one-row `meta` sidecar (bands / rowsPerBand / nBuckets — the layout
-    * contract every later ingest reads back; the hash family
-    * self-describes through the sig column types).
+    * one-row `meta` sidecar written last (bands / rowsPerBand / nBuckets /
+    * format — the layout contract every later ingest reads back; the hash
+    * family self-describes through the sig column types).
     */
   def writeBandedNearDupIndex(
       docs: DataFrame,
@@ -378,7 +375,9 @@ object Dedup {
         .repartition(col("band_idx"), col("band_bucket")),
       s"$outDir/bands", -1L, BandedPartitions, append = false)
     IndexMeta.write(
-      Seq((bands, rowsPerBand, nBuckets)).toDF("bands", "rows_per_band", "n_buckets"), outDir)
+      Seq((bands, rowsPerBand, nBuckets, BandedFormat))
+        .toDF("bands", "rows_per_band", "n_buckets", "format"),
+      outDir)
   }
 
   /** Append an ingest batch's survivors to a banded index — a
@@ -472,7 +471,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val spark    = newSigs.sparkSession
     val n        = meta.nSigs
-    val idxAll   = IndexMeta(spark, indexDir).read("bands")
+    val idxAll   = bandedIndex(spark, indexDir).read("bands")
     val matchMin = math.ceil(simTau * n - 1e-9).toInt
     val wBand = Window.partitionBy("band_idx", "band_val")
     def cut(df: DataFrame): DataFrame = maxBandDf match {

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.{Cols, Generations}
+import graft.core.{Cols, Generations, IndexMeta}
 import graft.functions.GraftFunctions.dot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -289,8 +289,9 @@ object IvfIndex {
   /** Persist the inverted index: vectors written as a CELL-PARTITIONED
     * parquet table in the GENERATIONAL layout
     * (`<outDir>/cells/cell=<id>/src_batch=<b>/…`) plus a centroid sidecar
-    * (`<outDir>/centroids`). This is the durable form of the index
-    * [[approxTopK]] materializes per run — at cluster scale the cell
+    * (`<outDir>/centroids`) and, last, the `meta` sidecar (its format).
+    * This is the durable form of the index [[approxTopK]] materializes
+    * per run — at cluster scale the cell
     * directory IS the inverted list: a probe join touches only the
     * probed cells' files (partition pruning), so query cost scales with
     * cells-probed, not corpus size, and the index is built once and
@@ -346,11 +347,19 @@ object IvfIndex {
       embCol: String,
       outDir: String,
       srcBatch: Long = 0L): Unit = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     Generations.write(
       assignedRows(emb, idCol, embCol, centroids).repartition(col("cell")),
       s"$outDir/cells", srcBatch, Seq("cell", Generations.Col), append = false)
-    writeCentroidSidecar(emb.sparkSession, centroids, outDir)
+    writeCentroidSidecar(spark, centroids, outDir)
+    IndexMeta.write(Seq(Tuple1(IvfFormat)).toDF("format"), outDir)
   }
+
+  private val IvfFormat = "ivf/1"
+
+  private def ivfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String) =
+    IndexMeta(spark, indexDir, IvfFormat, "IvfIndex.writeIndexGen")
 
   /** Incremental plain-IVF ingest: assign a NEW batch under the index's
     * FROZEN centroid sidecar and append it as generation `srcBatch` —
@@ -368,7 +377,8 @@ object IvfIndex {
       embCol: String,
       srcBatch: Long): Unit = {
     val spark = emb.sparkSession
-    Generations.require(spark, s"$indexDir/cells", "IvfIndex.writeIndexGen")
+    Generations.require(ivfIndex(spark, indexDir).schema("cells"), s"$indexDir/cells",
+      "IvfIndex.writeIndexGen")
     Generations.write(
       assignedRows(emb, idCol, embCol, readCentroids(indexDir, spark)).repartition(col("cell")),
       s"$indexDir/cells", srcBatch, Seq("cell", Generations.Col), append = true)
@@ -386,8 +396,8 @@ object IvfIndex {
   def cellOccupancy(
       indexDir: String,
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.read
-      .parquet(s"$indexDir/cells")
+    ivfIndex(spark, indexDir)
+      .read("cells")
       .groupBy("cell")
       .agg(count(lit(1)).as("occ"))
       .agg(
@@ -415,6 +425,7 @@ object IvfIndex {
       k: Int = 5,
       nProbe: Int = 4): DataFrame = {
     val spark     = queries.sparkSession
+    val ix        = ivfIndex(spark, indexDir)
     val centroids = readCentroids(indexDir, spark)
     val probes = withProbeCells(vecBase(queries, idCol, embCol), centroids, nProbe)
       .select(
@@ -428,8 +439,8 @@ object IvfIndex {
     // (cf. AnnBuckets.MaxProbedBuckets)
     val probedCells: Seq[Int] =
       probes.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val lists = spark.read
-      .parquet(s"$indexDir/cells")
+    val lists = ix
+      .read("cells")
       .where(col("cell").isin(probedCells: _*))
       .select(
         col("cell"),

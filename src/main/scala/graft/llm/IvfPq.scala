@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.core.{Cols, Generations}
+import graft.core.{Cols, Generations, IndexMeta}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -254,37 +254,36 @@ object IvfPq {
       .write.mode("overwrite").parquet(s"$outDir/codebooks")
   }
 
-  /** The geometry stamp, written FIRST in every index (re)write
-    * (ADVICE r14 #1): readers derive their own hash from the quantizer
-    * sidecars they actually loaded ([[loadIndex]]) and compare it to this
-    * stamp, so a load racing a rebuild in the window after the stamp
-    * lands but before the cells/sidecars finish sees NEW stamp vs
-    * OLD-quantizer hash and fails fast — the old stamp-written-last
-    * order let that window pair new cells with the old quantizer AND the
-    * old stamp, passing the check and serving wrong distances.
+  private val IvfPqFormat = "ivfadc/1"
+
+  private def ivfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String) =
+    IndexMeta(spark, indexDir, IvfPqFormat, "IvfPq.writeIndexGen")
+
+  /** The geometry stamp — the `meta` sidecar (format, geom_id) — written
+    * FIRST in every index (re)write (ADVICE r14 #1): readers derive their
+    * own hash from the quantizer sidecars they actually loaded
+    * ([[loadIndex]]) and compare it to this stamp, so a load racing a
+    * rebuild in the window after the stamp lands but before the
+    * cells/sidecars finish sees NEW stamp vs OLD-quantizer hash and fails
+    * fast — the old stamp-written-last order let that window pair new
+    * cells with the old quantizer AND the old stamp, passing the check
+    * and serving wrong distances.
     */
   private def writeGeomStamp(
       spark: org.apache.spark.sql.SparkSession,
       idx: IvfPqIndex,
       outDir: String): Unit = {
     import spark.implicits._
-    Seq(Tuple1(geomId(idx)))
-      .toDF("geom_id")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/geom")
+    IndexMeta.write(Seq((IvfPqFormat, geomId(idx))).toDF("format", "geom_id"), outDir)
   }
 
-  /** The persisted geometry stamp, or None for a pre-r14 index (no
-    * `geom` sidecar — those indexes predate [[retrainAndRebuild]], so
-    * there is no rebuild to detect).
+  /** The persisted geometry stamp. While the sidecar is unchanged this is
+    * one driver-side listing of `<indexDir>/meta`, no Spark job.
     */
   private def readGeomId(
       indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Option[Long] = {
-    val p  = new org.apache.hadoop.fs.Path(indexDir, "geom")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).head().getLong(0)) else None
-  }
+      spark: org.apache.spark.sql.SparkSession): Long =
+    ivfPqIndex(spark, indexDir).row.getAs[Long]("geom_id")
 
   /** [[encodeForIndex]] plus the EXACT residual reconstruction error —
     * `err = ‖res − decode(codes)‖` accumulated per subspace at the chosen
@@ -305,15 +304,15 @@ object IvfPq {
 
   /** Persist an ALREADY-BUILT index ([[build]]) and its encoded corpus
     * in the GENERATIONAL layout: `cells/cell=<id>/src_batch=<b>/` (m
-    * codes + id per row, nothing else), plus the geometry stamp and the
-    * centroid and codebook sidecars (nCells + m·k rows). A probe filter
-    * over this layout is STATIC partition pruning on `cell` (the outer
-    * directory level): a query at nProbe=p reads p cells' directories of
-    * code rows, never the corpus. The generation level only scopes
-    * writes, so incremental ingest ([[appendToIndex]]) can add or replay
-    * a batch by (over)writing only that batch's partitions. Takes a
-    * pre-built index so a relational (seed-pinned) quantizer can be
-    * persisted as easily as a Lloyd-trained one.
+    * codes + id per row, nothing else), plus the geometry stamp (the
+    * `meta` sidecar) and the centroid and codebook sidecars (nCells + m·k
+    * rows). A probe filter over this layout is STATIC partition pruning
+    * on `cell` (the outer directory level): a query at nProbe=p reads p
+    * cells' directories of code rows, never the corpus. The generation
+    * level only scopes writes, so incremental ingest ([[appendToIndex]])
+    * can add or replay a batch by (over)writing only that batch's
+    * partitions. Takes a pre-built index so a relational (seed-pinned)
+    * quantizer can be persisted as easily as a Lloyd-trained one.
     */
   def writeIndexGen(
       idx: IvfPqIndex,
@@ -331,6 +330,8 @@ object IvfPq {
     Generations.write(encoded.repartition(col("cell")), s"$outDir/cells", srcBatch,
       Seq("cell", Generations.Col), append = false)
     writeQuantizerSidecars(spark, idx, outDir)
+    // the sidecar went first: drop a schema a reader took before the table
+    IndexMeta.invalidate(spark, outDir)
   }
 
   /** Incremental IVFADC ingest: encode a NEW batch against a persisted
@@ -354,19 +355,18 @@ object IvfPq {
       emb: DataFrame,
       idCol: String,
       vecCol: String,
-      srcBatch: Long): Unit = {
-    Generations.require(emb.sparkSession, s"$indexDir/cells", "IvfPq.writeIndexGen")
+      srcBatch: Long): Unit =
     appendToIndexLoaded(indexDir, loadIndex(indexDir, emb.sparkSession).index, emb, idCol, vecCol,
       srcBatch)
-  }
 
   /** The [[appendToIndex]] write against an ALREADY-LOADED quantizer —
     * the ingest-loop shape: the quantizer is FROZEN for the life of the
     * index, so a loop loads it once and pays only the encode + write per
-    * batch. The sidecar collects and the layout guard are per-loop
-    * costs; the GEOMETRY-STAMP check below is deliberately per-batch
-    * (one tiny sidecar head, ~ms) — it is what lets the loop fail fast
-    * when retrainAndRebuild replaces the quantizer mid-stream.
+    * batch. The sidecar collects and the layout guard ([[loadIndex]])
+    * are per-loop costs; the GEOMETRY-STAMP check below is deliberately
+    * per-batch (one driver-side listing of the `meta` sidecar, no Spark
+    * job while it is unchanged) — it is what lets the loop fail fast when
+    * retrainAndRebuild replaces the quantizer mid-stream.
     */
   def appendToIndexLoaded(
       indexDir: String,
@@ -392,13 +392,12 @@ object IvfPq {
       index: IvfPqIndex,
       encoded: DataFrame,
       srcBatch: Long): Unit = {
-    readGeomId(indexDir, encoded.sparkSession).foreach { cur =>
-      require(
-        cur == geomId(index),
-        s"IVFADC index at $indexDir was rebuilt since this quantizer was loaded (geometry " +
-          s"stamp $cur != loaded ${geomId(index)}) — appending cross-geometry codes would " +
-          "corrupt the index; reload via IvfPq.loadIndex and re-encode the batch")
-    }
+    val cur = readGeomId(indexDir, encoded.sparkSession)
+    require(
+      cur == geomId(index),
+      s"IVFADC index at $indexDir was rebuilt since this quantizer was loaded (geometry " +
+        s"stamp $cur != loaded ${geomId(index)}) — appending cross-geometry codes would " +
+        "corrupt the index; reload via IvfPq.loadIndex and re-encode the batch")
     Generations.write(encoded.repartition(col("cell")), s"$indexDir/cells", srcBatch,
       Seq("cell", Generations.Col), append = true)
   }
@@ -524,7 +523,7 @@ object IvfPq {
   /** A [[writeIndexGen]] directory loaded for serving: the rebuilt in-memory
     * [[IvfPqIndex]] plus the cell-partitioned encoded corpus relation.
     * A serving process calls [[loadIndex]] ONCE and then [[topK]] /
-    * [[scoreCandidates]] per query — the sidecar reads (two small
+    * [[scoreCandidates]] per query — the quantizer reads (two small
     * parquet collects) are a per-load cost, not a per-query one.
     *
     * `dir = None` (a hand-constructed handle) means there is nothing to
@@ -566,19 +565,22 @@ object IvfPq {
       cbRows.filter(_.getInt(0) == s).map(_.getLong(2)))
     val cb  = Pq.Codebooks(m, books(0)(0).length, books, labels)
     val idx = IvfPqIndex(centroids, cb)
-    // load-time consistency check: the stamp is written FIRST in every
-    // (re)write, so a load racing a rebuild sees the new stamp while the
-    // quantizer sidecars are still the old geometry — fail fast here
-    // instead of handing out a handle that pairs old codebooks with new
-    // cells (pre-r14 indexes have no stamp; nothing was ever rebuilt)
-    readGeomId(indexDir, spark).foreach { cur =>
-      require(
-        cur == geomId(idx),
-        s"IVFADC index at $indexDir is mid-rebuild (geometry stamp $cur != loaded quantizer " +
-          s"hash ${geomId(idx)}) — a retrainAndRebuild is replacing it; retry the load after " +
-          "the rebuild completes")
-    }
-    LoadedIndex(idx, spark.read.parquet(s"$indexDir/cells"), dir = Some(indexDir))
+    // load-time consistency check, read AFTER the quantizer: the stamp is
+    // written FIRST in every (re)write, so a load racing a rebuild sees the
+    // new stamp while the quantizer sidecars are still the old geometry —
+    // fail fast here instead of handing out a handle that pairs old
+    // codebooks with new cells
+    val ix  = ivfPqIndex(spark, indexDir)
+    val cur = ix.row.getAs[Long]("geom_id")
+    require(
+      cur == geomId(idx),
+      s"IVFADC index at $indexDir is mid-rebuild (geometry stamp $cur != loaded quantizer " +
+        s"hash ${geomId(idx)}) — a retrainAndRebuild is replacing it; retry the load after " +
+        "the rebuild completes")
+    // the layout guard takes the cells schema only once the stamp matches
+    // the quantizer, whose sidecars land after the cells of its geometry
+    Generations.require(ix.schema("cells"), s"$indexDir/cells", "IvfPq.writeIndexGen")
+    LoadedIndex(idx, ix.read("cells"), dir = Some(indexDir))
   }
 
   /** Query a [[writeIndexGen]] index: sidecars rebuild the in-memory
@@ -715,19 +717,18 @@ object IvfPq {
     // staleness guard: a retrainAndRebuild since loadIndex replaced the
     // quantizer, and decoding rebuilt codes with these (stale) codebooks
     // would serve silently WRONG distances — re-check the geometry stamp
-    // (one tiny sidecar head per serve batch; ~ms next to the scan) and
-    // fail fast telling the loop to reload. The compared value is the
-    // loaded quantizer's OWN hash (never a stored stamp), so a mixed
-    // mid-rebuild handle cannot pass; dir = None (hand-constructed) and
-    // a stamp-less pre-r14 index skip the check explicitly.
+    // (one driver-side listing of the meta sidecar per serve batch, no
+    // Spark job while it is unchanged) and fail fast telling the loop to
+    // reload. The compared value is the loaded quantizer's OWN hash (never
+    // a stored stamp), so a mixed mid-rebuild handle cannot pass; dir =
+    // None (hand-constructed) skips the check explicitly.
     loaded.dir.foreach { d =>
-      readGeomId(d, spark).foreach { current =>
-        require(
-          current == loaded.geomId,
-          s"IVFADC index at $d was rebuilt since loadIndex (geometry stamp " +
-            s"$current != loaded ${loaded.geomId}) — stale codebooks would decode " +
-            "rebuilt codes to wrong distances; reload the index (IvfPq.loadIndex) and retry")
-      }
+      val current = readGeomId(d, spark)
+      require(
+        current == loaded.geomId,
+        s"IVFADC index at $d was rebuilt since loadIndex (geometry stamp " +
+          s"$current != loaded ${loaded.geomId}) — stale codebooks would decode " +
+          "rebuilt codes to wrong distances; reload the index (IvfPq.loadIndex) and retry")
     }
     val cb = loaded.index.cb
     val kk = cb.books.map(_.length).max

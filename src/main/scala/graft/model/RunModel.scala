@@ -29,17 +29,6 @@ final case class RegressionResult(
     n: Long,
     df: Long) {
 
-  /** Tidy (regressor, interval, estimate) frame — the reference's
-    * `conf_int()` stacking (tasks.py:593–600).
-    */
-  def confIntTidy(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    regressors.indices
-      .flatMap(i =>
-        Seq((regressors(i), "lower", ciLower(i)), (regressors(i), "upper", ciUpper(i))))
-      .toDF("regressor", "interval", "estimate")
-  }
-
   def summaryDf(spark: SparkSession): DataFrame = {
     import spark.implicits._
     regressors.indices

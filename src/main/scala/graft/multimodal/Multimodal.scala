@@ -249,9 +249,10 @@ object Multimodal {
   // path that decodes ONLY the new batch (the q117/q139 contract).
 
   /** Decode a media corpus ONCE into a generational features table
-    * (`<outDir>/features/src_batch=<b>/…` + a `meta` sidecar recording
-    * `dims`): the durable form of [[decodeFeatures]]. [[appendFeatures]]
-    * adds a batch by decoding only that batch; [[mediaNearDupIndexed]] /
+    * (`<outDir>/features/src_batch=<b>/…` + a `meta` sidecar, written
+    * last, recording `dims`): the durable form of [[decodeFeatures]].
+    * [[appendFeatures]] adds a batch by decoding only that batch;
+    * [[mediaNearDupIndexed]] /
     * [[writeMediaIndex]] / [[searchMediaIndexed]] consume the persisted
     * vectors without touching the binary payloads again.
     */
@@ -268,8 +269,13 @@ object Multimodal {
     // directory — clustering would only serialize the decode stage
     Generations.write(decodeFeatures(media, dims), s"$outDir/features", srcBatch,
       Seq(Generations.Col), append = false)
-    IndexMeta.write(Seq(Tuple1(dims)).toDF("dims"), outDir)
+    IndexMeta.write(Seq((dims, FeaturesFormat)).toDF("dims", "format"), outDir)
   }
+
+  private val FeaturesFormat = "media-features/1"
+
+  private def featuresIndex(spark: org.apache.spark.sql.SparkSession, featuresDir: String) =
+    IndexMeta(spark, featuresDir, FeaturesFormat, "Multimodal.writeFeaturesGen")
 
   /** Incremental decode: ONLY the new batch's payloads are decoded (under
     * the table's recorded `dims`) and appended as generation `srcBatch` —
@@ -286,7 +292,7 @@ object Multimodal {
   private[graft] def featureDims(
       featuresDir: String,
       spark: org.apache.spark.sql.SparkSession): Int =
-    IndexMeta(spark, featuresDir).row.getAs[Int]("dims")
+    featuresIndex(spark, featuresDir).row.getAs[Int]("dims")
 
   private def writeFeaturesBatch(
       featuresDir: String,
@@ -302,7 +308,7 @@ object Multimodal {
   def readFeatures(
       featuresDir: String,
       spark: org.apache.spark.sql.SparkSession): DataFrame =
-    IndexMeta(spark, featuresDir).read("features").select("media_id", "features")
+    featuresIndex(spark, featuresDir).read("features").select("media_id", "features")
 
   /** Media near-dup through the ANN family (the r14 multimodal→search
     * bridge): decode → fixed-width feature histogram ([[decodeFeatures]])
@@ -456,7 +462,7 @@ object Multimodal {
         "(writeMediaIndex derives its width from the features table, so indexes built " +
         "through it cannot drift)")
     writeFeaturesBatch(featuresDir, media, featureDims, srcBatch)
-    val justWritten = IndexMeta(spark, featuresDir)
+    val justWritten = featuresIndex(spark, featuresDir)
       .read("features")
       .where(col(Generations.Col) === srcBatch)
       .select("media_id", "features")

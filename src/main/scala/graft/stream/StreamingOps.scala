@@ -411,7 +411,6 @@ object StreamingOps {
       baseGen: Long = 1L): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = embeddings.sparkSession
     val cells = s"$indexDir/cells"
-    Generations.require(spark, cells, "IvfPq.writeIndexGen")
     val frozen = graft.llm.IvfPq.loadIndex(indexDir, spark).index
     Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(cells)) { (batch, srcBatch) =>
       graft.llm.IvfPq.appendToIndexLoaded(indexDir, frozen, batch, idCol, vecCol, srcBatch)
@@ -482,7 +481,6 @@ object StreamingOps {
     import graft.llm.IvfPq
     val spark = embeddings.sparkSession
     val cells = s"$indexDir/cells"
-    Generations.require(spark, cells, "IvfPq.writeIndexGen")
     // the quantizer handle is a VAR: the rebuild replaces it mid-loop
     var frozen = IvfPq.loadIndex(indexDir, spark).index
     Generations.ingestLoop(embeddings, checkpoint, baseGen, Seq(cells)) { (b, srcBatch) =>

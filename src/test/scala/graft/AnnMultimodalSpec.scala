@@ -384,10 +384,11 @@ class AnnMultimodalSpec extends AnyFunSuite {
       IvfIndex.approxTopKIndexed(idxB, emb, "vec_id", "embedding", k = 5))
 
     // a single-generation cells table (no src_batch level), written by
-    // hand, is refused with the rebuild path
+    // hand under a valid meta sidecar, is refused with the rebuild path
     val plainIdx = java.nio.file.Files.createTempDirectory("ivf_plain_guard").toString
+    IvfIndex.writeIndexGen(old, "vec_id", "embedding", plainIdx, nCells = 8, srcBatch = 0L)
     spark.read.parquet(s"$idx/cells").drop(graft.core.Generations.Col)
-      .write.partitionBy("cell").parquet(s"$plainIdx/cells")
+      .write.partitionBy("cell").mode("overwrite").parquet(s"$plainIdx/cells")
     val e = intercept[IllegalArgumentException] {
       IvfIndex.appendToIndex(plainIdx, b1, "vec_id", "embedding", srcBatch = 1L)
     }
@@ -450,7 +451,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
     assert(rows.select(col("vec_id").cast("long")).distinct().count() == emb.count(),
       "crash recovery must preserve every vector — a stale-meta corpus read would not")
     assert(rows.count() == emb.count() * m2.nTables)
-    assert(AnnBuckets.readGeomMarker(s"$idx/buckets", spark) == m2.geomId)
+    assert(AnnBuckets.readGeomMarker(s"$idx/buckets", spark).contains(m2.geomId))
     // and serving works again
     assert(AnnBuckets.approxTopKIndexed(idx, emb.limit(2), "vec_id", "embedding", k = 3)
       .count() > 0)
@@ -545,7 +546,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
     assert(rows.select(col("vec_id").cast("long")).distinct().count() == emb.count(),
       "swap repair must preserve every vector")
     assert(rows.count() == emb.count() * m2.nTables)
-    assert(AnnBuckets.readGeomMarker(s"$idx/buckets", spark) == m2.geomId)
+    assert(AnnBuckets.readGeomMarker(s"$idx/buckets", spark).contains(m2.geomId))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/buckets.rebuild")),
       "the finished swap must leave no temp sibling behind")
     assert(AnnBuckets.approxTopKIndexed(idx, emb.limit(2), "vec_id", "embedding", k = 3)

@@ -181,7 +181,7 @@ class ClusteredRecallSpec extends AnyFunSuite {
     appendToBuckets(idx, emb.where(col("vec_id") >= 2048), "vec_id", "embedding", srcBatch = 2L)
     // the geometry marker must survive dynamic-overwrite appends — it is
     // what the per-batch staleness check reads
-    assert(readGeomMarker(s"$idx/buckets", spark) == m0.geomId,
+    assert(readGeomMarker(s"$idx/buckets", spark).contains(m0.geomId),
       "appends must not clobber the buckets geometry marker")
     // 8× the bootstrap corpus at bootstrap sizing → mean occupancy ~2×
     // the 128-row target → the monitor → trigger fires
@@ -230,7 +230,7 @@ class ClusteredRecallSpec extends AnyFunSuite {
     // a mid-rebuild MIXED state (meta and buckets stamps disagree) fails
     // reads fast instead of bucketing queries with the wrong geometry
     // (written through the Hadoop FS so the local checksum stays valid)
-    writeGeomMarker(s"$idx/buckets", 12345L, spark)
+    writeGeomMarker(s"$idx/buckets", m1.copy(geomId = 12345L), spark)
     val e2 = intercept[IllegalArgumentException] {
       approxTopKIndexed(idx, emb.limit(1), "vec_id", "embedding", k = 3).collect()
     }

@@ -1,6 +1,8 @@
 package graft
 
-import graft.llm.{Bm25, Dedup}
+import graft.core.{IndexMeta, Tables}
+import graft.llm.{AnnBuckets, Bm25, Dedup, IvfIndex, IvfPq}
+import graft.multimodal.Multimodal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,9 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The index-metadata reader (`graft.core.IndexMeta`) serves each index's
   * meta row and table schemas from one read per bootstrap; a re-bootstrap
-  * by any writer must be seen by the next call.
+  * by any writer must be seen by the next call, and a directory whose
+  * sidecar is missing or of another format is refused by every family.
   */
 class IndexMetaSpec extends AnyFunSuite {
+  import IndexMetaSpec.Family
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -101,4 +105,79 @@ class IndexMetaSpec extends AnyFunSuite {
     }
     assert(rows(Bm25.topKPerQueryIndexed(dir, queries, "q_id", "q_text", k = 3)) == want2)
   }
+
+  private lazy val families: Seq[Family] = {
+    val tables  = Tables(spark, "/root/testdata/sf0.001")
+    val emb     = tables.embeddings
+    val media   = Multimodal.mediaFromDocuments(tables.documents).where(col("media_id") < 20)
+    val queries = Seq((1L, "lazy dog")).toDF("q_id", "q_text")
+    Seq(
+      Family("Bm25.writePostingsGen",
+        d => Bm25.writePostingsGen(old, "doc_id", "text", d, nBuckets = 4),
+        d => Bm25.topKPerQueryIndexed(d, queries, "q_id", "q_text"),
+        d => Bm25.appendToPostings(d, batch, "doc_id", "text", srcBatch = 1L)),
+      Family("Dedup.writeBandedNearDupIndex",
+        d => Dedup.writeBandedNearDupIndex(old, "doc_id", "text", d, bands = 4, rowsPerBand = 2,
+          nBuckets = 4),
+        d => Dedup.incrementalNearDupNewBanded(batch, "doc_id", "text", d),
+        d => Dedup.appendBandedNearDupIndex(batch, "doc_id", "text", d, batchId = 0L)),
+      Family("AnnBuckets.writeBucketsGen",
+        d => AnnBuckets.writeBucketsGen(emb, "vec_id", "embedding", d, nBits = 4, nTables = 2,
+          nProbes = 0),
+        d => AnnBuckets.approxTopKIndexed(d, emb.limit(2), "vec_id", "embedding", k = 3),
+        d => AnnBuckets.appendToBuckets(d, emb.limit(3), "vec_id", "embedding", srcBatch = 1L)),
+      Family("Multimodal.writeFeaturesGen",
+        d => Multimodal.writeFeaturesGen(media, d),
+        d => Multimodal.readFeatures(d, spark),
+        d => Multimodal.appendFeatures(d, media, srcBatch = 1L)),
+      Family("IvfIndex.writeIndexGen",
+        d => IvfIndex.writeIndexGen(emb, "vec_id", "embedding", d, nCells = 4),
+        d => IvfIndex.approxTopKIndexed(d, emb.limit(2), "vec_id", "embedding", k = 3),
+        d => IvfIndex.appendToIndex(d, emb.limit(3), "vec_id", "embedding", srcBatch = 1L)),
+      Family("IvfPq.writeIndexGen",
+        d => {
+          val (idx, encoded) =
+            IvfPq.build(emb, "vec_id", "embedding", dims = 64, nCells = 4, m = 4, k = 8)
+          IvfPq.writeIndexGen(idx, encoded, d)
+        },
+        d => IvfPq.loadIndex(d, spark),
+        d => IvfPq.appendToIndex(d, emb.limit(3), "vec_id", "embedding", srcBatch = 1L)))
+  }
+
+  test("every family refuses a directory without a sidecar or with another format") {
+    families.foreach { f =>
+      val dir  = tmp("meta_refusal")
+      f.boot(dir)
+      val meta = spark.read.parquet(s"$dir/meta")
+      val rows = meta.collect()
+      def refusals(why: String): Unit =
+        Seq("read" -> f.read, "append" -> f.append).foreach { case (op, run) =>
+          val e = intercept[IllegalArgumentException](run(dir))
+          assert(e.getMessage.contains(why) && e.getMessage.contains(f.writer),
+            s"${f.writer} $op: ${e.getMessage}")
+        }
+      // (a) no sidecar
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      require(fs.delete(new Path(dir, "meta"), true))
+      refusals("no meta sidecar")
+      // (b) the family's own fields under another format
+      IndexMeta.write(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), meta.schema)
+          .withColumn("format", lit("other")),
+        dir)
+      refusals("format other")
+    }
+  }
+}
+
+object IndexMetaSpec {
+
+  /** One persisted index family: its bootstrap's name, the bootstrap
+    * itself, and one read and one append against the built directory.
+    */
+  final case class Family(
+      writer: String,
+      boot: String => Unit,
+      read: String => Any,
+      append: String => Any)
 }

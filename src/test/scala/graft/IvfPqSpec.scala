@@ -301,12 +301,14 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("appendToIndex refuses the single-generation layout with a rebuild message") {
-    // a single-generation cells table (no src_batch level), written by hand
+    // a single-generation cells table (no src_batch level), written by
+    // hand under a valid meta sidecar
     val src = java.nio.file.Files.createTempDirectory("ivfpq_v1guard_src").toString
     writeIndex(src)
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_v1guard").toString
+    writeIndex(dir)
     spark.read.parquet(s"$src/cells").drop(graft.core.Generations.Col)
-      .write.partitionBy("cell").parquet(s"$dir/cells")
+      .write.partitionBy("cell").mode("overwrite").parquet(s"$dir/cells")
     val e = intercept[IllegalArgumentException] {
       IvfPq.appendToIndex(dir, emb.limit(5), "vec_id", "embedding", srcBatch = 1L)
     }

@@ -468,4 +468,28 @@ class ScalePostureSpec extends AnyFunSuite {
     assert(jobs.headOption.exists(_.forall(_.startsWith("collect at Jobs.scala"))),
       s"the first job must be the band-bucket probe: $jobs")
   }
+
+  test("a warm IVFADC stamp check runs no Spark job") {
+    import graft.llm.IvfPq
+    val emb = Tables(spark, dir).embeddings
+    val ixDir = Files.createTempDirectory("ivfpq_stamp_jobs").toString
+    val (idx, encoded) =
+      IvfPq.build(emb, "vec_id", "embedding", dims = 64, nCells = 4, m = 4, k = 8)
+    IvfPq.writeIndexGen(idx, encoded, ixDir)
+    val loaded = IvfPq.loadIndex(ixDir, spark) // warms the sidecar
+    // a handle whose quantizer is not the index's: each guard refuses it
+    // right after its stamp check, before any job of its own
+    val stale = IvfPq.IvfPqIndex(idx.centroids.map(_.map(_ + 1.0)), idx.cb)
+    val batch = encoded.limit(4)
+    val queries = emb.limit(2)
+    val jobs = jobStages("ivfpq-stamp-jobs") {
+      intercept[IllegalArgumentException] {
+        IvfPq.appendEncodedLoaded(ixDir, stale, batch, srcBatch = 1L)
+      }
+      intercept[IllegalArgumentException] {
+        IvfPq.scoreCandidatesServe(queries, loaded.copy(index = stale))
+      }
+    }
+    assert(jobs.isEmpty, s"warm stamp checks ran ${jobs.size} jobs: $jobs")
+  }
 }
