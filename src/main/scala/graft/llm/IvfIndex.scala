@@ -2,7 +2,7 @@ package graft.llm
 
 import graft.core.{Cols, Generations, IndexMeta}
 import graft.functions.GraftFunctions.dot
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,33 +10,22 @@ import org.apache.spark.sql.functions._
   * quantizer alternative to the random-hyperplane LSH in [[AnnBuckets]]
   * (SURVEY.md §2B north star names both).
   *
-  * Train: k centroids by Lloyd iterations expressed as DataFrame jobs —
-  * assignment is a codegen'd argmin over broadcast centroid literals
-  * (distance via the [[graft.functions.DotProduct]] expression), the
-  * update is one posexplode + (cell, dim) aggregate; only k×dims doubles
-  * ever sit on the driver. Deterministic: seeded hash-ordered init, fixed
-  * iteration count.
+  * Train: k centroids by Lloyd iterations in driver memory over a bounded
+  * hash-ordered sample ([[trainCentroids]]); only the sample and k×dims
+  * doubles ever sit on the driver. Deterministic: seeded hash-ordered
+  * init, fixed iteration count.
+  *
+  * Assign: one argmin, [[nearestCells]], behind every path — Lloyd's
+  * driver-side steps (nearest cell) and the broadcast kernel that gives
+  * each corpus or query row its `nProbe` nearest cells
+  * ([[assignProbesKernel]]). Centroids reach executors as a broadcast
+  * primitive array, never as generated code.
   *
   * Search: each vector probes its `nProbe` nearest cells and meets only the
   * vectors assigned there — at cluster scale the cell id is the shuffle
   * key (inverted lists co-locate), and recall/cost tune via k and nProbe.
   */
 object IvfIndex {
-
-  /** Squared-distance column to a constant centroid (‖e‖² term omitted —
-    * constant per row, irrelevant to argmin over centroids).
-    */
-  private def distTo(embCol: Column, c: Array[Double]): Column = {
-    val lit2c = typedLit(c.map(_ * 2.0).toSeq)
-    val c2    = c.map(x => x * x).sum
-    lit(c2) - dot(embCol, lit2c)
-  }
-
-  /** Nearest-centroid cell id via array_min over (dist, idx) structs. */
-  private def cellExpr(embCol: Column, centroids: Array[Array[Double]]): Column =
-    array_min(array(centroids.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-      struct(distTo(embCol, c).as("d"), lit(i).as("cell"))
-    }: _*)).getField("cell")
 
   /** Train centroids on a bounded deterministic sample: the first
     * `trainSample` rows in hash-of-id order are collected once (the first
@@ -46,9 +35,9 @@ object IvfIndex {
     * TakeOrdered job instead of `iters` full passes over the corpus, and
     * at 100 TB the sample bound keeps driver memory at
     * O(trainSample × dims) while training cost stays independent of
-    * corpus size. Assignment replicates [[cellExpr]]'s argmin exactly
-    * (same ‖c‖² − 2·e·c expansion, same (dist, cell) lexicographic
-    * tie-break); empty cells keep their centroid.
+    * corpus size. Each Lloyd step assigns with [[nearestCells]], the
+    * argmin every read and write replays; empty cells keep their
+    * centroid. Rows with a null id or embedding are not sampled.
     */
   def trainCentroids(
       emb: DataFrame,
@@ -58,7 +47,9 @@ object IvfIndex {
       iters: Int = 3,
       seed: Int = 42,
       trainSample: Int = 4096): Array[Array[Double]] = {
-    val e   = emb.select(Cols.q(idCol).as("id"), Cols.q(embCol).cast("array<double>").as("emb"))
+    val e = emb
+      .select(Cols.q(idCol).as("id"), Cols.q(embCol).cast("array<double>").as("emb"))
+      .where(col("id").isNotNull && col("emb").isNotNull)
     val cap = math.max(k, trainSample)
     // probe cap+1 rows so "corpus is larger than the sample" is a fact, not
     // an inference from exact equality (which also fires when |corpus|==cap)
@@ -79,34 +70,12 @@ object IvfIndex {
     val sample    = probed.take(cap)
     var centroids = sample.take(k)
 
-    def nearest(v: Array[Double]): Int = {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < centroids.length) {
-        // same arithmetic as distTo: Σcᵢ² − Σ vᵢ·(2cᵢ), summed in index
-        // order, so sample points land in the same cells either path
-        val cen = centroids(c)
-        var c2 = 0.0
-        var dp = 0.0
-        var i = 0
-        while (i < cen.length) {
-          c2 += cen(i) * cen(i)
-          dp += v(i) * (2.0 * cen(i))
-          i += 1
-        }
-        val d = c2 - dp
-        if (d < bestD) { bestD = d; best = c } // strict < = lowest-cell tie-break
-        c += 1
-      }
-      best
-    }
-
     for (_ <- 1 to iters) {
+      val (twoC, c2) = distanceTerms(centroids)
       val sums = Array.fill(k)(new Array[Double](centroids(0).length))
       val cnts = new Array[Long](k)
       sample.foreach { v =>
-        val c = nearest(v)
+        val c = nearestCells(v, twoC, c2, 1)(0)
         cnts(c) += 1
         var i = 0
         while (i < v.length) { sums(c)(i) += v(i); i += 1 }
@@ -128,24 +97,11 @@ object IvfIndex {
     * QUADRATICALLY; the sf1 full-suite bench measured 31× growth for 10×
     * data at nCells=16. √n sizing makes both occupancy and cell count grow
     * as √n, keeping candidate volume at n^1.5 · nProbe — the IVF trade.
-    * Clamped to [16, 65536]: above [[KernelCellThreshold]] cells the
-    * assignment switches from per-centroid expressions to the
-    * broadcast-matrix kernel, so large cell counts stay cheap.
+    * Clamped to [16, 65536]; assignment is one flat-array scan per row
+    * ([[assignProbesKernel]]), so large cell counts stay cheap.
     */
   def autoCells(n: Long): Int =
     math.min(65536, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
-
-  /** Above this many cells, centroid assignment runs as a broadcast-
-    * matrix mapPartitions kernel instead of per-centroid Catalyst
-    * expressions: an expression tree with hundreds of 64-dim dot
-    * products splinters codegen (and at thousands of cells falls back to
-    * interpreted eval), while the kernel is one flat-array scan per row
-    * with an O(nProbe) insertion top-k — the [[BruteForce]] pattern. The
-    * two paths produce IDENTICAL assignments: same ‖c‖² − 2·e·c
-    * expansion with the same index-order double summation, same
-    * (dist, cell) lexicographic tie-break (spec-pinned).
-    */
-  val KernelCellThreshold: Int = 128
 
   /** Approximate cosine top-k: probe the `nProbe` nearest cells per vector,
     * rank candidates exactly (rounded score + id tie-break).
@@ -181,7 +137,7 @@ object IvfIndex {
     // materialized (localCheckpoint) because both sides of the candidate
     // self-join derive from it — this IS the inverted index; the
     // persisted form is [[writeIndexGen]]'s cell-partitioned table.
-    val indexed = withProbeCells(vecBase(emb, idCol, embCol), centroids, nProbe)
+    val indexed = assignProbesKernel(vecBase(emb, idCol, embCol), centroids, nProbe)
       .withColumn("cell", col("probe_cells").getItem(0))
       .localCheckpoint(true)
 
@@ -206,24 +162,6 @@ object IvfIndex {
     emb
       .select(Cols.q(idCol).as("vec_id"), Cols.q(embCol).cast("array<double>").as("emb"))
       .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-
-  /** Adds `probe_cells` (nProbe nearest cells, nearest first) via the
-    * expression path or the broadcast-matrix kernel, by cell count.
-    */
-  private def withProbeCells(
-      base: DataFrame,
-      centroids: Array[Array[Double]],
-      nProbe: Int): DataFrame =
-    if (centroids.length <= KernelCellThreshold) {
-      val distArr = array(centroids.zipWithIndex.toIndexedSeq.map { case (c, i) =>
-        struct(distTo(col("emb"), c).as("d"), lit(i).as("cell"))
-      }: _*)
-      base.withColumn(
-        "probe_cells",
-        transform(slice(array_sort(distArr), 1, nProbe), p => p.getField("cell")))
-    } else {
-      assignProbesKernel(base, centroids, nProbe)
-    }
 
   /** Shared scoring tail (also used by [[AnnBuckets.approxTopKIndexed]]):
     * exact cosine over the candidate join, ranked by (rounded score desc,
@@ -257,7 +195,7 @@ object IvfIndex {
       idCol: String,
       embCol: String,
       centroids: Array[Array[Double]]): DataFrame =
-    withProbeCells(vecBase(emb, idCol, embCol), centroids, nProbe = 1)
+    assignProbesKernel(vecBase(emb, idCol, embCol), centroids, nProbe = 1)
       .select(col("probe_cells").getItem(0).as("cell"), col("vec_id"), col("emb"), col("nrm"))
 
   private def writeCentroidSidecar(
@@ -275,15 +213,15 @@ object IvfIndex {
   }
 
   /** The persisted centroids, cell-ordered — the frozen quantizer every
-    * read and append re-derives its assignment from.
+    * read and append re-derives its assignment from. Read with the
+    * sidecar's cached schema (the centroids are written before it) and
+    * sorted on the driver: one job.
     */
-  private def readCentroids(
-      indexDir: String,
-      spark: org.apache.spark.sql.SparkSession): Array[Array[Double]] =
-    spark.read
-      .parquet(s"$indexDir/centroids")
-      .orderBy("cell")
+  private def readCentroids(ix: IndexMeta): Array[Array[Double]] =
+    ix.read("centroids")
+      .select("cell", "centroid")
       .collect()
+      .sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 
   /** Persist the inverted index: vectors written as a CELL-PARTITIONED
@@ -376,11 +314,10 @@ object IvfIndex {
       idCol: String,
       embCol: String,
       srcBatch: Long): Unit = {
-    val spark = emb.sparkSession
-    Generations.require(ivfIndex(spark, indexDir).schema("cells"), s"$indexDir/cells",
-      "IvfIndex.writeIndexGen")
+    val ix = ivfIndex(emb.sparkSession, indexDir)
+    Generations.require(ix.schema("cells"), s"$indexDir/cells", "IvfIndex.writeIndexGen")
     Generations.write(
-      assignedRows(emb, idCol, embCol, readCentroids(indexDir, spark)).repartition(col("cell")),
+      assignedRows(emb, idCol, embCol, readCentroids(ix)).repartition(col("cell")),
       s"$indexDir/cells", srcBatch, Seq("cell", Generations.Col), append = true)
   }
 
@@ -424,10 +361,8 @@ object IvfIndex {
       embCol: String,
       k: Int = 5,
       nProbe: Int = 4): DataFrame = {
-    val spark     = queries.sparkSession
-    val ix        = ivfIndex(spark, indexDir)
-    val centroids = readCentroids(indexDir, spark)
-    val probes = withProbeCells(vecBase(queries, idCol, embCol), centroids, nProbe)
+    val ix = ivfIndex(queries.sparkSession, indexDir)
+    val probes = assignProbesKernel(vecBase(queries, idCol, embCol), readCentroids(ix), nProbe)
       .select(
         col("vec_id").as("a_id"),
         col("emb").as("a_emb"),
@@ -450,11 +385,63 @@ object IvfIndex {
     rankCandidates(probes, lists, k)
   }
 
-  /** Broadcast-matrix probe assignment: centroids as one flat primitive
-    * array shared across tasks, each row scanning it with an O(nProbe)
-    * insertion top-k. Arithmetic parity with [[distTo]]: distance is
-    * ‖c‖² − Σ_j e_j·(2c_j) summed in index order in doubles, ties break
-    * (dist, cell) lexicographic — bit-identical to the expression path.
+  /** The two driver-side terms of the IVF distance: every centroid's
+    * 2·c, flattened cell-major, and its ‖c‖² (index-order sum).
+    */
+  private def distanceTerms(
+      centroids: Array[Array[Double]]): (Array[Double], Array[Double]) = {
+    val dims = if (centroids.isEmpty) 0 else centroids(0).length
+    val twoC = new Array[Double](centroids.length * dims)
+    var c = 0
+    while (c < centroids.length) {
+      var j = 0
+      while (j < dims) { twoC(c * dims + j) = centroids(c)(j) * 2.0; j += 1 }
+      c += 1
+    }
+    (twoC, centroids.map(c => KMeans.sqNorm(c, 0, c.length)))
+  }
+
+  /** THE IVF argmin: the `take` nearest cells of `e`, nearest first. The
+    * distance is the UNROUNDED ‖c‖² − Σ_j e_j·(2c_j), summed in index order
+    * in doubles (‖e‖² is constant per row and omitted); ties break
+    * (dist, cell) lexicographic — cells scan ascending and only a strictly
+    * smaller distance moves ahead. `twoC`/`c2` come from [[distanceTerms]].
+    */
+  private[graft] def nearestCells(
+      e: Array[Double],
+      twoC: Array[Double],
+      c2: Array[Double],
+      take: Int): Array[Int] = {
+    val nc   = c2.length
+    val dims = if (nc == 0) 0 else twoC.length / nc
+    val d    = math.min(e.length, dims)
+    val t    = math.min(take, nc)
+    val ds   = new Array[Double](t)
+    val cs   = new Array[Int](t)
+    var size = 0
+    var c = 0
+    while (c < nc) {
+      var s = 0.0
+      var j = 0
+      while (j < d) { s += e(j) * twoC(c * dims + j); j += 1 }
+      val dist = c2(c) - s
+      if (size < t || (size > 0 && dist < ds(size - 1))) {
+        var i = math.min(size, t - 1)
+        while (i > 0 && dist < ds(i - 1)) {
+          ds(i) = ds(i - 1); cs(i) = cs(i - 1); i -= 1
+        }
+        ds(i) = dist; cs(i) = c
+        if (size < t) size += 1
+      }
+      c += 1
+    }
+    cs
+  }
+
+  /** Adds `probe_cells` (the nProbe nearest cells, nearest first, by
+    * [[nearestCells]]) to a [[vecBase]] frame: the centroid terms are
+    * broadcast once and each row scans them. Rows with a null id or
+    * embedding are dropped.
     */
   private[graft] def assignProbesKernel(
       base: DataFrame,
@@ -462,51 +449,14 @@ object IvfIndex {
       nProbe: Int): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val nc   = centroids.length
-    val dims = if (nc == 0) 0 else centroids(0).length
-    val twoC = new Array[Double](nc * dims)
-    val c2   = new Array[Double](nc)
-    var ci = 0
-    while (ci < nc) {
-      val c = centroids(ci)
-      var j = 0
-      while (j < dims) { twoC(ci * dims + j) = c(j) * 2.0; j += 1 }
-      c2(ci) = c.map(x => x * x).sum
-      ci += 1
-    }
-    val bc = spark.sparkContext.broadcast((twoC, c2))
+    val bc = spark.sparkContext.broadcast(distanceTerms(centroids))
     base
       .select(col("vec_id").cast("long"), col("emb"), col("nrm"))
+      .where(col("vec_id").isNotNull && col("emb").isNotNull)
       .as[(Long, Array[Double], Double)]
       .mapPartitions { it =>
         val (twoC, c2) = bc.value
-        val nc   = c2.length
-        val take = math.min(nProbe, nc)
-        it.map { case (id, e, nrm) =>
-          val d  = math.min(e.length, if (nc == 0) 0 else twoC.length / nc)
-          val ds = new Array[Double](take)
-          val cs = new Array[Int](take)
-          var size = 0
-          var c = 0
-          while (c < nc) {
-            var s = 0.0
-            var j = 0
-            while (j < d) { s += e(j) * twoC(c * d + j); j += 1 }
-            val dist = c2(c) - s
-            // (dist, cell) lex insertion — cell ids scan ascending, so on
-            // equal dist the earlier (smaller) cell id stays ahead
-            if (size < take || dist < ds(size - 1)) {
-              var i = math.min(size, take - 1)
-              while (i > 0 && dist < ds(i - 1)) {
-                ds(i) = ds(i - 1); cs(i) = cs(i - 1); i -= 1
-              }
-              ds(i) = dist; cs(i) = c
-              if (size < take) size += 1
-            }
-            c += 1
-          }
-          (id, e, nrm, cs.take(size).toSeq)
-        }
+        it.map { case (id, e, nrm) => (id, e, nrm, nearestCells(e, twoC, c2, nProbe).toSeq) }
       }
       .toDF("vec_id", "emb", "nrm", "probe_cells")
   }

@@ -33,41 +33,15 @@ object IvfPq {
       centroids: Array[Array[Double]],
       cb: Pq.Codebooks)
 
-  private def centroidCase(centroids: Array[Array[Double]], cellCol: Column): Column =
-    centroids.zipWithIndex.foldLeft(typedlit(Seq.empty[Double]): Column) {
-      case (acc, (c, i)) => when(cellCol === i, typedlit(c.toSeq)).otherwise(acc)
-    }
-
-  /** Cell assignment + residual projection for a corpus frame:
-    * (vec_id, cell, res). Assignment is the [[KMeans]] argmin contract
-    * (rounded distance, smaller cell on ties) over the given centroids.
-    */
-  private[graft] def residuals(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val cents = centroids.zipWithIndex.map { case (c, i) => KMeans.Centroid(i.toLong, c) }
-    KMeans
-      .assign(emb, idCol, vecCol, cents)
-      .select(
-        col("vec_id"),
-        col("cluster").cast("int").as("cell"),
-        zip_with(
-          col("__emb"),
-          centroidCase(centroids, col("cluster").cast("int")),
-          (a, b) => a - b).as("res"))
-  }
-
-  /** The same (vec_id, cell, res) frame as [[residuals]], computed by one
-    * broadcast kernel instead of the expression CASE + zip_with
-    * (bit-identical, spec-pinned): the argmin replicates the [[KMeans]]
-    * kernel contract, the residual is the same index-order subtraction.
-    * Left LAZY on purpose — the fused [[Pq.train]] passes are
-    * mapPartitions kernels that evaluate their input stream once per
-    * pass, so re-deriving the residual costs one cheap kernel per pass
-    * instead of a corpus-sized localCheckpoint materialization (measured
-    * 16 s of q128's 21 s at sf10).
+  /** Cell assignment + residual for a corpus frame, (vec_id, cell, res),
+    * in one broadcast kernel: the cell is [[KMeans.nearestIndex]] over the
+    * coarse centroids (rounded distance, smaller cell on ties), the
+    * residual the index-order `v − centroid(cell)`. Rows with a null id or
+    * embedding are dropped. Left LAZY on purpose — the fused [[Pq.train]]
+    * passes are mapPartitions kernels that evaluate their input stream
+    * once per pass, so re-deriving the residual costs one cheap kernel per
+    * pass instead of a corpus-sized localCheckpoint materialization
+    * (measured 16 s of q128's 21 s at sf10).
     */
   private[graft] def residualKernelFrame(
       emb: DataFrame,
@@ -82,6 +56,7 @@ object IvfPq {
       .select(
         Cols.q(idCol).cast("long").as("vec_id"),
         Cols.q(vecCol).cast("array<double>").as("v"))
+      .where(col("vec_id").isNotNull && col("v").isNotNull)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val (cents, c2s) = bc.value
@@ -115,10 +90,7 @@ object IvfPq {
     // residuals via the LAZY broadcast kernel: the fused Pq.train makes
     // 1 + iters passes total, each re-deriving the residual inside its own
     // mapPartitions input stream — cheaper than materializing the corpus-
-    // sized frame through localCheckpoint (16 s of q128's 21 s at sf10).
-    // (The old hazard — a lazy CASE/zip_with residual re-embedded into
-    // every one of Pq.encode's m·k distance EXPRESSIONS, blowing the 64 KB
-    // codegen limit — doesn't apply to kernel consumers.)
+    // sized frame through localCheckpoint (16 s of q128's 21 s at sf10)
     val res = residualKernelFrame(emb, idCol, vecCol, centroids)
     val cb  = Pq.train(res, "vec_id", "res", dims, m, k, pqIters)
     val idx = IvfPqIndex(centroids, cb)
@@ -130,15 +102,15 @@ object IvfPq {
     (idx, encodeForIndex(emb, idCol, vecCol, idx))
   }
 
-  /** The two-stage reference encoding (PQ-encode the residual frame, then
-    * re-join it for the cell column) — kept for the kernel parity spec.
+  /** The two-stage encoding (PQ-encode the residual frame, then re-join
+    * it for the cell column) — kept for the one-pass kernel parity spec.
     */
   private[graft] def encodeViaResiduals(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       index: IvfPqIndex): DataFrame = {
-    val res = residuals(emb, idCol, vecCol, index.centroids)
+    val res = residualKernelFrame(emb, idCol, vecCol, index.centroids)
     Pq.encode(res, "vec_id", "res", index.cb)
       .join(res.select("vec_id", "cell"), Seq("vec_id"))
   }
@@ -182,6 +154,7 @@ object IvfPq {
     val bc        = spark.sparkContext.broadcast((index, coarseC2s, bookC2s))
     emb
       .select(Cols.q(idCol).cast("long").as("vec_id"), Cols.q(vecCol).cast("array<double>").as("v"))
+      .where(col("vec_id").isNotNull && col("v").isNotNull)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val (ix, c2s, bC2s) = bc.value

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.core.{Cols, Jobs}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd k-means over the embedding column — the domain
@@ -43,14 +43,6 @@ object KMeans {
   /** One centroid: its stable label (the init seed's id) and position. */
   final case class Centroid(label: Long, vec: Array[Double])
 
-  /** Above this k, assignment switches from a k-branch expression fold to
-    * a broadcast centroid-matrix kernel — same threshold and same reason
-    * as [[SemDedup.KernelSeedThreshold]] (codegen compile time grows with
-    * the fold while the kernel scans one flat array; results are
-    * bit-identical, spec-pinned).
-    */
-  val KernelThreshold: Int = 16
-
   /** Deterministic init: the k smallest-salted-md5 vectors, labelled by
     * their own id, sorted by label.
     */
@@ -65,23 +57,44 @@ object KMeans {
       .map(s => Centroid(s.id, s.vec))
       .sortBy(_.label)
 
-  private def sq(c: Array[Double]): Double = {
+  /** ‖v[off, off + len)‖², summed in index order. */
+  private[graft] def sqNorm(v: Array[Double], off: Int, len: Int): Double = {
     var s = 0.0
     var i = 0
-    while (i < c.length) { s += c(i) * c(i); i += 1 }
+    while (i < len) { val x = v(off + i); s += x * x; i += 1 }
     s
   }
 
+  /** Squared euclidean distance from `v[off, off + len)` to `cen` by the
+    * ‖v‖² − 2 v·c + ‖c‖² expansion, the dot summed in index order over
+    * the shorter of the two, clamped at 0 so identical vectors cannot give
+    * sqrt(−ε) = NaN. `ss` is ‖v[off, off + len)‖², `c2` is ‖cen‖².
+    */
+  private[graft] def sqDist(
+      v: Array[Double],
+      off: Int,
+      len: Int,
+      ss: Double,
+      cen: Array[Double],
+      c2: Double): Double = {
+    val n  = math.min(len, cen.length)
+    var dp = 0.0
+    var j  = 0
+    while (j < n) { dp += v(off + j) * cen(j); j += 1 }
+    math.max(ss - 2.0 * dp + c2, 0.0)
+  }
+
   /** THE coarse-argmin kernel contract, in one place: index of the
-    * nearest centroid by ROUNDED euclidean distance (expansion form,
-    * clamped radicand, 6 dp), strict-< displacement so ties keep the
-    * smaller index — callers that label by id must pass centroids in
-    * ascending-label order. `off`/`len` select a subrange of `v` (the PQ
-    * subspace case); full-vector callers pass (0, v.length). `c2s(c)`
-    * is the precomputed ‖centroid c‖². Shared by [[assignKernel]]'s
-    * siblings ([[IvfPq]]'s residual/encode kernels, [[Pq]]'s fused
-    * subspace fits) so a rounding or tie-rule change cannot drift
-    * between them.
+    * nearest centroid by ROUNDED euclidean distance (`round6` of
+    * sqrt([[sqDist]])), strict-< displacement so ties keep the smaller
+    * index — callers that label by id must pass centroids in
+    * ascending-label order. `Double.compare` ranks a NaN greatest, as
+    * Spark's and DuckDB's orders do. `off`/`len` select a subrange of `v`
+    * (the PQ subspace case); full-vector callers pass (0, v.length).
+    * `c2s(c)` is the precomputed ‖centroid c‖². Shared by
+    * [[assignKernel]], [[IvfPq]]'s residual/encode kernels and [[Pq]]'s
+    * encode and fused subspace fits, so a rounding or tie-rule change
+    * cannot drift between them.
     */
   private[graft] def nearestIndex(
       v: Array[Double],
@@ -89,134 +102,57 @@ object KMeans {
       len: Int,
       cents: Array[Array[Double]],
       c2s: Array[Double]): Int = {
-    var ss = 0.0
-    var i  = 0
-    while (i < len) { val x = v(off + i); ss += x * x; i += 1 }
+    val ss    = sqNorm(v, off, len)
     var best  = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      val cen = cents(c)
-      var dp  = 0.0
-      var j   = 0
-      while (j < len) { dp += v(off + j) * cen(j); j += 1 }
-      val d = BruteForce.round6(math.sqrt(math.max(ss - 2.0 * dp + c2s(c), 0.0)))
+      val d = BruteForce.round6(math.sqrt(sqDist(v, off, len, ss, cents(c), c2s(c))))
       if (java.lang.Double.compare(d, bestD) < 0) { bestD = d; best = c }
       c += 1
     }
     best
   }
 
-  /** Rounded euclidean distance to a literal centroid: ‖v‖² is the shared
-    * `s2` column, v·c the codegen'd index-order dot, ‖c‖² a driver
-    * constant computed in the same index order.
-    */
-  private def distCol(s2: Column, vec: Column, c: Array[Double]): Column =
-    round(
-      sqrt(greatest(
-        s2 - lit(2.0) * graft.functions.GraftFunctions.dot(vec, typedlit(c.toSeq)) + lit(sq(c)),
-        lit(0.0))),
-      6)
-
   /** Assignment under the given centroids: (vec_id, cluster, dist, __emb).
     * `__emb` rides along for the update aggregate; the declared output
-    * drops it.
+    * drops it. Rows with a null id or embedding are dropped.
     */
   def assign(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
-      cents: Array[Centroid]): DataFrame =
-    assignVia(emb, idCol, vecCol, cents, cents.length > KernelThreshold)
-
-  /** Dispatch body, path pinned — the spec drives both strategies over the
-    * same centroids to assert bit-equality (the [[SemDedup.assignCellsVia]]
-    * pattern).
-    */
-  private[graft] def assignVia(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cents: Array[Centroid],
-      useKernel: Boolean): DataFrame = {
+      cents: Array[Centroid]): DataFrame = {
     require(cents.nonEmpty, "no centroids")
-    val sorted = cents.sortBy(_.label)
-    val base = emb.select(
-      Cols.q(idCol).cast("long").as("vec_id"),
-      Cols.q(vecCol).cast("array<double>").as("__emb"))
-    if (useKernel) assignKernel(base, sorted)
-    else {
-      val withS2 = base.withColumn(
-        "__s2",
-        graft.functions.GraftFunctions.dot(col("__emb"), col("__emb")))
-      // distances as REAL projected columns before the argmin fold — the
-      // SemDedup lesson: folding over the expressions directly re-embeds
-      // the accumulated tree at every level
-      val withDs = withS2.select(
-        col("vec_id") +: col("__emb") +:
-          sorted.zipWithIndex.map { case (c, i) =>
-            distCol(col("__s2"), col("__emb"), c.vec).as(s"__d_$i")
-          }: _*)
-      val best = sorted.zipWithIndex.tail.foldLeft((lit(sorted.head.label), col("__d_0"))) {
-        case ((bestL, bestD), (c, i)) =>
-          val d = col(s"__d_$i")
-          (when(d < bestD, lit(c.label)).otherwise(bestL), least(d, bestD))
-      }
-      withDs.select(
-        col("vec_id"),
-        best._1.as("cluster"),
-        best._2.as("dist"),
-        col("__emb"))
-    }
+    val base = emb
+      .select(
+        Cols.q(idCol).cast("long").as("vec_id"),
+        Cols.q(vecCol).cast("array<double>").as("__emb"))
+      .where(col("vec_id").isNotNull && col("__emb").isNotNull)
+    assignKernel(base, cents.sortBy(_.label))
   }
 
-  /** Broadcast centroid-matrix argmin for large k — flat primitive array
-    * scanned once per row, bit-identical to the expression path (same
-    * expansion, same index order, `Round` HALF_UP at 6 dp, strict-<
-    * displacement in ascending label order; `Double.compare` so a NaN —
-    * impossible given the clamp, but defensively — ranks greatest, as
-    * Spark's `<` total order does).
+  /** Broadcast centroid-matrix argmin: the label-sorted centroids are
+    * shipped once per executor and each row runs [[nearestIndex]] over
+    * them, then recomputes the winner's rounded distance with the same
+    * arithmetic. No centroid value reaches generated code, so a new
+    * centroid set compiles nothing new.
     */
   private def assignKernel(base: DataFrame, sorted: Array[Centroid]): DataFrame = {
     val spark = base.sparkSession
     import spark.implicits._
-    val k    = sorted.length
-    val dims = sorted(0).vec.length
-    val flat = new Array[Double](k * dims)
-    val c2s  = new Array[Double](k)
-    val lbls = new Array[Long](k)
-    var i = 0
-    while (i < k) {
-      System.arraycopy(sorted(i).vec, 0, flat, i * dims, dims)
-      c2s(i) = sq(sorted(i).vec)
-      lbls(i) = sorted(i).label
-      i += 1
-    }
-    val bc = spark.sparkContext.broadcast((lbls, flat, c2s))
+    val vecs = sorted.map(_.vec)
+    val c2s  = vecs.map(c => sqNorm(c, 0, c.length))
+    val bc   = spark.sparkContext.broadcast((sorted.map(_.label), vecs, c2s))
     base
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val (lbls, flat, c2s) = bc.value
-        val k = lbls.length
-        val d = if (k == 0) 0 else flat.length / k
+        val (lbls, vecs, c2s) = bc.value
         it.map { case (vid, v) =>
-          var s2 = 0.0
-          var j = 0
-          while (j < v.length) { s2 += v(j) * v(j); j += 1 }
-          var bestL = lbls(0)
-          var bestD = Double.MaxValue
-          var c = 0
-          val dd = math.min(d, v.length)
-          while (c < k) {
-            var dp = 0.0
-            var p = 0
-            val off = c * d
-            while (p < dd) { dp += v(p) * flat(off + p); p += 1 }
-            val dist = BruteForce.round6(math.sqrt(math.max(s2 - 2.0 * dp + c2s(c), 0.0)))
-            if (java.lang.Double.compare(dist, bestD) < 0) { bestD = dist; bestL = lbls(c) }
-            c += 1
-          }
-          (vid, bestL, bestD, v)
+          val best = nearestIndex(v, 0, v.length, vecs, c2s)
+          val dist = BruteForce.round6(
+            math.sqrt(sqDist(v, 0, v.length, sqNorm(v, 0, v.length), vecs(best), c2s(best))))
+          (vid, lbls(best), dist, v)
         }
       }
       .toDF("vec_id", "cluster", "dist", "__emb")

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.core.Cols
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * (asymmetric distance computation): per query, an m×k lookup table of
   * exact subspace distances is computed once on the driver and each
   * candidate costs m table lookups — a pure codegen projection over the
-  * code arrays, no vector math per row.
+  * code arrays, no vector math per row. Encoding is one broadcast-kernel
+  * pass whose per-subspace argmin is [[KMeans.nearestIndex]].
   *
   * Determinism: codebooks come from [[KMeans]] per subspace (salted-md5
   * init, rounded iterations), so with a pinned iteration count the WHOLE
@@ -250,156 +251,71 @@ object Pq {
       .toDF("s", "cluster", "sub")
   }
 
-  /** Above this m·k, [[encode]] switches from the m·k-column expression
-    * projection to a broadcast codebook kernel: 64 higher-order-function
-    * distance expressions fused into one stage exceed the JVM's 64 KB
-    * method limit and whole-stage codegen silently falls back to
-    * interpretation — the kernel scans one flat primitive array instead.
-    * Results are bit-identical (same expansion, index order, round6,
-    * strict-< argmin), spec-pinned.
-    */
-  val KernelBudget: Int = 32
-
   /** Encode every vector as m codebook indices (0-based position in the
     * label-sorted codebook): per subspace, the argmin of the ROUNDED
     * euclidean distance, smaller index on ties — the [[KMeans]]
-    * assignment contract. One projection (codegen below [[KernelBudget]]
-    * expressions, broadcast kernel above); nothing shuffles.
+    * assignment contract ([[KMeans.nearestIndex]]). One kernel pass;
+    * nothing shuffles.
     */
   def encode(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       cb: Codebooks): DataFrame =
-    encodeVia(emb, idCol, vecCol, cb, cb.m * cb.books.map(_.length).max > KernelBudget)
+    encodeKernel(emb, idCol, vecCol, cb).select(
+      col("vec_id") +: (0 until cb.m).map(s => col("__codes")(s).as(s"code$s")): _*)
 
-  private[graft] def encodeVia(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cb: Codebooks,
-      useKernel: Boolean): DataFrame =
-    if (useKernel) encodeKernel(emb, idCol, vecCol, cb)
-    else encodeExpr(emb, idCol, vecCol, cb)
-
-  private def encodeKernel(
+  /** Per-vector reconstruction error ‖v − decode(encode(v))‖ (rounded):
+    * the quantization-quality metric the training contract is stated in.
+    * Comes out of the same pass as the codes.
+    */
+  def reconstructionError(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       cb: Codebooks): DataFrame =
-    encodeRawKernel(emb, idCol, vecCol, cb).select(
-      col("vec_id") +: (0 until cb.m).map(s => col("__codes")(s).as(s"code$s")): _*)
+    encodeKernel(emb, idCol, vecCol, cb).select(
+      col("vec_id") +:
+        (0 until cb.m).map(s => col("__codes")(s).as(s"code$s")) :+
+        col("__err").as("err"): _*)
 
-  /** Kernel producing codes AND the reconstruction error in one pass:
-    * argmin per subspace on the ROUNDED distance (expression-path
-    * contract), error from the RAW squared distance of the chosen
-    * centroid, summed in subspace order.
+  /** The one encode kernel: (vec_id, __codes, __err). Per subspace the
+    * winner comes from [[KMeans.nearestIndex]] over the broadcast
+    * codebooks; the error is the RAW squared distance of each winner
+    * ([[KMeans.sqDist]]), summed in subspace order, then rooted and
+    * rounded. Rows with a null id or embedding are dropped.
     */
-  private def encodeRawKernel(
+  private def encodeKernel(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
       cb: Codebooks): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cb)
+    val c2s = cb.books.map(_.map(c => KMeans.sqNorm(c, 0, c.length)))
+    val bc  = spark.sparkContext.broadcast((cb, c2s))
     emb
       .select(Cols.q(idCol).cast("long").as("vec_id"), Cols.q(vecCol).cast("array<double>").as("v"))
+      .where(col("vec_id").isNotNull && col("v").isNotNull)
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
-        val b    = bc.value
-        val c2sA = b.books.map(_.map(c => { var a = 0.0; var i = 0; while (i < c.length) { a += c(i) * c(i); i += 1 }; a }))
+        val (b, c2s) = bc.value
         it.map { case (id, v) =>
           val codes = new Array[Int](b.m)
           var errSq = 0.0
           var s = 0
           while (s < b.m) {
-            val off = s * b.subDim
-            // winner via the ONE shared argmin kernel, then the winner's
-            // RAW squared distance for the reconstruction error
-            val bestI = KMeans.nearestIndex(v, off, b.subDim, b.books(s), c2sA(s))
-            val cen   = b.books(s)(bestI)
-            var ss = 0.0
-            var dp = 0.0
-            var j  = 0
-            while (j < b.subDim) {
-              ss += v(off + j) * v(off + j)
-              dp += v(off + j) * cen(j)
-              j += 1
-            }
-            codes(s) = bestI
-            errSq += math.max(ss - 2.0 * dp + c2sA(s)(bestI), 0.0)
+            val off  = s * b.subDim
+            val best = KMeans.nearestIndex(v, off, b.subDim, b.books(s), c2s(s))
+            codes(s) = best
+            errSq += KMeans.sqDist(
+              v, off, b.subDim, KMeans.sqNorm(v, off, b.subDim), b.books(s)(best), c2s(s)(best))
             s += 1
           }
           (id, codes, BruteForce.round6(math.sqrt(errSq)))
         }
       }
       .toDF("vec_id", "__codes", "__err")
-  }
-
-  private def encodeExpr(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cb: Codebooks,
-      withErr: Boolean = false): DataFrame = {
-    val vec = Cols.q(vecCol).cast("array<double>")
-    val perSub = (0 until cb.m).map { s =>
-      val sub = slice(vec, s * cb.subDim + 1, cb.subDim)
-      val cols = cb.books(s).zipWithIndex.map { case (c, i) =>
-        val c2 = c.map(x => x * x).sum
-        val raw = greatest(
-          graft.functions.GraftFunctions.dot(sub, sub) -
-            lit(2.0) * graft.functions.GraftFunctions.dot(sub, typedlit(c.toSeq)) + lit(c2),
-          lit(0.0))
-        (round(sqrt(raw), 6).as(s"__pd_${s}_$i"), raw.as(s"__pr_${s}_$i"))
-      }
-      (cols, s)
-    }
-    // project every subspace distance once, then fold argmins over column
-    // references (the SemDedup/KMeans fold rule); the raw squared
-    // distances ride along only when the error is requested (one pass —
-    // no second scan, no re-join, mirroring the kernel)
-    val projected = perSub.flatMap { case (cols, _) =>
-      if (withErr) cols.flatMap { case (d, r) => Seq(d, r) } else cols.map(_._1)
-    }
-    val withDs = emb.select(
-      (Cols.q(idCol).cast("long").as("vec_id") +: projected): _*)
-    val folded = perSub.map { case (_, s) =>
-      val init = (lit(0), col(s"__pd_${s}_0"), col(s"__pr_${s}_0"))
-      (1 until cb.books(s).length).foldLeft(init) {
-        case ((bestI, bestD, bestR), i) =>
-          val d = col(s"__pd_${s}_$i")
-          (
-            when(d < bestD, lit(i)).otherwise(bestI),
-            least(d, bestD),
-            when(d < bestD, col(s"__pr_${s}_$i")).otherwise(bestR))
-      }
-    }
-    val codes = folded.zipWithIndex.map { case ((c, _, _), s) => c.as(s"code$s") }
-    if (!withErr) withDs.select(col("vec_id") +: codes: _*)
-    else {
-      val err = round(sqrt(folded.map(_._3).reduce(_ + _)), 6).as("err")
-      withDs.select(col("vec_id") +: codes :+ err: _*)
-    }
-  }
-
-  /** Per-vector reconstruction error ‖v − decode(encode(v))‖ (rounded):
-    * the quantization-quality metric the training contract is stated in.
-    */
-  def reconstructionError(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      cb: Codebooks): DataFrame = {
-    if (cb.m * cb.books.map(_.length).max > KernelBudget)
-      encodeRawKernel(emb, idCol, vecCol, cb).select(
-        col("vec_id") +:
-          (0 until cb.m).map(s => col("__codes")(s).as(s"code$s")) :+
-          col("__err").as("err"): _*)
-    // expression path: codes and error come out of the SAME argmin fold
-    // (one scan, no re-join), mirroring the kernel's single pass
-    else encodeExpr(emb, idCol, vecCol, cb, withErr = true)
   }
 
   /** ADC top-k: the query's exact distance to every codebook centroid is

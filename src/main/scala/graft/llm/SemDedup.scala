@@ -23,10 +23,9 @@ import org.apache.spark.sql.functions._
   * the within-cell scan below is agnostic to where cells came from.
   *
   * Scale shape: seed pick is one TakeOrdered job collecting O(k) rows;
-  * assignment is a pure projection (k rounded-cosine expressions per
-  * row — codegen'd [[graft.functions.DotProduct]] against literal seed
-  * vectors, no join, no shuffle); the within-cell scan is ONE shuffle on
-  * the cell key with a secondary sort on id, streamed against each
+  * assignment is one kernel pass (k rounded cosines per row against the
+  * broadcast seed matrix, no join); the within-cell scan is ONE shuffle
+  * on the cell key with a secondary sort on id, streamed against each
   * cell's reference prefix (the first `maxPrevRefs` vectors by id), so
   * both the pair work (O(n · maxPrevRefs · d) total) and the per-task
   * memory (O(maxPrevRefs · d)) are bounded no matter how skewed the
@@ -86,18 +85,6 @@ object SemDedup {
   def autoK(n: Long): Int =
     math.min(65536, math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** Above this many seeds, assignment runs as a broadcast seed-matrix
-    * mapPartitions kernel instead of a k-branch expression fold: dozens
-    * of 64-dim dot-product expressions pay ~1 s of codegen compilation
-    * per ACTION and the fold tree grows O(k²) (the
-    * [[IvfIndex.KernelCellThreshold]] lesson), while the kernel scans one
-    * flat primitive array per row with no codegen growth. Results are
-    * bit-identical — same index-order dot, same 6-dp rounding, same
-    * (cos desc, id asc) argmax tie-break — so the dispatch is purely
-    * physical (spec-pinned).
-    */
-  val KernelSeedThreshold: Int = 16
-
   private def saltedMd5(id: Column, salt: String): Column =
     md5(concat(lit(salt + "|"), id.cast("string")).cast("binary"))
 
@@ -130,74 +117,27 @@ object SemDedup {
   }
 
   /** Cell assignment as a pure projection: the seed with the greatest
-    * ROUNDED cosine (ties → smaller seed id; the fold visits seeds in
-    * ascending id order and only a strictly greater score displaces the
-    * incumbent). Returns (id, cell, emb) with the caller's column names
-    * untouched upstream.
+    * ROUNDED cosine (ties → smaller seed id). Returns (vec_id, cell, emb);
+    * rows with a null id or embedding are dropped.
+    *
+    * Seeds travel as one broadcast flat primitive array and each row scans
+    * it once: index-order dot, `round6` (Catalyst `Round` semantics, so
+    * the DuckDB oracle replays it), strict-> displacement over seeds in
+    * ascending id order so ties keep the smaller seed id. NaN: Spark SQL's
+    * `>` ranks NaN above every double (its total order), where Java's `>`
+    * is always false on NaN — so displacement uses `Double.compare`, whose
+    * total order matches Spark's (and DuckDB's NaN-greatest sort). No seed
+    * value reaches generated code, so a new seed set compiles nothing new.
     */
   def assignCells(
       emb: DataFrame,
       idCol: String,
       vecCol: String,
-      seeds: Array[Seed]): DataFrame =
-    assignCellsVia(emb, idCol, vecCol, seeds, seeds.length > KernelSeedThreshold)
-
-  /** Dispatch body, path pinned — the spec drives both strategies over
-    * the same seeds to assert bit-equality.
-    */
-  private[graft] def assignCellsVia(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      seeds: Array[Seed],
-      useKernel: Boolean): DataFrame = {
+      seeds: Array[Seed]): DataFrame = {
     require(seeds.nonEmpty, "no seeds")
-    val sorted = seeds.sortBy(_.id)
-    val base = emb.select(
-      Cols.q(idCol).cast("long").as("vec_id"),
-      Cols.q(vecCol).cast("array<double>").as("__emb"))
-    val withNrm = base.withColumn(
-      "__nrm",
-      sqrt(graft.functions.GraftFunctions.dot(col("__emb"), col("__emb"))))
-    if (useKernel) assignCellsKernel(withNrm, sorted)
-    else {
-      def cosTo(s: Seed): Column =
-        round(
-          graft.functions.GraftFunctions.dot(col("__emb"), typedlit(s.vec.toSeq)) /
-            (col("__nrm") * lit(s.nrm)),
-          6)
-      // each seed's cosine becomes a REAL projected column before the
-      // argmax fold: folding over the cosTo expressions directly would
-      // re-embed the whole accumulated greatest(...) chain at every
-      // level (each bestCs appears in both the `when` and the next
-      // `greatest` — a ~2^k expression-tree blowup that measured
-      // seconds per action at k=45); over column references the fold
-      // tree is O(k²) leaf refs and stays in whole-stage codegen
-      val withCs = withNrm.select(
-        col("vec_id") +: col("__emb") +:
-          sorted.zipWithIndex.map { case (s, i) => cosTo(s).as(s"__cs_$i") }: _*)
-      val best = sorted.zipWithIndex.tail.foldLeft((lit(sorted.head.id), col("__cs_0"))) {
-        case ((bestId, bestCs), (s, i)) =>
-          val cs = col(s"__cs_$i")
-          (when(cs > bestCs, lit(s.id)).otherwise(bestId), greatest(cs, bestCs))
-      }
-      withCs.select(col("vec_id"), best._1.as("cell"), col("__emb").as("emb"))
-    }
-  }
-
-  /** Broadcast seed-matrix assignment for large k: seeds as one flat
-    * primitive array shared across tasks, each row scanning it once.
-    * Bit-identical to the expression path: index-order dot, `round6`
-    * (Catalyst `Round` semantics), strict-> displacement over seeds in
-    * ascending id order so ties keep the smaller seed id. NaN parity:
-    * Spark SQL's `>` ranks NaN above every double (its total order),
-    * where Java's `>` is always false on NaN — so displacement uses
-    * `Double.compare`, whose total order matches Spark's (and DuckDB's
-    * NaN-greatest sort).
-    */
-  private def assignCellsKernel(withNrm: DataFrame, sorted: Array[Seed]): DataFrame = {
-    val spark = withNrm.sparkSession
+    val spark = emb.sparkSession
     import spark.implicits._
+    val sorted = seeds.sortBy(_.id)
     val k    = sorted.length
     val dims = sorted(0).vec.length
     val flat = new Array[Double](k * dims)
@@ -211,8 +151,12 @@ object SemDedup {
       i += 1
     }
     val bc = spark.sparkContext.broadcast((ids, flat, nrms))
-    val src = withNrm
-      .select(col("vec_id"), col("__emb"), col("__nrm"))
+    val src = emb
+      .select(
+        Cols.q(idCol).cast("long").as("vec_id"),
+        Cols.q(vecCol).cast("array<double>").as("__emb"))
+      .where(col("vec_id").isNotNull && col("__emb").isNotNull)
+      .withColumn("__nrm", sqrt(graft.functions.GraftFunctions.dot(col("__emb"), col("__emb"))))
       .as[(Long, Array[Double], Double)]
     // the n·k·d kernel inherits the SCAN's partitioning (a handful of
     // parquet files at bench scale → a handful of tasks on a 32-core
@@ -383,9 +327,9 @@ object SemDedup {
     * rarely binds and exact semantics are kept outright), and route HERE
     * when (a) cells saturate badly enough that the prefix truncation is
     * unacceptable (watch the `graft.semdedup.cappedCells` accumulator),
-    * or (b) √n seeds are themselves too many to carry as assignment
-    * literals (k · d doubles per projection — ~16 MB at n = 10⁹, the
-    * practical ceiling of the seeded-cell design).
+    * or (b) √n seeds are themselves too many to broadcast (k · d
+    * doubles — ~16 MB at n = 10⁹, the practical ceiling of the
+    * seeded-cell design).
     *
     * Candidate volume scales with bucket occupancy (held constant by
     * `autoBits`), so total work stays ~linear in the corpus.

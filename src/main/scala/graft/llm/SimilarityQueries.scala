@@ -1254,8 +1254,8 @@ object SimilarityQueries {
     * the batch's partitions. The declared result is the index CONTENT
     * read back through the persisted layout, so DuckDB replays the whole
     * ingest: the salted-md5 batch split, the old-only seed pick, and
-    * every vector's UNROUNDED distTo argmin (‖c‖² − Σ eᵢ·(2cᵢ) in index
-    * order — the [[IvfIndex]] assignment contract, exact-FP-replayable
+    * every vector's UNROUNDED argmin (‖c‖² − Σ eᵢ·(2cᵢ) in index order —
+    * the [[IvfIndex.nearestCells]] contract, exact-FP-replayable
     * because both engines sum IEEE doubles in the same order), and the
     * generation tag.
     */

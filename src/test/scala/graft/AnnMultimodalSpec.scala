@@ -126,8 +126,8 @@ class AnnMultimodalSpec extends AnyFunSuite {
     import graft.llm.IvfIndex
     val emb = Tables(spark, dir).embeddings
     // pin bit-identical assignment parity between the mapPartitions
-    // kernel (> KernelCellThreshold cells) and the Catalyst expression
-    // path: same centroids, same nProbe, probe lists must match exactly
+    // kernel and a Catalyst expression replay of the same contract: same
+    // centroids, same nProbe, probe lists must match exactly
     val cents = IvfIndex.trainCentroids(emb, "vec_id", "embedding", k = 24, trainSample = 4096)
     val base = emb
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
@@ -339,7 +339,7 @@ class AnnMultimodalSpec extends AnyFunSuite {
       b1.select(col("vec_id").cast("long")).as[Long].collect().toSet)
 
     // the appended generation's cells match a driver-side replay of the
-    // FROZEN sidecar argmin (distTo arithmetic: ‖c‖² − Σ eᵢ·(2cᵢ) in
+    // FROZEN sidecar argmin (IVF arithmetic: ‖c‖² − Σ eᵢ·(2cᵢ) in
     // index order, strict-< so ties keep the smaller cell)
     val cents = spark.read.parquet(s"$idx/centroids").orderBy("cell")
       .collect().map(_.getSeq[Double](1).toArray)

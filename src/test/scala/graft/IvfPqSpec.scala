@@ -32,7 +32,6 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("kernel residual frame is bit-identical to the expression residual path") {
-    val centroids = graft.llm.IvfIndex.trainCentroids(emb, "vec_id", "embedding", 16, seed = 42)
     // value comparison (the schemas differ only in nullability metadata:
     // kernel output is provably non-null)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Seq[Double])] =
@@ -41,9 +40,20 @@ class IvfPqSpec extends AnyFunSuite {
         .collect()
         .sortBy(_._1)
         .toSeq
-    val kernel = rows(IvfPq.residualKernelFrame(emb, "vec_id", "embedding", centroids))
-    val expr   = rows(IvfPq.residuals(emb, "vec_id", "embedding", centroids))
-    assert(kernel == expr, "kernel residuals diverge from the expression path")
+    // the reference replays the expression argmin and a CASE + zip_with
+    // residual in the spec, at 16 and 24 cells
+    Seq(16, 24).foreach { nCells =>
+      val centroids = graft.llm.IvfIndex.trainCentroids(emb, "vec_id", "embedding", nCells, seed = 42)
+      val cents = centroids.zipWithIndex.map { case (c, i) => graft.llm.KMeans.Centroid(i.toLong, c) }
+      val centroidOf = centroids.zipWithIndex.foldLeft(typedlit(Seq.empty[Double]): org.apache.spark.sql.Column) {
+        case (acc, (c, i)) => when(col("cluster") === i.toLong, typedlit(c.toSeq)).otherwise(acc)
+      }
+      val expr = rows(ExprArgmin.kmeans(emb, "vec_id", "embedding", cents)
+        .select(col("vec_id"), col("cluster").as("cell"),
+          zip_with(col("__emb"), centroidOf, (a, b) => a - b).as("res")))
+      val kernel = rows(IvfPq.residualKernelFrame(emb, "vec_id", "embedding", centroids))
+      assert(kernel == expr, s"kernel residuals diverge from the expression path at $nCells cells")
+    }
   }
 
   test("residual quantization reconstructs better than raw PQ at the same budget") {

@@ -37,21 +37,18 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("kernel assignment is bit-identical to the expression path") {
+    // the reference is the expression fold replayed in the spec; k = 5 and
+    // 20 sit on either side of the size at which assignment once switched
+    // between the two
     val emb = graft.core.Tables(spark, "/root/testdata/sf0.001").embeddings
-    val cents = KMeans.initCentroids(emb, "vec_id", "embedding", k = 5)
-    val expr = KMeans
-      .assignVia(emb, "vec_id", "embedding", cents, useKernel = false)
-      .select("vec_id", "cluster", "dist")
-      .as[(Long, Long, Double)]
-      .collect()
-      .sortBy(_._1)
-    val kern = KMeans
-      .assignVia(emb, "vec_id", "embedding", cents, useKernel = true)
-      .select("vec_id", "cluster", "dist")
-      .as[(Long, Long, Double)]
-      .collect()
-      .sortBy(_._1)
-    assert(expr.sameElements(kern), "kernel and expression assignments diverge")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "cluster", "dist").as[(Long, Long, Double)].collect().sortBy(_._1)
+    Seq(5, 20).foreach { k =>
+      val cents = KMeans.initCentroids(emb, "vec_id", "embedding", k)
+      val expr  = rows(ExprArgmin.kmeans(emb, "vec_id", "embedding", cents))
+      val kern  = rows(KMeans.assign(emb, "vec_id", "embedding", cents))
+      assert(expr.sameElements(kern), s"kernel and expression assignments diverge at k=$k")
+    }
   }
 
   test("fit is deterministic and mixture weights reweight to uniform mass") {

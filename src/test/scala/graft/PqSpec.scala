@@ -66,14 +66,17 @@ class PqSpec extends AnyFunSuite {
   }
 
   test("kernel encode is bit-identical to the expression path") {
-    // k=16 codebooks dispatch to the kernel by default (m*k=64 HOF
-    // expressions blow the 64 KB codegen method limit); force both paths
-    // over the same codebooks and compare exactly
-    val cb = Pq.train(emb, "vec_id", "embedding", dims = 64, m = 4, k = 16, iters = 1)
-    def run(kernel: Boolean) = Pq
-      .encodeVia(emb, "vec_id", "embedding", cb, useKernel = kernel)
-      .as[(Long, Int, Int, Int, Int)].collect().sortBy(_._1)
-    assert(run(true).sameElements(run(false)), "kernel and expression encodes diverge")
+    // the expression fold is replayed in the spec; m·k = 32 and 64 sit on
+    // either side of the size at which encode once switched between the two
+    Seq(8, 16).foreach { k =>
+      val cb = Pq.train(emb, "vec_id", "embedding", dims = 64, m = 4, k = k, iters = 1)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Int, Int, Int, Int)].collect().sortBy(_._1)
+      assert(
+        rows(Pq.encode(emb, "vec_id", "embedding", cb))
+          .sameElements(rows(ExprArgmin.pq(emb, "vec_id", "embedding", cb))),
+        s"kernel and expression encodes diverge at k=$k")
+    }
   }
 
   test("codes are within the codebook range and encode is deterministic") {

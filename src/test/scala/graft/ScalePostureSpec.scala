@@ -469,6 +469,21 @@ class ScalePostureSpec extends AnyFunSuite {
       s"the first job must be the band-bucket probe: $jobs")
   }
 
+  test("a warm IVF index search runs THREE jobs before its frame is drained") {
+    import graft.llm.IvfIndex
+    val emb = Tables(spark, dir).embeddings
+    val ixDir = Files.createTempDirectory("ivf_jobs_search").toString
+    IvfIndex.writeIndexGen(emb, "vec_id", "embedding", ixDir, nCells = 4)
+    val queries = emb.limit(8)
+    IvfIndex.approxTopKIndexed(ixDir, queries, "vec_id", "embedding", k = 3).collect() // warm the reader
+    // the centroid collect (its schema comes from the reader), then the
+    // probed-cell collect: a map stage and its result stage under AQE
+    val jobs = jobStages("ivf-search-jobs") {
+      IvfIndex.approxTopKIndexed(ixDir, queries, "vec_id", "embedding", k = 3)
+    }
+    assert(jobs.size == 3, s"warm approxTopKIndexed ran ${jobs.size} jobs: $jobs")
+  }
+
   test("a warm IVFADC stamp check runs no Spark job") {
     import graft.llm.IvfPq
     val emb = Tables(spark, dir).embeddings

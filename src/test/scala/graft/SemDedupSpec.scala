@@ -135,15 +135,18 @@ class SemDedupSpec extends AnyFunSuite {
     val vecs = (1L to 120L).map { i =>
       (i, (0 until 8).map(j => math.sin(i * 31 + j * 7).toDouble))
     }.toDF("vec_id", "embedding")
-    val seeds = SemDedup.pickSeeds(vecs, "vec_id", "embedding", k = 20)
-    val expr = SemDedup
-      .assignCellsVia(vecs, "vec_id", "embedding", seeds, useKernel = false)
-      .select("vec_id", "cell").orderBy("vec_id").collect().toSeq
-    val kern = SemDedup
-      .assignCellsVia(vecs, "vec_id", "embedding", seeds, useKernel = true)
-      .select("vec_id", "cell").orderBy("vec_id").collect().toSeq
-    assert(expr == kern)
-    assert(expr.map(_.getLong(1)).distinct.size > 1, "multiple cells in use")
+    // (the expression fold is replayed in the spec, at 8 and 20 seeds)
+    Seq(8, 20).foreach { k =>
+      val seeds = SemDedup.pickSeeds(vecs, "vec_id", "embedding", k)
+      val expr = ExprArgmin
+        .semDedup(vecs, "vec_id", "embedding", seeds)
+        .orderBy("vec_id").collect().toSeq
+      val kern = SemDedup
+        .assignCells(vecs, "vec_id", "embedding", seeds)
+        .select("vec_id", "cell").orderBy("vec_id").collect().toSeq
+      assert(expr == kern, s"kernel and expression cells diverge at k=$k")
+      assert(expr.map(_.getLong(1)).distinct.size > 1, "multiple cells in use")
+    }
   }
 
   test("pickSeeds is a pure function of (salt, id): stable ids, sorted-by-hash") {

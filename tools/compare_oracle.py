@@ -7,7 +7,14 @@ oracle SQL from oracle_sql.json in DuckDB over views of the same testdata
 parquet, and compares row counts, schemas, and values (columns sorted by
 name, rows sorted, floats compared exactly after both engines' own
 rounding).
+
+       python3 tools/compare_oracle.py /tmp/verify_out --against /tmp/parent_out
+Compares two graft.Verify dumps row for row instead: every query dumped
+in both directories (rows-only queries included, which have no oracle),
+canonicalized the same way and compared exactly. A query dumped on one
+side only fails.
 """
+import os
 import json
 import sys
 
@@ -79,5 +86,34 @@ def main(out_dir: str, sf_dir: str) -> int:
     return 1 if n_fail else 0
 
 
+def dumped(out_dir: str) -> set:
+    return {d for d in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, d))}
+
+
+def against(out_dir: str, parent_dir: str) -> int:
+    con = duckdb.connect()
+    names = dumped(out_dir) | dumped(parent_dir)
+    n_pass = n_fail = 0
+    for name in sorted(names):
+        try:
+            got = canon(con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df())
+            want = canon(con.sql(f"SELECT * FROM '{parent_dir}/{name}/*.parquet'").df())
+            if list(got.columns) != list(want.columns) or len(got) != len(want):
+                print(f"FAIL {name}: shape {list(got.columns)} x {len(got)} "
+                      f"vs {list(want.columns)} x {len(want)}")
+                n_fail += 1
+                continue
+            pd.testing.assert_frame_equal(got, want, check_exact=True)
+            print(f"SAME {name} ({len(got)} rows)")
+            n_pass += 1
+        except Exception as e:  # noqa: BLE001 — a missing dump or a value diff
+            print(f"FAIL {name}: {str(e)[:400]}")
+            n_fail += 1
+    print(f"\n{n_pass} same / {n_fail} differ of {len(names)}")
+    return 1 if n_fail else 0
+
+
 if __name__ == "__main__":
+    if len(sys.argv) == 4 and sys.argv[2] == "--against":
+        sys.exit(against(sys.argv[1], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
