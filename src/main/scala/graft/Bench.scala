@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main (driver contract): runs every declared query plus
   * BASELINE.md-aligned stage benchmarks on `SPARK_GRAFT_SF_DIR`, prints ONE
@@ -24,7 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `pipeline_e2e` chain — the whole-pipeline number the 2× bound binds on.
   * The JSON also carries `"mins"` (per-case min of the timed rounds) and
   * `"loadavg"` (start/end `/proc/loadavg`) so machine contamination is
-  * distinguishable from a code regression.
+  * distinguishable from a code regression. The `mins` record appended to
+  * `BENCH.out` also carries `"compiles"`: the classes the code generator
+  * compiled during each case's timed rounds, for the cases that compiled
+  * any (they are printed to stderr as well).
   */
 object Bench {
 
@@ -60,23 +63,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = readLoadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // NOTE: spark.sql.adaptive.coalescePartitions.parallelismFirst stays
-      // at its default (true). The tuning-guide "false" posture was A/B'd
-      // in round 4: it coalesces small-SF sorts/aggregates onto too few
-      // cores and cost +5 s total (q28 +1.4 s, q34 +1.3 s); the advisory-
-      // size posture belongs on a real cluster, not a 32-core bench box
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = graft.core.GraftSession.local(cpus)
 
     import org.apache.spark.sql.functions._
     import graft.core.{GraftFrame, Tables}
@@ -161,7 +149,13 @@ object Bench {
     // medians 10.32 → 7.68 s total under the same noop force (the old
     // medians were carrying cross-case cache pollution, not query cost),
     // NO per-case min worse (sum of mins also dropped).
+    // classes the code generator compiled during a case's timed rounds: a
+    // warm case that still compiles pays for it in every round (a per-batch
+    // literal inlined into generated code, or an evicting class cache)
+    val compiles = scala.collection.mutable.SortedMap.empty[String, Long]
+    def compiled(): Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     for ((name, run) <- cases; _ <- 1 to rounds) {
+      val c0 = compiled()
       val t0 = System.nanoTime()
       // a failed round contributes NO timing (time-to-failure would read as
       // misleadingly fast); the case is flagged in the JSON "errors" list
@@ -175,7 +169,11 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         timings.updateWith(name)(prev => Some(sec :: prev.getOrElse(Nil)))
       }
+      val n = compiled() - c0
+      if (n > 0) compiles(name) = compiles.getOrElse(name, 0L) + n
     }
+    for ((name, n) <- compiles)
+      System.err.println(s"[bench] $name: $n classes compiled in $rounds timed rounds")
     def median(xs: List[Double]): Double = xs.sorted.apply(xs.size / 2)
     def r4(d: Double): String            = "%.4f".formatLocal(java.util.Locale.ROOT, d)
 
@@ -227,8 +225,9 @@ object Bench {
     val mode = """"force":"drain","order":"case""""
     val json =
       s"""{"record":"total","metric":"total","value":${r4(total)},"unit":"sec",$mode,"queries":$qs,"mins":$mins,"gate":$gate,"errors":$errs,"loadavg":$load,"sf":"$sfDir"}"""
+    val compilesJson = compiles.map { case (n, c) => "\"" + n + "\":" + c }.mkString("{", ",", "}")
     val minsLine =
-      s"""{"record":"mins","unit":"sec",$mode,"queries":$mins,"gate":$gate,"errors":$errs,"loadavg":$load,"sf":"$sfDir"}"""
+      s"""{"record":"mins","unit":"sec",$mode,"queries":$mins,"compiles":$compilesJson,"gate":$gate,"errors":$errs,"loadavg":$load,"sf":"$sfDir"}"""
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH.out")
     // Query names on the PREVIOUSLY PARSED surface, read BEFORE this run
     // appends its own records (r17, VERDICT r16 #3): the driver's stdout

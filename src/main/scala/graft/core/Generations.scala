@@ -43,6 +43,12 @@ object Generations {
     * at the top level). `append = false` is a bootstrap (static
     * overwrite: every generation replaced), `append = true` an ingest
     * append (dynamic overwrite: generation `gen` only).
+    *
+    * The partition value is a string literal: codegen passes a string
+    * literal to generated code by reference but inlines a long one into
+    * the source, which would compile the writers again for every new
+    * generation. The directory name (`src_batch=7`) and the type a read
+    * infers from it are the same either way.
     */
   def write(
       rows: DataFrame,
@@ -51,7 +57,7 @@ object Generations {
       partitionBy: Seq[String],
       append: Boolean): Unit =
     rows
-      .withColumn(Col, lit(gen))
+      .withColumn(Col, lit(gen.toString))
       .write
       .partitionBy(partitionBy: _*)
       .option("partitionOverwriteMode", if (append) "dynamic" else "static")

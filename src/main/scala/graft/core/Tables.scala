@@ -127,8 +127,28 @@ object Tables {
     }
 }
 
-/** One place to build a correctly-configured session for CLIs/tests. */
+/** The one session builder of every entry point: the CLIs, the bench,
+  * the correctness dump and the test suite.
+  */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache (Spark's default is 100).
+    * A warm `index_ingest` op of the perfbench workload (banded near-dup
+    * ingest, survivor write, postings append) cycles through about 144
+    * distinct generated classes and its set-up through about 72 more, so
+    * at 100 the LRU evicted every class before its next use: 135 of a warm
+    * op's 144 compiles were byte-identical to the previous op's sources
+    * (4 cores, CodeGenerator log). At 1000 a warm op compiles none. The
+    * conf is static and read once per JVM, when the code generator first
+    * initialises, so it has to be set on the first session a process
+    * builds.
+    */
+  private val CodegenCacheEntries = 1000
+
+  // spark.sql.adaptive.coalescePartitions.parallelismFirst stays at its
+  // default (true): "false" coalesces small-scale-factor sorts and
+  // aggregates onto too few cores (+5 s over the bench, q28 and q34
+  // +1.3 s each on 32 cores)
   def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = SparkSession
       .builder()
@@ -136,6 +156,7 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

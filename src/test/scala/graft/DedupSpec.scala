@@ -459,6 +459,13 @@ class DedupSpec extends AnyFunSuite {
     def bands(d: String) = spark.read.parquet(s"$d/bands")
       .collect().map(_.toString).toSeq.sorted
     assert(bands(dirA) == bands(dirB), "appended index content must be row-identical")
+    // the generation's on-disk form: one directory per generation, read
+    // back as an integer partition column
+    val genDirs = new java.io.File(s"$dirB/bands").listFiles().filter(_.isDirectory).map(_.getName)
+    assert(genDirs.sorted.toSeq == Seq("src_batch=-1", "src_batch=0"), genDirs.mkString(", "))
+    assert(spark.read.parquet(s"$dirB/bands").schema("src_batch").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(graft.core.Generations.maxGen(spark, s"$dirB/bands") == 0L)
     def ingest1(d: String) = Dedup
       .incrementalNearDupNewBanded(b1, "doc_id", "text", d, simTau = 0.5, beforeBatch = Some(1L))
       .select("doc_id", "digest").as[(Long, String)].collect().toSeq.sorted

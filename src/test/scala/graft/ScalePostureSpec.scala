@@ -469,6 +469,39 @@ class ScalePostureSpec extends AnyFunSuite {
       s"the first job must be the band-bucket probe: $jobs")
   }
 
+  test("a warm ingest step compiles no code") {
+    import graft.llm.{Bm25, Dedup}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val root = Files.createTempDirectory("ingest_compiles").toString
+    val (ix, post) = (s"$root/neardup", s"$root/postings")
+    val docs = postingsDocs.toDF("doc_id", "text")
+    Dedup.writeBandedNearDupIndex(docs, "doc_id", "text", ix, bands = 4, rowsPerBand = 2, nBuckets = 4)
+    Bm25.writePostingsGen(docs, "doc_id", "text", post, nBuckets = 8)
+    // batches are parquet files, as an ingest source hands them over
+    def batchDir(g: Long) = s"$root/batches/batch=$g"
+    for (g <- 0L to 2L)
+      Seq((10L + g, s"the quick brown fox jumps over the lazy dog $g"),
+        (20L + g, s"entirely new words arrive in batch $g")).toDF("doc_id", "text")
+        .write.parquet(batchDir(g))
+    // one generation: the banded ingest with its survivors written inside
+    // `use`, then the postings append of those survivors
+    def step(g: Long): Unit = {
+      val batch = spark.read.parquet(batchDir(g))
+      val surv  = s"$root/survivors/batch_id=$g"
+      Dedup.ingestAppendBanded(batch, "doc_id", "text", ix, batchId = g) { s =>
+        s.select("doc_id").join(batch, Seq("doc_id"), "left").write.mode("overwrite").parquet(surv)
+      }
+      Bm25.appendToPostings(post, spark.read.parquet(surv), "doc_id", "text", srcBatch = g + 1L)
+    }
+    step(0L)
+    step(1L)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    step(2L)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"a warm ingest step compiled $compiled classes")
+  }
+
   test("a warm IVF index search runs THREE jobs before its frame is drained") {
     import graft.llm.IvfIndex
     val emb = Tables(spark, dir).embeddings

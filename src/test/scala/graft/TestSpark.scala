@@ -6,14 +6,7 @@ import org.scalatest.Assertions._
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
